@@ -500,20 +500,43 @@ def test_forward_index_probe_prunes_on_doc_id(spark, tmp_path):
 
 
 def test_serving_extras_keep_the_bm25_plan_shape(spark, stored_index):
-    """msm_search / synonym_search add zero shuffles over score_bm25:
-    same broadcast dictionary-seek, same pushed In(term) predicate."""
-    from search_engine_spark.operators.query import msm_search, synonym_search
+    """Every BM25 serving variant adds zero shuffles over score_bm25:
+    same broadcast dictionary-seek, same pushed In(term) predicate.
+    ltr_features also joins the doc-sized doc_stats, so only its
+    pushed term filter is asserted."""
+    from search_engine_spark.operators.ltr import ltr_features
+    from search_engine_spark.operators.query import (
+        champion_search,
+        msm_search,
+        search_after,
+        sharded_search,
+        synonym_search,
+        tombstone_search,
+        wildcard_search,
+    )
 
     _, idx = stored_index
     q = {0: "hippopotamus ladder"}
+    terms = ["hippopotamus", "ladder"]
+    qt = queries_to_terms(spark, q)
+    deleted = idx.doc_stats.select("doc_id").limit(3)
     for df in (
         msm_search(idx, spark, q, k=10, min_should_match=2),
         synonym_search(idx, spark, q, {"ladder": ["hippopotamus"]}, k=10),
+        score_bm25(idx, qt, k=10, terms=terms, mode="and"),
+        tombstone_search(idx, deleted, terms, k=10),
+        search_after(idx, terms, k=10, after=(1.0, 0)),
+        sharded_search(idx, terms, n_shards=4, k=10),
+        champion_search(idx, spark, q, m=8, k=10),
+        # a multi-term expansion: a one-literal isin compiles to EqualTo
+        wildcard_search(idx, spark, "la*", k=10),
     ):
         plan = _plan(df)
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan, plan[:3000]
         assert "In(term" in plan, plan[:2000]
+    plan = _plan(ltr_features(idx, qt, terms=terms))
+    assert "In(term" in plan, plan[:2000]
 
 
 def test_decay_search_pushes_term_filter(spark, stored_index):
