@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
-from search_engine_spark.operators.query import score_bm25
+from search_engine_spark.operators.query import _query_terms, score_bm25
 
 __all__ = ["parse_boolean", "boolean_search"]
 
@@ -189,11 +189,8 @@ def boolean_search(
         raise ValueError(node.op)
 
     survivors = ev(tree)
-    terms = _positive_terms(tree)
+    qt, terms = _query_terms(spark, _positive_terms(tree), tokenized=True)
     if terms:
-        qt = spark.createDataFrame(
-            [(0, t) for t in terms], "query_id int, term string"
-        )
         scored = score_bm25(index, qt, k=2_147_483_647, terms=terms).select(
             "doc_id", "score"
         )

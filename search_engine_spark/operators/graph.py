@@ -41,7 +41,7 @@ functions/crawl.extract_links over crawled HTML).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.text_analytics import ws_tokens
@@ -409,12 +409,9 @@ def fused_bm25_pagerank(
     the (long, double) ranks relation before the top-k window. Same
     tie-break contract as the reference path (score DESC, doc_id ASC).
     """
-    from search_engine_spark.operators.query import _matched
+    from search_engine_spark.operators.query import _bm25, _matched, _rank_cut
 
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("bm25_idf") * F.col("tf_norm")).alias("bm")
-    )
+    scored = _bm25(_matched(index, query_terms, terms), score="bm")
     # LEFT join: a matched doc missing from the ranks relation (pruned
     # rank table, partial link graph) scores at bare BM25 (pr→0) — the
     # "never zeroes a match" contract
@@ -429,11 +426,6 @@ def fused_bm25_pagerank(
     fused = scored.join(ranks, "doc_id", "left").select(
         "query_id", "doc_id", score.alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        fused.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+    return _rank_cut(
+        fused, k, ["query_id"], F.col("score").desc(), F.col("doc_id").asc()
     )

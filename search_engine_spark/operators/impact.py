@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
+from search_engine_spark.operators.query import _query_terms
 
 __all__ = ["QuantizedIndex", "quantize_impacts", "quantized_search"]
 
@@ -142,10 +143,7 @@ def quantized_search(
     score = n·lo + Σq·step = Σq·step, so the integer order IS the
     dequantized-score order, not merely an approximation of it).
     """
-    terms = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in terms], "query_id int, term string"
-    )
+    qt, terms = _query_terms(spark, query_terms, tokenized=True)
     m = qindex.postings.filter(F.col("term").isin(terms)).join(
         F.broadcast(qt), "term"
     )

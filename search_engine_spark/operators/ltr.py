@@ -37,7 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
-from search_engine_spark.operators.query import _matched, topk
+from search_engine_spark.operators.query import (
+    _bm25,
+    _bm25_agg,
+    _matched,
+    _rank_cut,
+    topk,
+)
 
 __all__ = ["FEATURES", "ltr_features", "ltr_train", "ltr_rerank"]
 
@@ -55,11 +61,12 @@ def ltr_features(
     n_q = query_terms.groupBy("query_id").agg(
         F.count_distinct("term").alias("n_q")
     )
-    per = m.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum(F.col("bm25_idf") * F.col("tf_norm")), 6).alias("f_bm25"),
-        F.count(F.lit(1)).alias("n_matched"),
+    per = _bm25_agg(
+        m,
         F.sum("tf").cast("double").alias("f_tf"),
         F.round(F.max("bm25_idf"), 6).alias("f_idf"),
+        round_dp=6,
+        score="f_bm25",
     )
     return (
         per.join(F.broadcast(n_q), "query_id")
@@ -180,10 +187,7 @@ def hard_negatives(
     """
     from pyspark.sql import Window
 
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum(F.col("bm25_idf") * F.col("tf_norm")), 6).alias("score")
-    )
+    scored = _bm25(_matched(index, query_terms, terms), 6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -195,10 +199,4 @@ def hard_negatives(
         ["query_id", "doc_id"],
         "left_anti",
     )
-    w2 = Window.partitionBy("query_id").orderBy("rank")
-    return (
-        neg.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= n_neg)
-        .drop("rn")
-        .orderBy("query_id", "rank")
-    )
+    return _rank_cut(neg, n_neg, ["query_id"], "rank").orderBy("query_id", "rank")

@@ -335,7 +335,7 @@ def proximity_bm25(
     standard broadcast-join BM25 aggregate before the top-k window —
     the postings relation itself is never shuffled or re-scanned.
     """
-    from search_engine_spark.operators.query import _matched, topk
+    from search_engine_spark.operators.query import _bm25, _matched, topk
 
     if pos_index is not None:
         # serving path: isin-pruned scan of the materialized positional
@@ -376,10 +376,8 @@ def proximity_bm25(
         .groupBy("query_id", "doc_id")
         .agg(F.sum(F.lit(1.0) / (F.lit(1.0) + F.col("d"))).alias("prox"))
     )
-    m = _matched(index, query_terms, terms)
     scored = (
-        m.groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("bm25_idf") * F.col("tf_norm")).alias("bm"))
+        _bm25(_matched(index, query_terms, terms), score="bm")
         .join(prox, ["query_id", "doc_id"], "left")
         .select(
             "query_id",

@@ -6,11 +6,26 @@ join pages (J2), per-page `SUM(tf_idf::real) * COUNT(term)` (A6), sort
 DESC limit 10 (W1). OR semantics (quirk Q9), f32 scores (Q5), tie-break
 (score DESC, doc_id ASC) defined by us (Q7).
 
-Spark plan shape (multi-query batch):
-  postings ⋈ BROADCAST(query_terms)        -- semi-restrict, no shuffle
-           ⋈ BROADCAST(term_stats∩qterms)  -- tiny dim
-  → groupBy(query_id, doc_id) hash agg     -- the one shuffle
-  → per-query top-k window (rank pushdown via WindowGroupLimit)
+Every BM25 serving function here (and in ltr/rerank/graph/phrase) is
+one skeleton on three private builders, so they share one plan:
+
+  _query_terms: queries tokenized ONCE on the driver → (query_id, term)
+      table + the literal term list. No indexable term (an empty list,
+      or only stop words) → the caller returns an empty frame of its
+      schema without building a postings join.
+  _matched: postings ⋈ BROADCAST(query_terms)       -- no shuffle
+                     ⋈ BROADCAST(term_stats∩qterms) -- tiny dim
+      with `term IN (...)` pushed into both parquet scans.
+  _bm25: groupBy(query_id, doc_id) hash agg of Σ bm25_idf·tf_norm
+      (× a `weight` column when the term table has one), optionally
+      rounded BEFORE any cut so sub-epsilon twins replay identically,
+      plus an optional matched-term threshold (m-of-n, AND) applied
+      after the agg — the one shuffle.
+  → topk: per-query rank window (pushed down as WindowGroupLimit).
+
+Feature-specific steps (tombstone anti-join, keyset cursor, shard
+window, decay multiply, …) sit between the aggregate and the cut on
+matched-doc-sized relations and add no shuffle of postings.
 
 Float determinism contract (shared with oracle/oracle.py): per-term
 score is computed in f64 (compat: per-term value rounded to f32 first),
@@ -21,31 +36,54 @@ so partition order cannot flip ranks; remaining ties are killed by Q7.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from search_engine_spark.functions.textproc import tokenize_query
 from search_engine_spark.operators.index_build import InvertedIndex
 
+#: schema of every (query_id, doc_id, score) hit list, empty ones too
+_HITS = "query_id int, doc_id long, score double"
+
+
+def _tokenized(queries: dict[int, str] | list[str]) -> dict[int, list[str]]:
+    """query_id → the query's distinct terms, first-seen order (a list
+    of queries is numbered 0..n-1). Duplicates drop: the reference's
+    `term = ANY(array)` matches a term once per distinct term
+    (app/main.py:67)."""
+    if isinstance(queries, list):
+        queries = dict(enumerate(queries))
+    return {
+        qid: list(dict.fromkeys(tokenize_query(q))) for qid, q in queries.items()
+    }
+
+
+def _query_terms(
+    spark: SparkSession,
+    queries: dict[int, str] | list[str],
+    tokenized: bool = False,
+) -> tuple[DataFrame, list[str]]:
+    """(query_id, term) table + the distinct literal terms for the
+    pushed isin. `queries` are query strings, tokenized here; with
+    `tokenized=True` they are ONE query's terms, served as query 0.
+    A batch's term list is sorted, a single query's keeps its order.
+    An empty term list means there is nothing to match."""
+    toks = {0: list(dict.fromkeys(queries))} if tokenized else _tokenized(queries)
+    rows = [(qid, t) for qid, ts in toks.items() for t in ts]
+    terms = list(dict.fromkeys(t for _, t in rows))
+    if not tokenized:
+        terms.sort()
+    return spark.createDataFrame(rows, "query_id int, term string"), terms
+
 
 def queries_to_terms(
     spark: SparkSession, queries: dict[int, str] | list[str]
 ) -> DataFrame:
-    """Tokenize queries driver-side (they are tiny) → (query_id, term).
-
-    Duplicate terms within one query are dropped: the reference's
-    `term = ANY(array)` + per-term rows means a term matched once per
-    distinct term (app/main.py:67).
-    """
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    rows = []
-    for qid, q in queries.items():
-        for t in dict.fromkeys(tokenize_query(q)):  # order-preserving dedup
-            rows.append((qid, t))
-    if not rows:
-        return spark.createDataFrame([], "query_id int, term string")
-    return spark.createDataFrame(rows, "query_id int, term string")
+    """Tokenize queries driver-side (they are tiny) → (query_id, term),
+    duplicate terms within one query dropped."""
+    return _query_terms(spark, queries)[0]
 
 
 def _matched(
@@ -75,22 +113,66 @@ def _matched(
     return postings.join(qt, "term").join(F.broadcast(ts_q), "term")
 
 
-def topk(scored: DataFrame, k: int = 10) -> DataFrame:
-    """Per-query top-k, tie-break (score DESC, doc_id ASC) — quirk Q7.
-
-    rank-limit window: Spark's WindowGroupLimit pushes the k-filter into
-    a per-partition group-limit before the final sort, i.e. the
-    distributed top-k heap merge of TakeOrderedAndProject generalized
-    per query_id.
-    """
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
+def _bm25_agg(
+    m: DataFrame, *extra, round_dp: int | None = None, score: str = "score"
+) -> DataFrame:
+    """(query_id, doc_id, <score>, n_matched, *extra) over matched rows:
+    score = Σ [weight·] bm25_idf·tf_norm (weighted when `m` carries a
+    `weight` column), rounded `round_dp` when given; n_matched counts
+    the doc's matched query terms."""
+    w = F.col("bm25_idf")
+    if "weight" in m.columns:
+        w = F.col("weight") * w
+    s = F.sum(w * F.col("tf_norm"))
+    if round_dp is not None:
+        s = F.round(s, round_dp)
+    return m.groupBy("query_id", "doc_id").agg(
+        s.alias(score), F.count(F.lit(1)).alias("n_matched"), *extra
     )
+
+
+def _bm25(
+    m: DataFrame,
+    round_dp: int | None = None,
+    score: str = "score",
+    min_match: int | DataFrame | None = None,
+) -> DataFrame:
+    """(query_id, doc_id, <score>): `_bm25_agg` with an optional
+    matched-term threshold — an int keeps docs matching ≥ that many of
+    their query's terms; a (query_id, n_required) table keeps docs
+    matching all n_required (AND), joined broadcast after the agg."""
+    scored = _bm25_agg(m, round_dp=round_dp, score=score)
+    if isinstance(min_match, int):
+        scored = scored.filter(F.col("n_matched") >= min_match)
+    elif min_match is not None:
+        scored = (
+            scored.join(F.broadcast(min_match), "query_id")
+            .filter(F.col("n_matched") == F.col("n_required"))
+            .drop("n_required")
+        )
+    return scored.drop("n_matched")
+
+
+def _rank_cut(df: DataFrame, n: int, keys: list[str], *order) -> DataFrame:
+    """The first n rows under `order` within each `keys` group (one
+    global group when `keys` is empty). The row_number ≤ n filter
+    compiles to WindowGroupLimit: each partition keeps its n candidates
+    per group before the exchange and the final per-group sort."""
+    w = Window.partitionBy(*keys).orderBy(*order)
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
         .drop("rn")
-        .orderBy("query_id", F.col("score").desc(), F.col("doc_id").asc())
+    )
+
+
+def topk(scored: DataFrame, k: int = 10) -> DataFrame:
+    """Per-query top-k, tie-break (score DESC, doc_id ASC) — quirk Q7:
+    the distributed top-k heap merge of TakeOrderedAndProject
+    generalized per query_id."""
+    by_score = (F.col("score").desc(), F.col("doc_id").asc())
+    return _rank_cut(scored, k, ["query_id"], *by_score).orderBy(
+        "query_id", *by_score
     )
 
 
@@ -123,19 +205,12 @@ def score_bm25(
     their query (posting-list intersection as a post-agg filter against
     each query's term count — no extra shuffle; reference is OR-only,
     SURVEY §2.6/Q9)."""
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("bm25_idf") * F.col("tf_norm")).alias("score"),
-        F.count(F.lit(1)).alias("n_matched"),
-    )
+    need = None
     if mode == "and":
         need = query_terms.groupBy("query_id").agg(
             F.count(F.lit(1)).alias("n_required")
         )
-        scored = scored.join(F.broadcast(need), "query_id").filter(
-            F.col("n_matched") == F.col("n_required")
-        ).drop("n_required")
-    return topk(scored.drop("n_matched"), k)
+    return topk(_bm25(_matched(index, query_terms, terms), min_match=need), k)
 
 
 def search(
@@ -146,26 +221,19 @@ def search(
     scorer: str = "bm25",
 ) -> DataFrame:
     """End-to-end multi-query search → (query_id, doc_id, score) top-k rows."""
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    # terms are already known driver-side — no collect job needed
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    qt = queries_to_terms(spark, queries)
+    score = {
+        "bm25": score_bm25,
+        "tfidf_compat": score_tfidf_compat,
+        "lm_dirichlet": score_lm_dirichlet,
+        "jm": score_jelinek_mercer,
+        "absolute_discount": score_absolute_discount,
+    }.get(scorer)
+    if score is None:
+        raise ValueError(scorer)
+    qt, terms = _query_terms(spark, queries)
     if not terms:
-        return qt.sparkSession.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
-    if scorer == "bm25":
-        return score_bm25(index, qt, k, terms=terms)
-    if scorer == "tfidf_compat":
-        return score_tfidf_compat(index, qt, k, terms=terms)
-    if scorer == "lm_dirichlet":
-        return score_lm_dirichlet(index, qt, k=k, terms=terms)
-    if scorer == "jm":
-        return score_jelinek_mercer(index, qt, k=k, terms=terms)
-    if scorer == "absolute_discount":
-        return score_absolute_discount(index, qt, k=k, terms=terms)
-    raise ValueError(scorer)
+        return spark.createDataFrame([], _HITS)
+    return score(index, qt, k=k, terms=terms)
 
 
 def search_and_present(
@@ -287,12 +355,9 @@ def fuzzy_expand(
         .withColumn("dist", F.levenshtein("q", "term"))
         .filter(F.col("dist") <= max_dist)
     )
-    w = Window.partitionBy("q").orderBy(
-        F.col("dist").asc(), F.col("df").desc(), F.col("term").asc()
-    )
+    order = (F.col("dist").asc(), F.col("df").desc(), F.col("term").asc())
     return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_expansions)
+        _rank_cut(cand, max_expansions, ["q"], *order)
         .select(
             "q",
             "term",
@@ -340,9 +405,7 @@ def fuzzy_search(
         max_expansions=max_expansions,
     ).collect()  # ≤ |q|·max_expansions scalars — the expansion barrier
     if not exp:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
+        return spark.createDataFrame([], _HITS)
     terms = sorted({r["term"] for r in exp})
     edf = F.broadcast(
         spark.createDataFrame(
@@ -406,21 +469,24 @@ def autocomplete(
         .select("term", "df", F.lit(1).alias("path"), "dist")
     )
     cand = pref.unionByName(fuzz)
-    w = Window.orderBy(
-        F.col("path").asc(),
-        F.col("dist").asc(),
-        F.col("df").desc(),
+    order = (
+        F.col("path").asc(), F.col("dist").asc(), F.col("df").desc(),
         F.col("term").asc(),
     )
     return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n)
+        _rank_cut(cand, n, [], *order)
         .select(
             F.col("term").alias("suggestion"),
             F.col("df").cast("long").alias("df"),
             F.when(F.col("path") == 0, "prefix").otherwise("fuzzy").alias("src"),
         )
     )
+
+
+_EXPLAIN = (
+    "doc_id long, term string, tf long, df long, idf double, tf_norm double,"
+    " contribution double"
+)
 
 
 def explain_score(
@@ -442,11 +508,10 @@ def explain_score(
     scan) further restricted by the doc_id isin — a few rows survive;
     no aggregation at all, pure per-row column math."""
     spark = index.postings.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset).filter(
+    qt, terms = _query_terms(spark, query_terms, tokenized=True)
+    if not terms:
+        return spark.createDataFrame([], _EXPLAIN)
+    m = _matched(index, qt, terms).filter(
         F.col("doc_id").isin([int(d) for d in doc_ids])
     )
     return m.select(
@@ -485,17 +550,10 @@ def tombstone_search(
     exclusion, so a page stays full while any matches remain.
     """
     spark = index.postings.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    alive = scored.join(
+    qt, terms = _query_terms(spark, query_terms, tokenized=True)
+    if not terms:
+        return spark.createDataFrame([], _HITS)
+    alive = _bm25(_matched(index, qt, terms), round_dp).join(
         F.broadcast(deleted_ids.select("doc_id")), "doc_id", "left_anti"
     )
     return topk(alive, k)
@@ -526,25 +584,17 @@ def sharded_search(
     expressing topology as a plan property instead of RPC code.
     """
     spark = index.postings.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
+    qt, terms = _query_terms(spark, query_terms, tokenized=True)
+    if not terms:
+        return spark.createDataFrame([], _HITS)
+    scored = _bm25(_matched(index, qt, terms), round_dp).withColumn(
+        "shard", F.pmod(F.col("doc_id"), F.lit(n_shards))
     )
-    m = _matched(index, qt, terms=qset)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    ).withColumn("shard", F.pmod(F.col("doc_id"), F.lit(n_shards)))
-    w_local = Window.partitionBy("query_id", "shard").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
+    local_topk = _rank_cut(
+        scored, k, ["query_id", "shard"], F.col("score").desc(),
+        F.col("doc_id").asc(),
     )
-    local_topk = (
-        scored.withColumn("rn", F.row_number().over(w_local))
-        .filter(F.col("rn") <= k)
-        .drop("rn", "shard")
-    )
-    return topk(local_topk, k)
+    return topk(local_topk.drop("shard"), k)
 
 
 def next_word_suggest(
@@ -570,18 +620,17 @@ def next_word_suggest(
     from search_engine_spark.operators.text_analytics import ws_tokens
 
     tok = tokenizer or ws_tokens
-    p = prev.replace("'", "\\'")
+    t = F.col("t")
     toks = documents.select(tok(F.col("text")).alias("t")).filter(
         F.size("t") >= 2
     )
+    # `prev` enters as a literal value, never as SQL text: no escaping
+    follows = F.transform(
+        F.sequence(F.lit(0), F.size(t) - 2),
+        lambda i: F.when(t[i] == F.lit(prev), t[i + 1]),
+    )
     nxt = toks.select(
-        F.explode(
-            F.expr(
-                f"filter(transform(sequence(0, size(t)-2),"
-                f" i -> CASE WHEN t[i] = '{p}' THEN t[i+1] END),"
-                f" x -> x IS NOT NULL)"
-            )
-        ).alias("suggestion")
+        F.explode(F.filter(follows, lambda x: x.isNotNull())).alias("suggestion")
     )
     if prefix:
         nxt = nxt.filter(F.col("suggestion").startswith(prefix))
@@ -616,19 +665,12 @@ def corrected_search(
         r["term"]: r["suggestion"]
         for r in did_you_mean(index, query_terms, max_dist=max_dist).collect()
     }
-    fixed = list(
-        dict.fromkeys(sugg.get(t, t) for t in query_terms)
+    qt, terms = _query_terms(
+        spark, [sugg.get(t, t) for t in query_terms], tokenized=True
     )
-    qt = spark.createDataFrame(
-        [(0, t) for t in fixed], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=fixed)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    return topk(scored, k)
+    if not terms:
+        return spark.createDataFrame([], _HITS)
+    return topk(_bm25(_matched(index, qt, terms), round_dp), k)
 
 
 def score_lm_dirichlet(
@@ -661,6 +703,32 @@ def score_lm_dirichlet(
     return topk(_lm_dirichlet_scored(index, query_terms, mu, terms), k)
 
 
+def _lm_matched(
+    index: InvertedIndex, query_terms: DataFrame, terms: list[str] | None
+) -> DataFrame:
+    """`_matched` rows with p(t|C) = cf_t / |C| attached (broadcast).
+    p(t|C) is a CORPUS constant — computed from the (isin-pruned)
+    postings themselves, NOT from the matched rows: those hold one row
+    per (query, posting), so a term shared by several batch queries
+    would double its collection frequency there. |C| sums doc_stats.dl."""
+    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
+    cf_src = index.postings
+    if terms:
+        cf_src = cf_src.filter(F.col("term").isin(terms))
+    p_c = (
+        cf_src.join(
+            F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
+        )
+        .select("term", "tf")
+        .groupBy("term")
+        .agg(F.sum("tf").alias("cf"))
+        .withColumn("p_c", F.col("cf").cast("double") / F.lit(float(total_tokens)))
+    )
+    return _matched(index, query_terms, terms).join(
+        F.broadcast(p_c.select("term", "p_c")), "term"
+    )
+
+
 def _lm_dirichlet_scored(
     index: InvertedIndex,
     query_terms: DataFrame,
@@ -669,28 +737,9 @@ def _lm_dirichlet_scored(
 ) -> DataFrame:
     """Uncut LM-Dirichlet scores (see score_lm_dirichlet) — shared by
     the top-k path and the rescore window."""
-    spark = index.postings.sparkSession
-    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
-    m = _matched(index, query_terms, terms)
-    # p(t|C) is a CORPUS constant — compute it from the (isin-pruned)
-    # postings themselves, NOT from m: _matched has one row per
-    # (query, posting), so a term shared by multiple batch queries
-    # would double its collection frequency there
-    cf_src = index.postings
-    if terms:
-        cf_src = cf_src.filter(F.col("term").isin(terms))
-    cf_src = cf_src.join(
-        F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
-    )
-    cf = (
-        cf_src.select("term", "tf")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cf"))
-        .withColumn("p_c", F.col("cf").cast("double") / F.lit(float(total_tokens)))
-    )
     nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
     matched_part = (
-        m.join(F.broadcast(cf.select("term", "p_c")), "term")
+        _lm_matched(index, query_terms, terms)
         .groupBy("query_id", "doc_id")
         .agg(
             F.sum(
@@ -740,24 +789,8 @@ def score_jelinek_mercer(
     collection probabilities from the isin-pruned postings. Rounded
     9dp for oracle comparison; ties Q7.
     """
-    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
-    m = _matched(index, query_terms, terms)
-    cf_src = index.postings
-    if terms:
-        cf_src = cf_src.filter(F.col("term").isin(terms))
-    cf_src = cf_src.join(
-        F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
-    )
-    cf = (
-        cf_src.select("term", "tf")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cf"))
-        .withColumn(
-            "p_c", F.col("cf").cast("double") / F.lit(float(total_tokens))
-        )
-    )
     scored = (
-        m.join(F.broadcast(cf.select("term", "p_c")), "term")
+        _lm_matched(index, query_terms, terms)
         .join(index.doc_stats, "doc_id")
         .groupBy("query_id", "doc_id")
         .agg(
@@ -801,22 +834,6 @@ def score_absolute_discount(
     at build time it would live in doc_stats). Same probe plan as the
     other two LM scorers; rounded 9dp; ties Q7.
     """
-    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
-    m = _matched(index, query_terms, terms)
-    cf_src = index.postings
-    if terms:
-        cf_src = cf_src.filter(F.col("term").isin(terms))
-    cf_src = cf_src.join(
-        F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
-    )
-    cf = (
-        cf_src.select("term", "tf")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cf"))
-        .withColumn(
-            "p_c", F.col("cf").cast("double") / F.lit(float(total_tokens))
-        )
-    )
     # |d|_u: distinct terms per doc — real postings only (tf > 0)
     du = (
         index.postings.filter(F.col("tf") > 0)
@@ -825,7 +842,7 @@ def score_absolute_discount(
     )
     nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
     matched_part = (
-        m.join(F.broadcast(cf.select("term", "p_c")), "term")
+        _lm_matched(index, query_terms, terms)
         .join(du, "doc_id")
         .groupBy("query_id", "doc_id")
         .agg(
@@ -1015,12 +1032,7 @@ def top_hits_by_facet(
     and it is cut to n·|buckets| rows partition-locally. Scores are
     rounded BEFORE the cut so tie-breaks are reproducible across plans.
     """
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
+    scored = _bm25(_matched(index, query_terms, terms), round_dp)
     dim = dims.select("doc_id", F.col(facet).alias("facet"))
     w = Window.partitionBy("query_id", "facet").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
@@ -1084,12 +1096,7 @@ def significant_terms(
     relation is never shuffled on doc_id). Scores are rounded before
     the per-query top-terms cut; ties break on term ASC.
     """
-    m = _matched(index, query_terms, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
+    scored = _bm25(_matched(index, query_terms, terms), round_dp)
     hits = topk(scored, k_hits).select("query_id", "doc_id")
     fg_size = hits.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("fg_size")
@@ -1118,15 +1125,10 @@ def significant_terms(
             F.round(jlh, round_dp).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
-    return (
-        ranked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_terms)
-        .drop("rn")
-        .orderBy("query_id", F.col("score").desc(), "term")
-    )
+    return _rank_cut(
+        ranked, top_terms, ["query_id"], F.col("score").desc(),
+        F.col("term").asc(),
+    ).orderBy("query_id", F.col("score").desc(), "term")
 
 
 def rescore_topk(
@@ -1154,27 +1156,12 @@ def rescore_topk(
     """
     if k > window:
         raise ValueError(f"k ({k}) must be <= window ({window})")
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    qt = queries_to_terms(spark, queries)
+    qt, terms = _query_terms(spark, queries)
     if not terms:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
-    m = _matched(index, qt, terms)
-    base = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("base")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("base").desc(), F.col("doc_id").asc()
-    )
-    win = (
-        base.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= window)
-        .drop("rn")
+        return spark.createDataFrame([], _HITS)
+    base = _bm25(_matched(index, qt, terms), round_dp, score="base")
+    win = _rank_cut(
+        base, window, ["query_id"], F.col("base").desc(), F.col("doc_id").asc()
     )
     lm = _lm_dirichlet_scored(index, qt, mu=mu, terms=terms).withColumnRenamed(
         "score", "lm"
@@ -1314,16 +1301,14 @@ def wildcard_search(
     scoring pass. An empty expansion short-circuits to an empty result
     without touching postings.
     """
-    terms = [r["term"] for r in wildcard_terms(
+    expansion = wildcard_terms(
         index, pattern, kgram=kgram, max_expansions=max_expansions
-    ).collect()]
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double"
-        )
-    qt = spark.createDataFrame(
-        [(0, t) for t in terms], "query_id int, term string"
+    ).collect()
+    qt, terms = _query_terms(
+        spark, [r["term"] for r in expansion], tokenized=True
     )
+    if not terms:
+        return spark.createDataFrame([], _HITS)
     return score_bm25(index, qt, k=k, terms=terms)
 
 
@@ -1462,24 +1447,17 @@ def rm3_expand(
     crushes high-df expansion terms.
     """
     spark = docs.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset)
-    pass1 = (
-        m.groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-            ).alias("s")
-        )
-        # round BEFORE the cut (r3 advice: an unrounded cut can rank
-        # sub-1e-6 score twins differently from the replay)
+    qt, qset = _query_terms(spark, query_terms, tokenized=True)
+    if not qset:
+        return spark.createDataFrame([], "term string, weight double")
+    # rounded BEFORE the cut: an unrounded cut can rank sub-1e-6 score
+    # twins differently from the replay
+    fb = (  # ≤ fb_docs scalars — the PRF barrier
+        _bm25(_matched(index, qt, qset), round_dp, score="s")
         .orderBy(F.col("s").desc(), F.col("doc_id").asc())
         .limit(fb_docs)
+        .collect()
     )
-    fb = pass1.collect()  # ≤ fb_docs scalars — the PRF barrier
     total = sum(r["s"] for r in fb)
     pq_w = (1.0 - alpha) / len(qset)
     orig = spark.createDataFrame([(t, pq_w) for t in qset], "term string, pq double")
@@ -1546,23 +1524,17 @@ def rm3_search(
         fb_docs=fb_docs, fb_terms=fb_terms, alpha=alpha, round_dp=round_dp,
     ).collect()
     spark = docs.sparkSession
+    if not exp:
+        return spark.createDataFrame([], _HITS)
     terms = [r["term"] for r in exp]
     wdf = spark.createDataFrame(
         [(0, r["term"], float(r["weight"])) for r in exp],
         "query_id int, term string, weight double",
     )
-    m = _matched(index, wdf.select("query_id", "term"), terms=terms)
-    scored = (
-        m.join(F.broadcast(wdf.select("term", "weight")), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("weight") * F.col("bm25_idf") * F.col("tf_norm")),
-                round_dp,
-            ).alias("score")
-        )
+    m = _matched(index, wdf.select("query_id", "term"), terms=terms).join(
+        F.broadcast(wdf.select("term", "weight")), "term"
     )
-    return topk(scored, k)
+    return topk(_bm25(m, round_dp), k)
 
 
 def search_after(
@@ -1590,16 +1562,10 @@ def search_after(
     sub-epsilon-twin hazard the r3 advice flagged for unrounded cuts).
     """
     spark = index.postings.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
+    qt, terms = _query_terms(spark, query_terms, tokenized=True)
+    if not terms:
+        return spark.createDataFrame([], _HITS)
+    scored = _bm25(_matched(index, qt, terms), round_dp)
     if after is not None:
         s0, d0 = float(after[0]), int(after[1])
         scored = scored.filter(
@@ -1633,21 +1599,11 @@ def champion_postings(index: InvertedIndex, m: int = 32) -> InvertedIndex:
     Reference analog: none (the reference always scores full lists,
     app/main.py:58-73) — engine-side serving surface.
     """
-    w = Window.partitionBy("term").orderBy(
-        F.col("tf_norm").desc(), F.col("doc_id").asc()
+    champs = _rank_cut(
+        index.postings, m, ["term"], F.col("tf_norm").desc(),
+        F.col("doc_id").asc(),
     )
-    champs = (
-        index.postings.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= m)
-        .drop("rn")
-    )
-    return InvertedIndex(
-        postings=champs,
-        term_stats=index.term_stats,
-        doc_stats=index.doc_stats,
-        n_docs=index.n_docs,
-        avgdl=index.avgdl,
-    )
+    return replace(index, postings=champs)
 
 
 def champion_search(
@@ -1666,25 +1622,14 @@ def champion_search(
     before scoring. Score rounded to round_dp BEFORE the top-k window
     so near-ties replay identically in oracles.
     """
-    qt = queries_to_terms(spark, queries)
-    terms = [r["term"] for r in qt.select("term").distinct().collect()]
+    qt, terms = _query_terms(spark, queries)
+    if not terms:
+        return spark.createDataFrame([], _HITS)
     champ = champion_postings(
-        InvertedIndex(
-            postings=index.postings.filter(F.col("term").isin(terms)),
-            term_stats=index.term_stats,
-            doc_stats=index.doc_stats,
-            n_docs=index.n_docs,
-            avgdl=index.avgdl,
-        ),
+        replace(index, postings=index.postings.filter(F.col("term").isin(terms))),
         m=m,
     )
-    mt = _matched(champ, qt, terms=terms)
-    scored = mt.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    return topk(scored, k)
+    return topk(_bm25(_matched(champ, qt, terms), round_dp), k)
 
 
 def tiered_search(
@@ -1716,25 +1661,16 @@ def tiered_search(
     for r in t1_rows:
         filled[r["query_id"]] += 1
     refill = {qid: q for qid, q in queries.items() if filled[qid] < k}
-    if not refill:
+    qt, terms = _query_terms(spark, refill)
+    if not terms:  # nothing to refill, or only term-less queries
         return tier1
-    qt = queries_to_terms(spark, refill)
-    terms = [r["term"] for r in qt.select("term").distinct().collect()]
-    mt = _matched(index, qt, terms=terms)
-    full_scored = mt.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    tier2 = topk(full_scored, k)
+    tier2 = topk(_bm25(_matched(index, qt, terms), round_dp), k)
     kept = [
         (r["query_id"], r["doc_id"], float(r["score"]))
         for r in t1_rows
         if r["query_id"] not in refill
     ]
-    kept_df = spark.createDataFrame(
-        kept, "query_id int, doc_id long, score double"
-    )
+    kept_df = spark.createDataFrame(kept, _HITS)
     return kept_df.unionByName(tier2).orderBy(
         "query_id", F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -1759,25 +1695,11 @@ def msm_search(
     shrinks the top-k window input — at 100 TB the filter drops the
     long tail of 1-term matches before the per-query rank window.
     """
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    qt = queries_to_terms(spark, queries)
+    qt, terms = _query_terms(spark, queries)
     if not terms:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
+        return spark.createDataFrame([], _HITS)
     m = _matched(index, qt, terms)
-    scored = (
-        m.groupBy("query_id", "doc_id")
-        .agg(
-            F.round(F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp).alias(
-                "score"
-            ),
-            F.count(F.lit(1)).alias("n_matched"),
-        )
-        .filter(F.col("n_matched") >= min_should_match)
-        .drop("n_matched")
-    )
-    return topk(scored, k)
+    return topk(_bm25(m, round_dp, min_match=min_should_match), k)
 
 
 def synonym_search(
@@ -1802,30 +1724,18 @@ def synonym_search(
     executor, which is what you want when the thesaurus lives in a
     config store rather than the cluster.
     """
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
     rows: list[tuple[int, str, float]] = []
-    for qid, q in queries.items():
-        weights: dict[str, float] = {}
-        originals = list(dict.fromkeys(tokenize_query(q)))
-        for t in originals:
-            weights[t] = 1.0
+    for qid, originals in _tokenized(queries).items():
+        weights = dict.fromkeys(originals, 1.0)
         for t in originals:
             for s in synonyms.get(t, []):
                 weights[s] = max(weights.get(s, 0.0), syn_weight)
-        for term, w in weights.items():
-            rows.append((qid, term, w))
+        rows += [(qid, term, w) for term, w in weights.items()]
     if not rows:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
+        return spark.createDataFrame([], _HITS)
     qt = spark.createDataFrame(rows, "query_id int, term string, weight double")
     terms = sorted({r[1] for r in rows})
-    m = _matched(index, qt, terms)
-    scored = m.groupBy("query_id", "doc_id").agg(
-        F.round(
-            F.sum(F.col("weight") * F.col("bm25_idf") * F.col("tf_norm")), round_dp
-        ).alias("score")
-    )
-    return topk(scored, k)
+    return topk(_bm25(_matched(index, qt, terms), round_dp), k)
 
 
 def decay_search(
@@ -1850,16 +1760,10 @@ def decay_search(
     query-time form for priors that change faster than the index
     (freshness does; PageRank doesn't).
     """
-    if isinstance(queries, list):
-        queries = dict(enumerate(queries))
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    qt = queries_to_terms(spark, queries)
+    qt, terms = _query_terms(spark, queries)
     if not terms:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
-    m = _matched(index, qt, terms)
-    relevance = m.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("bm25_idf") * F.col("tf_norm")).alias("relevance")
-    )
+        return spark.createDataFrame([], _HITS)
+    relevance = _bm25(_matched(index, qt, terms), score="relevance")
     decayed = relevance.join(doc_ages, "doc_id").select(
         "query_id",
         "doc_id",

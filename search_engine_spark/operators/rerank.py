@@ -34,7 +34,9 @@ from search_engine_spark.operators.index_build import (
     InvertedIndex,
     raw_postings_from_docs,
 )
-from search_engine_spark.operators.query import _matched
+from search_engine_spark.operators.query import _bm25, _matched, _query_terms
+
+_PICKS = "rank int, doc_id long, score double"
 
 
 def candidate_jaccard_pairs(
@@ -98,18 +100,11 @@ def mmr_rerank(
     not a relevance score.
     """
     spark = docs.sparkSession
-    qset = list(dict.fromkeys(query_terms))
-    qt = spark.createDataFrame(
-        [(0, t) for t in qset], "query_id int, term string"
-    )
-    m = _matched(index, qt, terms=qset)
+    qt, terms = _query_terms(spark, query_terms, tokenized=True)
+    if not terms:
+        return spark.createDataFrame([], _PICKS)
     cand_rows = (
-        m.groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("bm25_idf") * F.col("tf_norm")), round_dp
-            ).alias("rel")
-        )
+        _bm25(_matched(index, qt, terms), round_dp, score="rel")
         .orderBy(F.col("rel").desc(), F.col("doc_id").asc())
         .limit(n_candidates)
         .collect()
@@ -137,7 +132,7 @@ def mmr_rerank(
         picked.append((len(picked) + 1, best[0], best[1]))
         remaining.discard(best[0])
     return spark.createDataFrame(
-        picked, "rank int, doc_id long, score double"
+        picked, _PICKS
     )
 
 

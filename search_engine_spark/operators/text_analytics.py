@@ -635,25 +635,33 @@ def highlight_snippet(
     window via slice, tagging via transform — no Python UDF, no
     shuffle; this composes with a top-k join without adding exchanges.
     """
-    tarr = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
-    tag_o = tag_open.replace("'", "''")
-    tag_c = tag_close.replace("'", "''")
+    # terms and tags enter as literal values, never as SQL text
+    tarr = F.array(*[F.lit(t) for t in terms])
+    t = F.col("t")
     toks = documents.select(
         "doc_id", ws_tokens(F.col("text")).alias("t")
     )
     # get(), not [0]: ANSI mode raises on indexing the empty no-hit array
-    first = F.expr(
-        f"get(filter(sequence(0, size(t) - 1),"
-        f" i -> array_contains(array({tarr}), t[i])), 0)"
+    first = F.get(
+        F.filter(
+            F.sequence(F.lit(0), F.size(t) - 1),
+            lambda i: F.array_contains(tarr, t[i]),
+        ),
+        0,
     )
     hit = toks.select("doc_id", "t", first.alias("first_pos")).filter(
         F.col("first_pos").isNotNull()
     )
     start0 = F.greatest(F.lit(0), F.col("first_pos") - lead)
-    snippet = F.expr(
-        f"array_join(transform(win, x -> CASE WHEN array_contains("
-        f"array({tarr}), x) THEN '{tag_o}' || x || '{tag_c}'"
-        f" ELSE x END), ' ')"
+    snippet = F.array_join(
+        F.transform(
+            "win",
+            lambda x: F.when(
+                F.array_contains(tarr, x),
+                F.concat(F.lit(tag_open), x, F.lit(tag_close)),
+            ).otherwise(x),
+        ),
+        " ",
     )
     return (
         hit.withColumn("win", F.slice("t", start0 + 1, width))

@@ -129,6 +129,15 @@ def test_highlight_window_clamps_at_doc_start(spark):
     assert r["snippet"] == "<b>hit</b> a b c"
 
 
+def test_highlight_matches_backslash_and_quote_terms(spark):
+    from search_engine_spark.operators.text_analytics import highlight_snippet
+
+    docs = _docs(spark, [(1, "x a\\b it's y")])
+    r = highlight_snippet(docs, ["a\\b", "it's"], width=4, lead=1).first()
+    assert r is not None and r["first_pos"] == 1
+    assert r["snippet"] == "x <b>a\\b</b> <b>it's</b> y"
+
+
 # ---------------------------------------------------------------------------
 # tombstone serving (deletes between rebuilds)
 # ---------------------------------------------------------------------------

@@ -549,6 +549,14 @@ def test_next_word_counts_and_prefix_gate(spark):
     assert {r["suggestion"] for r in pref} == {"data", "deal", "dog"}
     only_de = next_word_suggest(docs, "big", prefix="de").collect()
     assert [r["suggestion"] for r in only_de] == ["deal"]
+    # quote and backslash in `prev` are matched as plain characters
+    odd = spark.createDataFrame(
+        [(3, "a\\ next it's here a\\ next")], "doc_id long, text string"
+    )
+    after_bs = next_word_suggest(odd, "a\\").collect()
+    assert [(r["suggestion"], r["n_follow"]) for r in after_bs] == [("next", 2)]
+    after_q = next_word_suggest(odd, "it's").collect()
+    assert [r["suggestion"] for r in after_q] == ["here"]
 
 
 def test_corrected_search_equals_search_on_fixed_query(spark, index):

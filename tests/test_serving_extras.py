@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from search_engine_spark.operators import query as Q
 from search_engine_spark.operators.index_build import build_index
 from search_engine_spark.operators.query import (
     decay_search,
@@ -18,6 +19,7 @@ from search_engine_spark.operators.query import (
     search,
     synonym_search,
 )
+from search_engine_spark.operators.rerank import mmr_rerank
 from search_engine_spark.operators.text_analytics import ws_tokens
 
 #: doc 1 matches both query terms, 2/3 one each, 4 only a synonym
@@ -242,3 +244,61 @@ def test_facet_pagination_is_disjoint_and_complete(spark, index):
     }
     assert set(flat) == full
     assert all(len(p) <= 2 for p in pages)
+
+
+HITS = "struct<query_id:int,doc_id:bigint,score:double>"
+EMPTY_QUERY_CASES = {
+    # name: (call(index, spark, docs), schema of the empty result)
+    "search[]": (lambda i, s, d: search(i, s, []), HITS),
+    "search[stopwords]": (lambda i, s, d: search(i, s, ["the and"]), HITS),
+    "rescore_topk": (lambda i, s, d: Q.rescore_topk(i, s, ["the"]), HITS),
+    "msm_search": (lambda i, s, d: msm_search(i, s, {0: "the"}), HITS),
+    "synonym_search": (
+        lambda i, s, d: synonym_search(i, s, {0: "the"}, {"the": ["line"]}),
+        HITS,
+    ),
+    "decay_search": (
+        lambda i, s, d: decay_search(
+            i, s, ["the"], i.doc_stats.select("doc_id", F.lit(1.0).alias("age_days"))
+        ),
+        HITS,
+    ),
+    "champion_search": (lambda i, s, d: Q.champion_search(i, s, ["the"]), HITS),
+    "tiered_search": (lambda i, s, d: Q.tiered_search(i, s, ["the"]), HITS),
+    "explain_score": (
+        lambda i, s, d: Q.explain_score(i, [], [1]),
+        "struct<doc_id:bigint,term:string,tf:bigint,df:bigint,idf:double,"
+        "tf_norm:double,contribution:double>",
+    ),
+    "tombstone_search": (
+        lambda i, s, d: Q.tombstone_search(i, i.doc_stats.select("doc_id"), []),
+        HITS,
+    ),
+    "sharded_search": (lambda i, s, d: Q.sharded_search(i, []), HITS),
+    "corrected_search": (lambda i, s, d: Q.corrected_search(i, []), HITS),
+    "search_after": (lambda i, s, d: Q.search_after(i, [], after=(1.0, 1)), HITS),
+    "wildcard_search": (lambda i, s, d: Q.wildcard_search(i, s, "zzz*"), HITS),
+    "fuzzy_search": (lambda i, s, d: Q.fuzzy_search(i, []), HITS),
+    "rm3_expand": (
+        lambda i, s, d: Q.rm3_expand(i, d, [], tokenizer=ws_tokens),
+        "struct<term:string,weight:double>",
+    ),
+    "rm3_search": (lambda i, s, d: Q.rm3_search(i, d, [], tokenizer=ws_tokens), HITS),
+    "mmr_rerank": (
+        lambda i, s, d: mmr_rerank(i, d, [], tokenizer=ws_tokens),
+        "struct<rank:int,doc_id:bigint,score:double>",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(EMPTY_QUERY_CASES))
+def test_query_without_terms_is_empty_without_postings_join(spark, index, name):
+    """One empty-query contract: no indexable term ([] or only stop
+    words) → an empty frame of the function's schema, built without a
+    postings join (and without raising)."""
+    call, schema = EMPTY_QUERY_CASES[name]
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    df = call(index, spark, docs)
+    assert df.schema.simpleString() == schema
+    assert "Join" not in df._jdf.queryExecution().logical().toString()
+    assert df.count() == 0
