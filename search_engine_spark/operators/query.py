@@ -7,7 +7,7 @@ DESC limit 10 (W1). OR semantics (quirk Q9), f32 scores (Q5), tie-break
 (score DESC, doc_id ASC) defined by us (Q7).
 
 Every BM25 serving function here (and in ltr/rerank/graph/phrase) is
-one skeleton on three private builders, so they share one plan:
+one skeleton on shared private builders, so they share one plan:
 
   _query_terms: queries tokenized ONCE on the driver → (query_id, term)
       table + the literal term list. No indexable term (an empty list,
@@ -21,7 +21,10 @@ one skeleton on three private builders, so they share one plan:
       rounded BEFORE any cut so sub-epsilon twins replay identically,
       plus an optional matched-term threshold (m-of-n, AND) applied
       after the agg — the one shuffle.
-  → topk: per-query rank window (pushed down as WindowGroupLimit).
+  → topk / _rank_cut: rank-limit window (pushed down as
+      WindowGroupLimit).
+
+The LM scorers use the same match with p(t|C) attached (_lm_matched).
 
 Feature-specific steps (tombstone anti-join, keyset cursor, shard
 window, decay multiply, …) sit between the aggregate and the cut on
@@ -483,12 +486,6 @@ def autocomplete(
     )
 
 
-_EXPLAIN = (
-    "doc_id long, term string, tf long, df long, idf double, tf_norm double,"
-    " contribution double"
-)
-
-
 def explain_score(
     index: InvertedIndex,
     query_terms: list[str],
@@ -504,13 +501,16 @@ def explain_score(
     (up to the final rounding), so a mis-ranked result decomposes into
     exactly which term and which factor moved it.
 
-    Shape: the standard dictionary-seek probe (term isin pushed to the
-    scan) further restricted by the doc_id isin — a few rows survive;
-    no aggregation at all, pure per-row column math."""
+    Shape: the `_matched` probe further restricted by the doc_id isin —
+    a few rows survive; no aggregation, pure per-row column math."""
     spark = index.postings.sparkSession
     qt, terms = _query_terms(spark, query_terms, tokenized=True)
     if not terms:
-        return spark.createDataFrame([], _EXPLAIN)
+        return spark.createDataFrame(
+            [],
+            "doc_id long, term string, tf long, df long, idf double,"
+            " tf_norm double, contribution double",
+        )
     m = _matched(index, qt, terms).filter(
         F.col("doc_id").isin([int(d) for d in doc_ids])
     )
@@ -543,11 +543,10 @@ def tombstone_search(
     (that full-recompute path exists as index_build.delete_docs; run
     it at merge/compaction cadence, serve tombstones in between).
 
-    The tombstone anti-join applies AFTER the per-doc aggregate and is
-    broadcast (a deletion list is ≪ corpus between rebuilds), so the
-    plan is the plain dictionary-seek search plus one map-side
-    anti-join — deletes cost nothing at scan time. Top-k is cut after
-    exclusion, so a page stays full while any matches remain.
+    The tombstone anti-join is broadcast (a deletion list is ≪ corpus
+    between rebuilds) and applies AFTER the per-doc aggregate — deletes
+    cost nothing at scan time. Top-k is cut after exclusion, so a page
+    stays full while any matches remain.
     """
     spark = index.postings.sparkSession
     qt, terms = _query_terms(spark, query_terms, tokenized=True)
@@ -657,9 +656,7 @@ def corrected_search(
     The end-to-end behavior a user sees as "showing results for …".
 
     The substitution is a ≤|q|-scalar driver barrier (the same class
-    as the RM3/fuzzy expansion collects); the corrected probe is the
-    plain dictionary-seek search plan. Scores rounded before the cut.
-    """
+    as the RM3/fuzzy expansion collects)."""
     spark = index.postings.sparkSession
     sugg = {
         r["term"]: r["suggestion"]
@@ -689,13 +686,11 @@ def score_lm_dirichlet(
                      + |q|·ln(μ / (dl_d + μ))
 
     The candidate set is docs matching ≥1 query term (standard
-    inverted-index retrieval). The plan is the SAME
-    broadcast-join shape as score_bm25 (postings never shuffled, one
-    hash agg) plus one broadcast of per-term collection probabilities.
-    p(t|C) = cf_t / |C| (collection frequency over total tokens) is
-    computed from the isin-pruned postings scan — rows only for the
-    query terms, a scalar-sized aggregate at any corpus size. |C| and
-    dl come from doc_stats. Ties: score DESC, doc_id ASC (the Q7 rule).
+    inverted-index retrieval). p(t|C) = cf_t / |C| (collection
+    frequency over total tokens) is computed from the isin-pruned
+    postings scan — rows only for the query terms, a scalar-sized
+    aggregate at any corpus size — and broadcast (`_lm_matched`). dl
+    comes from doc_stats. Ties: score DESC, doc_id ASC (the Q7 rule).
 
     Scores are ≤ 0 (log-probabilities); only rank matters. Rounded 9dp
     for oracle comparison.
@@ -784,10 +779,8 @@ def score_jelinek_mercer(
         score(q,d) = Σ_{t∈q∩d} ln(1 + λ·(tf/dl) / ((1−λ)·p(t|C)))
 
     Scores are ≥ 0, no length-norm tail term (unlike Dirichlet —
-    that's the λ-vs-μ trade). Same plan as score_lm_dirichlet: the
-    broadcast-join probe, one hash agg, a broadcast of per-term
-    collection probabilities from the isin-pruned postings. Rounded
-    9dp for oracle comparison; ties Q7.
+    that's the λ-vs-μ trade). Rounded 9dp for oracle comparison;
+    ties Q7.
     """
     scored = (
         _lm_matched(index, query_terms, terms)
@@ -831,8 +824,7 @@ def score_absolute_discount(
 
     where |d|_u is the number of DISTINCT terms in d (computed at
     probe time by one extra doc-grouped aggregate over the postings —
-    at build time it would live in doc_stats). Same probe plan as the
-    other two LM scorers; rounded 9dp; ties Q7.
+    at build time it would live in doc_stats). Rounded 9dp; ties Q7.
     """
     # |d|_u: distinct terms per doc — real postings only (tf > 0)
     du = (
@@ -1147,12 +1139,11 @@ def rescore_topk(
     LM-Dirichlet second pass re-ranks ONLY that window with
     score = w_base·bm25 + w_rescore·lm (beyond-reference serving).
 
-    This is the standard serving trade at scale: the first pass is the
-    broadcast-matched one-agg BM25 (postings never shuffled); the
-    second pass touches window·|queries| rows, so its cost is constant
-    in corpus size. The window cut uses rounded scores + the Q7
-    tie-break so the candidate set is reproducible across plans; docs
-    outside the window never re-enter (k ≤ window is enforced).
+    This is the standard serving trade at scale: the second pass
+    touches window·|queries| rows, so its cost is constant in corpus
+    size. The window cut uses rounded scores + the Q7 tie-break so the
+    candidate set is reproducible across plans; docs outside the window
+    never re-enter (k ≤ window is enforced).
     """
     if k > window:
         raise ValueError(f"k ({k}) must be <= window ({window})")
@@ -1295,11 +1286,8 @@ def wildcard_search(
     term the wildcard pattern expands to — `spar*`-style serving.
 
     Two jobs by construction: the expansion TakeOrdered collects ≤
-    max_expansions strings to the driver (the same tiny driver-side
-    term-list discipline as `search`, and what lets `_matched` push the
-    isin into the postings scan), then one standard broadcast-joined
-    scoring pass. An empty expansion short-circuits to an empty result
-    without touching postings.
+    max_expansions strings to the driver (what lets `_matched` push the
+    isin into the postings scan), then the `score_bm25` pass.
     """
     expansion = wildcard_terms(
         index, pattern, kgram=kgram, max_expansions=max_expansions
@@ -1515,9 +1503,9 @@ def rm3_search(
     expanded model — score(d) = Σ_t weight(t)·idf_t·tf_norm(t,d).
 
     The expansion terms are collected (≤ fb_terms scalars) so the
-    pass-2 probe pushes the literal isin into the postings scan, the
-    same dictionary-seek shape as plain `search` — expansion changes
-    WHICH posting lists are read (a few more), not HOW.
+    pass-2 probe pushes the literal isin into the postings scan —
+    expansion changes WHICH posting lists are read (a few more), not
+    HOW.
     """
     exp = rm3_expand(
         index, docs, query_terms, tokenizer,
@@ -1555,9 +1543,7 @@ def search_after(
     Why keyset, not offset: OFFSET p·k pagination materializes and
     ranks p·k+k rows per page — page 1000 of a popular query costs
     1000× page 1. The keyset predicate is applied BEFORE the top-k
-    window, so every page is the same plan as page one: matched
-    postings → hash agg → filter → per-partition group-limit merge.
-    Scores are rounded `round_dp` BEFORE both the cursor filter and the
+    window, so every page costs what page one does. Scores are rounded `round_dp` BEFORE both the cursor filter and the
     cut — the cursor replays exactly across pages and engines (the same
     sub-epsilon-twin hazard the r3 advice flagged for unrounded cuts).
     """
@@ -1619,8 +1605,7 @@ def champion_search(
     The champion cut composes with the dictionary-seek probe: the isin
     prune reaches the scan first (only the query terms' lists are
     read), then each surviving list is truncated to its m champions
-    before scoring. Score rounded to round_dp BEFORE the top-k window
-    so near-ties replay identically in oracles.
+    before scoring.
     """
     qt, terms = _query_terms(spark, queries)
     if not terms:
@@ -1647,8 +1632,8 @@ def tiered_search(
     guarantee is kept for every under-filled query.
 
     The tier decision is one k·|queries|-row collect (top-k output,
-    scalar-sized at any corpus scale); fallback queries re-enter the
-    standard dictionary-seek path. Under-filled ≠ differently-ranked:
+    scalar-sized at any corpus scale); fallback queries re-run the
+    full-list BM25. Under-filled ≠ differently-ranked:
     a filled champion top-k can still differ from full BM25 (champion
     docs only) — that approximation is the documented price of the
     tier, identical to champion_search.
@@ -1689,11 +1674,10 @@ def msm_search(
     terms — the middle ground between the reference's OR-only serving
     (app/main.py:67, quirk Q9) and the AND mode of `score_bm25`.
 
-    Plan: identical to `score_bm25` (broadcast dictionary seek, one
-    hash agg); the m-of-n constraint is a post-aggregation filter on
-    the per-doc matched-term count, so it adds ZERO shuffles and
-    shrinks the top-k window input — at 100 TB the filter drops the
-    long tail of 1-term matches before the per-query rank window.
+    The m-of-n constraint is a post-aggregation filter on the per-doc
+    matched-term count, so it adds ZERO shuffles and shrinks the top-k
+    window input — at 100 TB the filter drops the long tail of 1-term
+    matches before the per-query rank window.
     """
     qt, terms = _query_terms(spark, queries)
     if not terms:
@@ -1718,11 +1702,9 @@ def synonym_search(
     weight wins, so expansion can never down-weight a user term.
 
     The expansion happens driver-side (queries and thesaurus rows are
-    tiny); the scoring plan is the same broadcast-join + single hash
-    agg as `score_bm25` — the weighted term table is just a 3-column
-    broadcast instead of 2. The synonym table itself never touches an
-    executor, which is what you want when the thesaurus lives in a
-    config store rather than the cluster.
+    tiny) into a weighted 3-column term table. The synonym table itself
+    never touches an executor, which is what you want when the
+    thesaurus lives in a config store rather than the cluster.
     """
     rows: list[tuple[int, str, float]] = []
     for qid, originals in _tokenized(queries).items():

@@ -131,9 +131,7 @@ def mmr_rerank(
                 best = (d, obj)
         picked.append((len(picked) + 1, best[0], best[1]))
         remaining.discard(best[0])
-    return spark.createDataFrame(
-        picked, _PICKS
-    )
+    return spark.createDataFrame(picked, _PICKS)
 
 
 def rrf_fuse(
