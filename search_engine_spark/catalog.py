@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from search_engine_spark import _layout
+
 
 def table_format(spark: SparkSession | None = None) -> str:
     """'iceberg' when requested AND the runtime has the extension."""
@@ -90,10 +92,11 @@ def merge_table(
     The directory swap is the parquet stand-in for a snapshot commit;
     on a real deployment the Iceberg path makes it atomic. Pruning is
     single-partition-column only (the swap replaces first-level dirs
-    whole); nested partition_by falls back to the full rewrite.
+    whole); nested partition_by falls back to the full rewrite. Every
+    swap is `_layout.swap` through the session's Hadoop FileSystem (any
+    path or URI): the old table or partition dir leaves only after its
+    replacement is fully written.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     spark = source.sparkSession
@@ -108,14 +111,12 @@ def merge_table(
         )
         return
 
-    local = path.removeprefix("file:")
-    if not os.path.exists(local):
+    if not _layout.exists(spark, path):
         write_table(source, path, partition_by=partition_by)
         return
 
     spark.catalog.refreshByPath(path)
     target = spark.read.parquet(path)
-    tmp = f"{local}.__merge_tmp"
     # the DISK layout keeps the caller's partitioning even when a
     # fallback below abandons the pruned dir-swap: a full rewrite that
     # dropped partitionBy would leave root-level files that corrupt the
@@ -162,23 +163,22 @@ def merge_table(
             source.select(*keys).distinct(), keys, "left_anti"
         )
         out = keep.unionByName(source)
-        out.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
+        stage = f"{path}.__merge_tmp"
+        out.write.mode("overwrite").partitionBy(*pcols).parquet(stage)
         # swap ONLY the touched first-level partition dirs
-        for entry in os.listdir(tmp):
-            if "=" not in entry:
-                continue
-            dst = os.path.join(local, entry)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            shutil.move(os.path.join(tmp, entry), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
+        for entry in _layout.listdir(spark, stage):
+            if "=" in entry:
+                src = f"{stage}/{entry}"
+                _layout.swap(
+                    spark, f"{path}/{entry}",
+                    lambda tmp, src=src: _layout.rename(spark, src, tmp),
+                )
+        _layout.delete(spark, stage)
     else:
         keep = target.join(source.select(*keys).distinct(), keys, "left_anti")
         out = keep.unionByName(source)
         writer = out.write.mode("overwrite")
         if layout_partition_by:
             writer = writer.partitionBy(*layout_partition_by)
-        writer.parquet(tmp)
-        shutil.rmtree(local)
-        shutil.move(tmp, local)
+        _layout.swap(spark, path, writer.parquet)
     spark.catalog.refreshByPath(path)

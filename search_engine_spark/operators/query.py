@@ -1632,8 +1632,10 @@ def tiered_search(
     guarantee is kept for every under-filled query.
 
     The tier decision is one k·|queries|-row collect (top-k output,
-    scalar-sized at any corpus scale); fallback queries re-run the
-    full-list BM25. Under-filled ≠ differently-ranked:
+    scalar-sized at any corpus scale); the filled queries are served
+    from those collected rows, so reading the result never re-runs the
+    champion query, and fallback queries re-run the full-list BM25.
+    Under-filled ≠ differently-ranked:
     a filled champion top-k can still differ from full BM25 (champion
     docs only) — that approximation is the documented price of the
     tier, identical to champion_search.
@@ -1646,16 +1648,16 @@ def tiered_search(
     for r in t1_rows:
         filled[r["query_id"]] += 1
     refill = {qid: q for qid, q in queries.items() if filled[qid] < k}
-    qt, terms = _query_terms(spark, refill)
-    if not terms:  # nothing to refill, or only term-less queries
-        return tier1
-    tier2 = topk(_bm25(_matched(index, qt, terms), round_dp), k)
     kept = [
         (r["query_id"], r["doc_id"], float(r["score"]))
         for r in t1_rows
         if r["query_id"] not in refill
     ]
     kept_df = spark.createDataFrame(kept, _HITS)
+    qt, terms = _query_terms(spark, refill)
+    if not terms:  # nothing to refill, or only term-less queries
+        return kept_df
+    tier2 = topk(_bm25(_matched(index, qt, terms), round_dp), k)
     return kept_df.unionByName(tier2).orderBy(
         "query_id", F.col("score").desc(), F.col("doc_id").asc()
     )

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from search_engine_spark import _layout
 from search_engine_spark.operators.hashing import hyperplane_sigs
 
 
@@ -478,21 +479,7 @@ def lsh_index_add(
     )
 
 
-def lsh_index_delete(spark, path: str, vec_ids) -> None:
-    """Tombstone vec_ids in a build_lsh_index layout. Deletes append an
-    id list under {path}/_tombstones (underscore-prefixed → excluded
-    from the data scan's file listing); load_lsh_index anti-joins them
-    out, so a delete is O(|ids|) metadata, not a layout rewrite — the
-    same tombstone-then-compact lifecycle as the postings index
-    (index_build.delete_docs / tombstone serving). `vec_ids` is a list
-    of ints or a 1-column DataFrame."""
-    if isinstance(vec_ids, DataFrame):
-        tomb = vec_ids.select(col(vec_ids.columns[0]).cast("long").alias("vec_id"))
-    else:
-        tomb = spark.createDataFrame(
-            [(int(v),) for v in vec_ids], "vec_id long"
-        )
-    tomb.coalesce(1).write.mode("append").parquet(f"{path}/_tombstones")
+lsh_index_delete = ivf_index_delete = pq_index_delete = _layout.delete_ids
 
 
 def load_lsh_index(spark, path: str) -> DataFrame:
@@ -501,35 +488,25 @@ def load_lsh_index(spark, path: str) -> DataFrame:
     against {path}/_tombstones (if any). The anti-join sits ABOVE the
     scan, so t/sig probe predicates still prune partitions / row
     groups; tombstones are expected to stay small between compactions
-    (broadcast-sized — compact when they are not)."""
-    import os
-
-    idx = spark.read.parquet(path)
-    tpath = f"{path}/_tombstones"
-    if os.path.exists(tpath):
-        tomb = spark.read.parquet(tpath)
-        idx = idx.join(F.broadcast(tomb), "vec_id", "left_anti")
-    return idx
+    (broadcast-sized — compact when they are not). A layout that an
+    interrupted lsh_index_compact left at {path}__old is renamed back
+    first."""
+    _layout.restore(spark, path)
+    return _layout.live(spark, path, spark.read.parquet(path))
 
 
-def lsh_index_compact(
-    spark, path: str, layout: str = "sorted"
-) -> None:
+def lsh_index_compact(spark, path: str, layout: str = "sorted") -> None:
     """Rewrite a build_lsh_index layout without its tombstoned rows and
     with per-partition file counts reset — the compaction that caps
     tombstone anti-join cost and append-induced small files. Writes to
-    a temp sibling then swaps, so a crash leaves the old layout
-    intact."""
-    import os
-    import shutil
-
+    a temp sibling, then swaps it in through the session's Hadoop
+    FileSystem (any path or URI): a crash at any step leaves the old
+    rows or the new ones readable by the next load_lsh_index, and the
+    next compaction cleans up after it."""
     live = load_lsh_index(spark, path).select("vec_id", "embedding", "t", "sig")
-    tmp = f"{path}__compact"
-    _write_lsh_rows(live, tmp, layout, "overwrite")
-    old = f"{path}__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    _layout.swap(
+        spark, path, lambda tmp: _write_lsh_rows(live, tmp, layout, "overwrite")
+    )
 
 
 def lsh_index_topk(
@@ -771,37 +748,17 @@ def ivf_index_add(new_embeddings: DataFrame, path: str) -> None:
     ).partitionBy("cell").parquet(f"{path}/assign")
 
 
-def ivf_index_delete(spark, path: str, vec_ids) -> None:
-    """Tombstone vec_ids in a build_ivf_index layout (append-only id
-    list under {path}/_tombstones; resolved by load_ivf_index's
-    anti-join) — see lsh_index_delete."""
-    if isinstance(vec_ids, DataFrame):
-        tomb = vec_ids.select(col(vec_ids.columns[0]).cast("long").alias("vec_id"))
-    else:
-        tomb = spark.createDataFrame(
-            [(int(v),) for v in vec_ids], "vec_id long"
-        )
-    tomb.coalesce(1).write.mode("append").parquet(f"{path}/_tombstones")
-
-
 def load_ivf_index(spark, path: str):
     """One-time load of a build_ivf_index layout for a serving loop:
     (seeds list, assignment DataFrame with tombstones anti-joined).
     Probing via the handle skips the per-query seeds collect and
     partition-directory listing; the anti-join sits above the scan so
     cell partition pruning is unaffected."""
-    import os
-
     seeds = [
         (int(r["cell"]), [float(x) for x in r["seed"]])
         for r in spark.read.parquet(f"{path}/seeds").collect()
     ]
-    assign = spark.read.parquet(f"{path}/assign")
-    tpath = f"{path}/_tombstones"
-    if os.path.exists(tpath):
-        tomb = spark.read.parquet(tpath)
-        assign = assign.join(F.broadcast(tomb), "vec_id", "left_anti")
-    return seeds, assign
+    return seeds, _layout.live(spark, path, spark.read.parquet(f"{path}/assign"))
 
 
 def ivf_index_topk(
@@ -1679,50 +1636,27 @@ def pq_index_add(new_embeddings: DataFrame, path: str) -> None:
     )
 
 
-def pq_index_delete(spark, path: str, vec_ids) -> None:
-    """Tombstone vec_ids in a build_pq_index layout (append-only id
-    list under {path}/_tombstones; resolved by load_pq_index's
-    anti-join) — see lsh_index_delete."""
-    if isinstance(vec_ids, DataFrame):
-        tomb = vec_ids.select(col(vec_ids.columns[0]).cast("long").alias("vec_id"))
-    else:
-        tomb = spark.createDataFrame([(int(v),) for v in vec_ids], "vec_id long")
-    tomb.coalesce(1).write.mode("append").parquet(f"{path}/_tombstones")
-
-
 def load_pq_index(spark, path: str):
     """One-time load of a build_pq_index layout for a serving loop:
     (codebooks, codes DataFrame with tombstones anti-joined). The
     anti-join is broadcast-sized between compactions; codes stay a
-    narrow (vec_id, m-int array) scan."""
-    import os
-
+    narrow (vec_id, m-int array) scan. Codes that an interrupted
+    pq_index_compact left at {path}/codes__old are renamed back first."""
     books = _read_pq_books(spark, path)
-    codes = spark.read.parquet(f"{path}/codes")
-    tpath = f"{path}/_tombstones"
-    if os.path.exists(tpath):
-        tomb = spark.read.parquet(tpath)
-        codes = codes.join(F.broadcast(tomb), "vec_id", "left_anti")
-    return books, codes
+    _layout.restore(spark, f"{path}/codes")
+    return books, _layout.live(spark, path, spark.read.parquet(f"{path}/codes"))
 
 
 def pq_index_compact(spark, path: str) -> None:
     """Rewrite the codes table without tombstoned rows (books are
-    untouched — compaction never re-trains). Temp-sibling + swap like
-    lsh_index_compact so a crash leaves the old layout intact."""
-    import os
-    import shutil
-
+    untouched — compaction never re-trains), then drop the tombstones.
+    Temp-sibling + swap like lsh_index_compact, on any path or URI: a
+    crash at any step leaves the live rows readable by the next
+    load_pq_index (tombstones are dropped only after the new codes are
+    in place), and the next compaction cleans up after it."""
     _, codes = load_pq_index(spark, path)
-    tmp = f"{path}/codes__compact"
-    codes.write.mode("overwrite").parquet(tmp)
-    old = f"{path}/codes__old"
-    os.rename(f"{path}/codes", old)
-    os.rename(tmp, f"{path}/codes")
-    shutil.rmtree(old)
-    tpath = f"{path}/_tombstones"
-    if os.path.exists(tpath):
-        shutil.rmtree(tpath)
+    _layout.swap(spark, f"{path}/codes", codes.write.mode("overwrite").parquet)
+    _layout.delete(spark, f"{path}/_tombstones")
 
 
 def pq_index_topk(

@@ -4,8 +4,8 @@ The serving half of `operators/percolate.py`: new document files land
 under `input_path` (a crawler's output directory, an ingest bucket),
 each micro-batch is matched against the standing-query table, and
 fired alerts accumulate under `state_path/alerts` — the saved-search /
-"tell me when a page about X arrives" loop, run on the same
-Structured-Streaming skeleton as `incremental_index_update`:
+"tell me when a page about X arrives" loop, run on the epoch drain of
+`_layout` that `incremental_index_update` shares:
 
 - `Trigger.AvailableNow` drains everything currently available and
   stops (the poll-loop analog); a long-running deployment uses a
@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from search_engine_spark import _layout
 from search_engine_spark.operators.percolate import percolate
 
 __all__ = ["percolate_stream", "read_alerts"]
@@ -44,26 +45,14 @@ def percolate_stream(
     and return the accumulated alerts relation (doc_id, query_id,
     n_matched). Call again after more files land — already-processed
     files are skipped via the stream checkpoint."""
-    reader = spark.readStream.schema("doc_id long, text string")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
 
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        alerts = percolate(
-            batch, stored_queries, mode=mode, tokenizer=tokenizer
-        )
-        (
-            alerts.write.mode("overwrite")
-            .parquet(f"{state_path}/alerts/batch={epoch_id}")
-        )
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
+        alerts = percolate(batch, stored_queries, mode=mode, tokenizer=tokenizer)
+        alerts.write.mode("overwrite").parquet(f"{state_path}/alerts/batch={epoch_id}")
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", f"{state_path}/_stream_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _layout.drain(
+        spark, input_path, "doc_id long, text string", state_path,
+        write_epoch, max_files_per_trigger,
     )
     return read_alerts(spark, state_path)
 
@@ -71,16 +60,6 @@ def percolate_stream(
 def read_alerts(spark: SparkSession, state_path: str) -> DataFrame:
     """The accumulated alert log (doc_id, query_id, n_matched); empty
     (with the right schema) before the first drain fires anything."""
-    from pyspark.errors import AnalysisException
-
-    spark.catalog.refreshByPath(f"{state_path}/alerts")
-    try:
-        return (
-            spark.read.option("basePath", f"{state_path}/alerts")
-            .parquet(f"{state_path}/alerts")
-            .select("doc_id", "query_id", "n_matched")
-        )
-    except AnalysisException:
-        return spark.createDataFrame(
-            [], "doc_id long, query_id int, n_matched long"
-        )
+    return _layout.read_epochs(
+        spark, f"{state_path}/alerts", "doc_id long, query_id int, n_matched long"
+    )

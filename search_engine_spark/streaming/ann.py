@@ -3,14 +3,14 @@
 The batch lifecycle (similarity.build_lsh_index → lsh_index_add →
 lsh_index_delete → lsh_index_compact) assumes someone TELLS the index
 about new embedding batches. A continuously re-crawled corpus doesn't
-ask — files land. This module closes that gap with the same
-exactly-once epoch machinery as streaming/sketches.py and
-streaming/incremental.py: an AvailableNow drain with a stream
-checkpoint for at-most-once file intake, and per-epoch
-OVERWRITE-by-directory so a replayed epoch rewrites its own bucket
-rows instead of double-inserting them (idempotent under retry — the
-property a bare `lsh_index_add` append cannot give a streaming
-writer).
+ask — files land. This module closes that gap with the epoch drain of
+`_layout` shared by streaming/sketches.py and streaming/incremental.py:
+an AvailableNow drain with a stream checkpoint for at-most-once file
+intake, and per-epoch OVERWRITE-by-directory so a replayed epoch
+rewrites its own bucket rows instead of double-inserting them
+(idempotent under retry — the property a bare `lsh_index_add` append
+cannot give a streaming writer). Input files are read as
+(vec_id long, embedding array<float>); any other column is ignored.
 
 Layout: {state}/epochs/batch=N/t=T/… — each epoch is an independent
 sorted-layout shard (sig-sorted row groups within t dirs), so a probe
@@ -19,8 +19,11 @@ batch layout, with the epoch dir as one more partition level. Bucket
 rows are a bag: probing the union of epochs is value-identical to
 probing one fresh build over every embedding ever drained
 (parity-tested in tests/test_streaming_ann.py). Deletes reuse the
-tombstone contract (ids under {state}/_tombstones, anti-joined by the
-loader); compaction is a fresh build_lsh_index over the live vectors.
+tombstone contract (similarity.lsh_index_delete on the state path:
+ids under {state}/_tombstones, anti-joined by the loader); compaction
+is a fresh build_lsh_index over the live vectors. All filesystem
+access goes through the session's Hadoop FileSystem, so the state
+may live at any path or URI.
 
 No reference analog (dastarruer/search-engine has no vector surface);
 the epoch pattern cites streaming/incremental.py's postings epochs.
@@ -29,8 +32,8 @@ the epoch pattern cites streaming/incremental.py's postings epochs.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from search_engine_spark import _layout
 from search_engine_spark.operators.similarity import _lsh_rows, _write_lsh_rows
 
 __all__ = ["lsh_index_stream", "read_lsh_stream_index"]
@@ -51,14 +54,8 @@ def lsh_index_stream(
     again after more files land; drained files are skipped via the
     stream checkpoint, and a crashed epoch replays as an overwrite of
     its own directory."""
-    reader = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
 
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
         _write_lsh_rows(
             _lsh_rows(batch, dim, n_planes, n_tables),
             f"{state_path}/epochs/batch={epoch_id}",
@@ -66,27 +63,21 @@ def lsh_index_stream(
             "overwrite",
         )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", f"{state_path}/_stream_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _layout.drain(
+        spark, input_path, "vec_id long, embedding array<float>", state_path,
+        write_epoch, max_files_per_trigger,
     )
     return read_lsh_stream_index(spark, state_path)
 
 
 def read_lsh_stream_index(spark: SparkSession, state_path: str) -> DataFrame:
     """Probe-ready relation over every drained epoch, tombstones
-    anti-joined (same contract as similarity.load_lsh_index). The
-    epoch partition column is dropped — bucket rows are a bag, and
-    probes filter on t/sig only."""
-    import os
-
-    spark.catalog.refreshByPath(f"{state_path}/epochs")
-    idx = spark.read.parquet(f"{state_path}/epochs").drop("batch")
-    tpath = f"{state_path}/_tombstones"
-    if os.path.exists(tpath):
-        tomb = spark.read.parquet(tpath)
-        idx = idx.join(F.broadcast(tomb), "vec_id", "left_anti")
-    return idx
+    anti-joined (same contract as similarity.load_lsh_index); empty
+    before the first drain. The epoch partition column is dropped —
+    bucket rows are a bag, and probes filter on t/sig only."""
+    rows = _layout.read_epochs(
+        spark,
+        f"{state_path}/epochs",
+        "vec_id long, embedding array<float>, sig long, t int",
+    )
+    return _layout.live(spark, state_path, rows)

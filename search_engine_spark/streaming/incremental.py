@@ -15,11 +15,17 @@ file/Iceberg stream:
 - `Trigger.AvailableNow` drains everything currently available and
   stops — the reference's "poll until queue empty" loop, minus the
   sleep. A long-running deployment would use a processing-time trigger
-  with the identical foreachBatch body.
+  with the identical foreachBatch body. The drain, the epoch reader and
+  the compaction swap are the shared ones of `_layout`, which reach the
+  filesystem through the session's Hadoop FileSystem, so the state may
+  live at any path or URI.
 - Exactly-once: the stream checkpoint (offsets/commits under
   state/_stream_ckpt) guarantees each input file is in exactly one
   epoch; the per-epoch OVERWRITE of `batch=<epoch_id>` makes epoch
   replay after a mid-write crash idempotent.
+- Compaction (`compact_state`) is crash-safe: a crash at any step
+  leaves `read_state_index` serving the same postings, and the next
+  compaction cleans up after it.
 - The merge-with-existing-index dance from the reference collapses to a
   stateless recompute (`index_from_raw_postings`) over the union of all
   batch postings — identical math to the one-shot batch build, which is
@@ -34,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from search_engine_spark import _layout
 from search_engine_spark.operators.index_build import (
     B,
     K1,
@@ -43,6 +50,8 @@ from search_engine_spark.operators.index_build import (
     raw_postings_from_docs,
 )
 from search_engine_spark.schemas import PAGES
+
+_RAW = "doc_id long, term string, tf int, batch int"
 
 
 def incremental_index_update(
@@ -56,28 +65,25 @@ def incremental_index_update(
     """Drain all new page files under input_path into the postings state,
     then return the finalized index. Call again after more files land —
     already-processed files are skipped via the stream checkpoint."""
-    reader = spark.readStream.schema(PAGES)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
 
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
         docs = prepare_docs(batch, id_method="hash", recompute_text=recompute_text)
-        raw = raw_postings_from_docs(docs, tokenizer)
-        (
-            raw.select("doc_id", "term", "tf")
-            .write.mode("overwrite")
-            .parquet(f"{state_path}/postings_raw/batch={epoch_id}")
+        raw = raw_postings_from_docs(docs, tokenizer).select("doc_id", "term", "tf")
+        raw.write.mode("overwrite").parquet(
+            f"{state_path}/postings_raw/batch={epoch_id}"
         )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", f"{state_path}/_stream_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _layout.drain(
+        spark, input_path, PAGES, state_path, write_epoch, max_files_per_trigger
     )
     return read_state_index(spark, state_path)
+
+
+def _latest(spark: SparkSession, root: str) -> DataFrame:
+    """(doc_id, term, tf) of every doc's latest epoch under root."""
+    raw = _layout.read_epochs(spark, root, _RAW)
+    latest = raw.groupBy("doc_id").agg(F.max("batch").alias("batch"))
+    return raw.join(latest, ["doc_id", "batch"]).select("doc_id", "term", "tf")
 
 
 def read_state_index(
@@ -88,19 +94,11 @@ def read_state_index(
     Re-delivered docs (the same url appearing in a later batch — the
     reference's re-crawl case) keep only the LATEST batch's postings,
     mirroring its term upsert ON CONFLICT DO UPDATE (lib.rs:231-258):
-    per doc_id the max batch epoch wins.
+    per doc_id the max batch epoch wins. Empty before the first drain.
     """
-    # Drop any cached plan over this path from a previous drain in the
-    # same session: CacheManager matches on the analyzed plan, which is
-    # path-based, so without this the old file list (and old persisted
-    # rows) would silently shadow newly-landed epoch dirs.
-    spark.catalog.refreshByPath(f"{state_path}/postings_raw")
-    raw = spark.read.option("basePath", f"{state_path}/postings_raw").parquet(
-        f"{state_path}/postings_raw"
-    )
-    latest = raw.groupBy("doc_id").agg(F.max("batch").alias("batch"))
-    deduped = raw.join(latest, ["doc_id", "batch"]).select("doc_id", "term", "tf")
-    return index_from_raw_postings(deduped, k1=k1, b=b)
+    root = f"{state_path}/postings_raw"
+    _layout.restore(spark, root)
+    return index_from_raw_postings(_latest(spark, root), k1=k1, b=b)
 
 
 def compact_state(spark: SparkSession, state_path: str) -> int:
@@ -117,33 +115,29 @@ def compact_state(spark: SparkSession, state_path: str) -> int:
     outranks it, and the stream checkpoint (untouched) keeps assigning
     fresh epochs, so drains continue seamlessly after compaction.
 
-    The swap is write-fully-then-rename, driver-side (local
-    filesystem); on a cluster this operation is the table format's
-    transactional compaction (Iceberg rewrite_data_files / Delta
-    OPTIMIZE) with the identical latest-wins projection.
+    The swap is write-fully-then-rename, driver-side, through the
+    session's Hadoop FileSystem (any path or URI): a crash at any step
+    leaves `read_state_index` serving the same postings, and the next
+    call cleans up after it. On a cluster this operation is the table
+    format's transactional compaction (Iceberg rewrite_data_files /
+    Delta OPTIMIZE) with the identical latest-wins projection.
     """
-    import os
-    import shutil
-
     root = f"{state_path}/postings_raw"
-    spark.catalog.refreshByPath(root)
+    _layout.restore(spark, root, tidy=True)
     batches = sorted(
         int(d.split("=", 1)[1])
-        for d in os.listdir(root)
+        for d in _layout.listdir(spark, root)
         if d.startswith("batch=")
     )
     if len(batches) <= 1:
         return 0
-    raw = spark.read.option("basePath", root).parquet(root)
-    latest = raw.groupBy("doc_id").agg(F.max("batch").alias("batch"))
-    deduped = (
-        raw.join(latest, ["doc_id", "batch"]).select("doc_id", "term", "tf")
+    deduped = _latest(spark, root)
+    _layout.swap(
+        spark,
+        root,
+        lambda tmp: deduped.write.mode("overwrite").parquet(
+            f"{tmp}/batch={batches[-1]}"
+        ),
     )
-    tmp = f"{state_path}/postings_raw.compact"
-    deduped.write.mode("overwrite").parquet(f"{tmp}/batch={batches[-1]}")
-    old = f"{state_path}/postings_raw.old"
-    os.rename(root, old)
-    os.rename(tmp, root)
-    shutil.rmtree(old)
     spark.catalog.refreshByPath(root)
     return len(batches) - 1

@@ -5,7 +5,7 @@ monoid (cms_merge is its associative +), so maintaining one over a
 document stream needs NO corpus reread and NO unbounded state: each
 micro-batch contributes a sketch-sized DELTA grid, and the serving
 state is the fold of the deltas. This module wires that algebra into
-the same exactly-once epoch machinery as streaming/alerts.py:
+the epoch drain and reader of `_layout` shared with streaming/alerts.py:
 AvailableNow drains, a stream checkpoint for at-most-once file intake,
 and per-epoch overwrite-by-directory so a replayed epoch rewrites its
 own delta instead of double-counting (idempotent under retry).
@@ -23,7 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from search_engine_spark import _layout
 from search_engine_spark.operators.sketch import cms_build, cms_merge
+
+_DOCS = "doc_id long, text string"
 
 __all__ = [
     "cms_stream",
@@ -49,24 +52,13 @@ def cms_stream(
     merged (j, bucket, cnt) grid — identical (tested + oracle-gated)
     to cms_build over every document ever drained. Call again after
     more files land; processed files are skipped via the checkpoint."""
-    reader = spark.readStream.schema("doc_id long, text string")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
 
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
         delta = cms_build(batch, depth=depth, width=width, family=family)
-        (
-            delta.write.mode("overwrite")
-            .parquet(f"{state_path}/grids/batch={epoch_id}")
-        )
+        delta.write.mode("overwrite").parquet(f"{state_path}/grids/batch={epoch_id}")
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", f"{state_path}/_stream_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _layout.drain(
+        spark, input_path, _DOCS, state_path, write_epoch, max_files_per_trigger
     )
     return read_cms_state(spark, state_path)
 
@@ -89,24 +81,15 @@ def hll_stream(
     from search_engine_spark.operators.sketch import hll_registers
     from search_engine_spark.operators.text_analytics import tokens_df
 
-    reader = spark.readStream.schema("doc_id long, text string")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
 
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
         delta = hll_registers(tokens_df(batch), "term", b=b, family=family)
-        (
-            delta.write.mode("overwrite")
-            .parquet(f"{state_path}/registers/batch={epoch_id}")
+        delta.write.mode("overwrite").parquet(
+            f"{state_path}/registers/batch={epoch_id}"
         )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", f"{state_path}/_stream_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _layout.drain(
+        spark, input_path, _DOCS, state_path, write_epoch, max_files_per_trigger
     )
     return read_hll_state(spark, state_path)
 
@@ -114,20 +97,11 @@ def hll_stream(
 def read_hll_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The max-folded registers over all drained epochs; empty (right
     schema) before the first drain."""
-    from pyspark.errors import AnalysisException
-
     from search_engine_spark.operators.sketch import hll_merge
 
-    spark.catalog.refreshByPath(f"{state_path}/registers")
-    try:
-        deltas = (
-            spark.read.option("basePath", f"{state_path}/registers")
-            .parquet(f"{state_path}/registers")
-            .select("bucket", "rho")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], "bucket long, rho long")
-    return hll_merge(deltas)
+    return _layout.read_epochs(
+        spark, f"{state_path}/registers", "bucket long, rho long", hll_merge
+    )
 
 
 def bloom_stream(
@@ -149,57 +123,28 @@ def bloom_stream(
     from search_engine_spark.operators.sketch import bloom_build
     from search_engine_spark.operators.text_analytics import tokens_df
 
-    reader = spark.readStream.schema("doc_id long, text string")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
 
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
         vocab = tokens_df(batch).select("term").distinct()
         delta = bloom_build(vocab, "term", m=m, k=k, family=family)
-        (
-            delta.write.mode("overwrite")
-            .parquet(f"{state_path}/bits/batch={epoch_id}")
-        )
+        delta.write.mode("overwrite").parquet(f"{state_path}/bits/batch={epoch_id}")
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", f"{state_path}/_stream_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _layout.drain(
+        spark, input_path, _DOCS, state_path, write_epoch, max_files_per_trigger
     )
     return read_bloom_state(spark, state_path)
 
 
 def read_bloom_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The distinct-union of set positions over all drained epochs."""
-    from pyspark.errors import AnalysisException
-
-    spark.catalog.refreshByPath(f"{state_path}/bits")
-    try:
-        deltas = (
-            spark.read.option("basePath", f"{state_path}/bits")
-            .parquet(f"{state_path}/bits")
-            .select("pos")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], "pos long")
-    return deltas.distinct()
+    return _layout.read_epochs(
+        spark, f"{state_path}/bits", "pos long", DataFrame.distinct
+    )
 
 
 def read_cms_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The folded grid over all drained epochs; empty (right schema)
     before the first drain."""
-    from pyspark.errors import AnalysisException
-
-    spark.catalog.refreshByPath(f"{state_path}/grids")
-    try:
-        deltas = (
-            spark.read.option("basePath", f"{state_path}/grids")
-            .parquet(f"{state_path}/grids")
-            .select("j", "bucket", "cnt")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], "j int, bucket long, cnt long")
-    return cms_merge(deltas)
+    return _layout.read_epochs(
+        spark, f"{state_path}/grids", "j int, bucket long, cnt long", cms_merge
+    )

@@ -604,3 +604,21 @@ def test_explain_contributions_sum_to_serving_score(spark, index):
         by_doc[r["doc_id"]] += r["contribution"]
     for r in top:
         assert abs(by_doc[r["doc_id"]] - r["score"]) < 1e-6
+
+
+def test_tiered_search_filled_batch_serves_collected_rows(spark, index):
+    """When every query fills from the champion tier, the result is built
+    from the rows the fill decision already collected: its plan holds no
+    Join, so reading it never runs the champion query a second time, and
+    its rows are the champion tier's."""
+    from search_engine_spark.operators.query import (
+        champion_search,
+        tiered_search,
+    )
+
+    qs = {0: "spark merge batch", 1: "spark"}
+    out = tiered_search(index, spark, qs, m=64, k=3)
+    assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
+    champ = champion_search(index, spark, qs, m=64, k=3).collect()
+    assert {r["query_id"] for r in champ} == {0, 1}
+    assert [tuple(r) for r in out.collect()] == [tuple(r) for r in champ]

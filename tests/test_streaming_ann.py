@@ -44,8 +44,11 @@ def test_stream_drains_equal_fresh_build_and_are_exactly_once(spark, tmp_path):
     )
 
     # second drain picks up ONLY the new file (exactly-once intake);
-    # union of epochs == fresh build over everything
-    half_b.write.parquet(f"{base}/in/drop1")
+    # union of epochs == fresh build over everything. Its `label` is a
+    # string: columns the index never uses are not read.
+    half_b.withColumn("label", F.col("label").cast("string")).write.parquet(
+        f"{base}/in/drop1"
+    )
     idx2 = lsh_index_stream(spark, f"{base}/in/drop*", f"{base}/state")
     fresh_all = str(tmp_path / "fresh_all")
     sim.build_lsh_index(emb, fresh_all)
