@@ -211,6 +211,45 @@ def test_ivf_index_probe_is_partition_pruned(spark, tmp_path):
     assert " IN " in scan_part[0] or " INSET " in scan_part[0], scan_part[0]
 
 
+def test_vector_probe_plan_shapes(spark, tmp_path):
+    """The index probes keep their serving shapes: a batch probe routes
+    candidates through broadcast joins (never a sort-merge shuffle of
+    the index) and cuts each query's top-k with a per-partition group
+    limit; a single probe is one TakeOrderedAndProject, no window."""
+    from search_engine_spark.operators.similarity import (
+        build_ivf_index,
+        build_lsh_index,
+        ivf_index_topk,
+        ivf_index_topk_batch,
+        lsh_index_topk,
+        lsh_index_topk_batch,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    build_lsh_index(emb, str(tmp_path / "lsh"))
+    build_ivf_index(emb, str(tmp_path / "ivf"))
+    qvecs = {
+        int(r["vec_id"]): [float(x) for x in r["embedding"]]
+        for r in emb.filter(F.col("vec_id") < 3).collect()
+    }
+    lsh, ivf = str(tmp_path / "lsh"), str(tmp_path / "ivf")
+    for batch in (
+        lsh_index_topk_batch(spark, lsh, qvecs),
+        ivf_index_topk_batch(spark, ivf, qvecs),
+    ):
+        plan = _plan(batch)
+        assert "BroadcastHashJoin" in plan, plan[:3000]
+        assert "WindowGroupLimit" in plan, plan[:3000]
+        assert "SortMergeJoin" not in plan, plan[:3000]
+    for single in (
+        lsh_index_topk(spark, lsh, qvecs[0], query_vec_id=0),
+        ivf_index_topk(spark, ivf, qvecs[0], query_vec_id=0),
+    ):
+        top = single._jdf.queryExecution().sparkPlan().nodeName()
+        assert top == "TakeOrderedAndProject", top
+        assert "Window" not in _plan(single)
+
+
 def test_fetch_partitions_by_domain_for_politeness(spark):
     """The politeness contract is structural: the fetch plan must show
     ONE hashpartitioning exchange on the registrable-domain column
