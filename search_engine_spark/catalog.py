@@ -95,7 +95,10 @@ def merge_table(
     whole); nested partition_by falls back to the full rewrite. Every
     swap is `_layout.swap` through the session's Hadoop FileSystem (any
     path or URI): the old table or partition dir leaves only after its
-    replacement is fully written.
+    replacement is fully written, and a merge first settles what a
+    crashed swap left behind (the old table or partition dir renamed
+    back, a stale copy or temp deleted), so the next merge reads a
+    clean table.
     """
     from pyspark.sql import functions as F
 
@@ -111,9 +114,17 @@ def merge_table(
         )
         return
 
+    _layout.restore(spark, path)
     if not _layout.exists(spark, path):
         write_table(source, path, partition_by=partition_by)
         return
+    # a crash inside a partition swap leaves `p=v__old` / `p=v__compact`
+    # next to the partition dirs, which the reader would serve as more
+    # partitions (and type `p` as string): settle each one first
+    for entry in _layout.listdir(spark, path):
+        base = entry.removesuffix("__old").removesuffix("__compact")
+        if base != entry:
+            _layout.restore(spark, f"{path}/{base}", tidy=True)
 
     spark.catalog.refreshByPath(path)
     target = spark.read.parquet(path)

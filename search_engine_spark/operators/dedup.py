@@ -43,6 +43,7 @@ from search_engine_spark.operators.hashing import (
     hyperplane_sigs,
     minhash_columns,
 )
+from search_engine_spark.operators.similarity import _cos
 from search_engine_spark.operators.text_analytics import tokens_df
 
 
@@ -640,18 +641,6 @@ def embedding_cosine_pairs(
     the SQL-checkable O(n²) baseline (JVM column math, f64).
 
     At scale use embedding_neardup_pairs (LSH-bucketed candidates)."""
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     a = embeddings.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     b = embeddings.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
     return (
@@ -659,7 +648,7 @@ def embedding_cosine_pairs(
         .select(
             "vec_a",
             "vec_b",
-            F.round(dot / (norm(F.col("ea")) * norm(F.col("eb"))), 6).alias("cos"),
+            _cos(F.col("ea"), F.col("eb")).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -698,25 +687,13 @@ def embedding_neardup_pairs(
     )
     ea = embeddings.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     eb = embeddings.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     return (
         cands.join(ea, "vec_a")
         .join(eb, "vec_b")
         .select(
             "vec_a",
             "vec_b",
-            F.round(dot / (norm(F.col("ea")) * norm(F.col("eb"))), 6).alias("cos"),
+            _cos(F.col("ea"), F.col("eb")).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )

@@ -1,34 +1,38 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths (the training-pipeline ANN requirement):
+Every path is candidate pruning followed by one shared exact step
+(REPOSE's prune-then-verify model of distributed top-k similarity):
 
-- cosine_topk: brute-force exact cosine top-k — JVM-side
-  zip_with/aggregate column math in f64, no Python, no shuffle beyond
-  the final TakeOrdered. The correctness baseline; O(n·d) per query.
-- lsh_cosine_topk: multi-table multi-probe random-hyperplane LSH.
-  Round 1 used a single 8-plane table with exact-signature match —
-  expected bucket population n/256, so a k=10 query got ~1 candidate
-  (recall collapse, flagged by the judge). The fix is the standard
-  recipe: n_tables independent plane sets (union of candidates) AND
-  multi-probe (also search buckets within hamming ≤ probe of the
-  query's signature). Candidates are fetched by ENUMERATING the probe
-  bucket keys and equi-joining (t, sig) — an index probe that stays a
-  bucket lookup at 10^12 rows, NOT a hamming filter over a full
-  signature scan. Exact cosine re-ranks candidates only.
+- exact: `cosine_topk` / `cosine_scores` / `filtered_cosine_topk` /
+  `rocchio_cosine_topk` score every (filtered) row — the correctness
+  baseline, O(n·d) per query.
+- LSH: multi-table multi-probe random-hyperplane signatures; candidates
+  are the rows sharing a probe bucket (hamming ≤ probe of the query's
+  signature) in ANY table, found by enumerating the probe keys — a
+  bucket lookup, not a hamming filter over a full signature scan.
+  Hyperplanes are Rademacher (±1) components of the portable md5 hash
+  family (operators/hashing.py), literals in the plan and in the DuckDB
+  oracle.
+- IVF: the query's n_probe nearest seed cells (ranked driver-side over
+  the tiny codebook); candidates are the cells' members.
+- PQ: per-subspace codebooks; ADC scans the packed codes with literal
+  lookup tables, and `pq_topk_rerank` re-ranks the shortlist exactly.
 
-Both families have a BUILD/PROBE split for serving (r2 judge item):
-build_lsh_index / build_ivf_index materialize the signature/assignment
-tables partitioned by (t, sig) / cell, and lsh_index_topk /
-ivf_index_topk answer queries with partition-pruned scans of only the
-probed buckets — no per-query recompute over the full relation. The
-query-time lsh_cosine_topk / ivf_cosine_topk remain as the index-free
-one-shot path and the oracle-checkable semantics definition; the
-indexed paths return identical results (asserted in
-tests/test_similarity.py).
+LSH, IVF and PQ each have a BUILD/PROBE split: `build_*_index` persists
+the bucket / cell / code table so `*_index_topk(_batch)` read only the
+probed part, while the index-free `lsh_cosine_topk` / `ivf_cosine_topk`
+stay the query-time definitions the probes are tested against.
 
-Hyperplanes are Rademacher (±1) components derived from the portable
-md5 hash family (operators/hashing.py) at PLAN time — literals in the
-Spark plan and in the DuckDB oracle, no per-row hashing.
+The shared core is kept once: the f64 cosine (`_cos`, 6dp; 9dp for
+cell ranking) and squared L2 (`_d2`, 9dp for codebook assignment), the
+result order (`_order`: cosine DESC or distance ASC, then vec_id ASC),
+the query-vector lookup (`_lookup`, None for an unknown id, which every
+by-id path answers with an empty frame), the hashed seed sample
+(`_seed_sample`), the driver-side probe-cell ranking (`_probe_cells`),
+the LSH bucket predicate (`_bucket_pred`) and the batch probe's
+broadcast rerank and per-query cut (`_batch_topk`). Clustering
+(k-means, PQ training, centroid classification) and SemDeDup assign
+and verify with the same expressions, as do dedup's cosine pairs.
 """
 
 from __future__ import annotations
@@ -40,46 +44,95 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from search_engine_spark import _layout
-from search_engine_spark.operators.hashing import hyperplane_sigs
+from search_engine_spark.operators.hashing import (
+    h64,
+    hyperplane_sigs,
+    py_hyperplane_sigs,
+)
+
+
+def _fold(arr):
+    return F.aggregate(arr, lit(0.0), lambda acc, x: acc + x)
 
 
 def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return _fold(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
 
 
 def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    return F.sqrt(_fold(F.transform(a, lambda x: x.cast("double") * x.cast("double"))))
+
+
+def _cos(a, b, dp: int = 6):
+    """Cosine of two array columns: f64, left-to-right folds, rounded."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), dp)
+
+
+def _d2(a, b):
+    """Squared L2 distance of two array columns (f64, unrounded)."""
+    return _fold(
+        F.zip_with(a, b, lambda x, c: (x.cast("double") - c) * (x.cast("double") - c))
     )
+
+
+def _vec_lit(vec):
+    return F.array(*[lit(float(x)) for x in vec])
+
+
+def _order(score: str = "cos"):
+    """Result order: best score first (cosine high, distance low), ties
+    to the smallest vec_id."""
+    s = col(score)
+    return [s.desc() if score == "cos" else s.asc(), col("vec_id").asc()]
+
+
+def _top(df: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    return df.orderBy(*_order(score)).limit(k)
+
+
+def _scored(df: DataFrame, qe, *keys) -> DataFrame:
+    """keys + (vec_id, cos) of each row's embedding against qe."""
+    return df.select(*keys, "vec_id", _cos(col("embedding"), qe).alias("cos"))
+
+
+def _rerank(cands: DataFrame, qvec, k: int) -> DataFrame:
+    """The single-query verification step: exact cosine of the
+    candidates against the literal query vector, top-k."""
+    return _top(_scored(cands, _vec_lit(qvec)), k)
+
+
+def _lookup(embeddings: DataFrame, query_vec_id: int, *cols: str):
+    """The stored row (its `cols`, default the embedding) of a query
+    vector, or None for an unknown id."""
+    rows = (
+        embeddings.filter(col("vec_id") == query_vec_id)
+        .select(*(cols or ["embedding"]))
+        .limit(1)
+        .collect()
+    )
+    return rows[0] if rows else None
+
+
+def _empty(df: DataFrame, schema: str) -> DataFrame:
+    return df.sparkSession.createDataFrame([], schema)
+
+
+def _exact(embeddings: DataFrame, query_vec_id: int, keep) -> DataFrame:
+    """(vec_id, cos) of the rows matching `keep` against the stored
+    query vector, broadcast to every row."""
+    q = embeddings.filter(col("vec_id") == query_vec_id).select(
+        col("embedding").alias("qe")
+    )
+    return _scored(embeddings.filter(keep).crossJoin(F.broadcast(q)), col("qe"))
 
 
 def cosine_scores(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
     """(vec_id, cos) vs the given stored vector — exact, f64, rounded 6dp."""
-    q = embeddings.filter(col("vec_id") == query_vec_id).select(
-        col("embedding").alias("qe")
-    )
-    rest = embeddings.filter(col("vec_id") != query_vec_id)
-    return rest.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        F.round(
-            _dot(col("embedding"), col("qe")) / (_norm(col("embedding")) * _norm(col("qe"))),
-            6,
-        ).alias("cos"),
-    )
+    return _exact(embeddings, query_vec_id, col("vec_id") != query_vec_id)
 
 
 def cosine_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
-    return cosine_scores(embeddings, query_vec_id).orderBy(
-        col("cos").desc(), col("vec_id").asc()
-    ).limit(k)
+    return _top(cosine_scores(embeddings, query_vec_id), k)
 
 
 def filtered_cosine_topk(
@@ -99,21 +152,8 @@ def filtered_cosine_topk(
     composes with the IVF/LSH probes as an extra pushed conjunct;
     this exact path is their recall oracle.
     """
-    q = embeddings.filter(col("vec_id") == query_vec_id).select(
-        col("embedding").alias("qe")
-    )
-    rest = embeddings.filter(
-        (col("vec_id") != query_vec_id) & (col("label") == label)
-    )
-    scored = rest.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        F.round(
-            _dot(col("embedding"), col("qe"))
-            / (_norm(col("embedding")) * _norm(col("qe"))),
-            6,
-        ).alias("cos"),
-    )
-    return scored.orderBy(col("cos").desc(), col("vec_id").asc()).limit(k)
+    keep = (col("vec_id") != query_vec_id) & (col("label") == label)
+    return _top(_exact(embeddings, query_vec_id, keep), k)
 
 
 def rocchio_cosine_topk(
@@ -144,6 +184,8 @@ def rocchio_cosine_topk(
         int(r["vec_id"]): [float(x) for x in r["embedding"]]
         for r in embeddings.filter(col("vec_id").isin(ids)).collect()
     }
+    if int(query_vec_id) not in got:
+        return _empty(embeddings, "vec_id long, cos double")
     qv = got[int(query_vec_id)]
     dim = len(qv)
 
@@ -162,20 +204,39 @@ def rocchio_cosine_topk(
     qprime = [
         alpha * qv[d] + beta * mr[d] - gamma * mn[d] for d in range(dim)
     ]
-    spark = embeddings.sparkSession
-    qdf = spark.createDataFrame(
-        [(qprime,)], "qe array<double>"
-    )
+    qdf = embeddings.sparkSession.createDataFrame([(qprime,)], "qe array<double>")
     rest = embeddings.filter(~col("vec_id").isin(ids))
-    scored = rest.crossJoin(F.broadcast(qdf)).select(
-        "vec_id",
-        F.round(
-            _dot(col("embedding"), col("qe"))
-            / (_norm(col("embedding")) * _norm(col("qe"))),
-            6,
-        ).alias("cos"),
+    return _top(_scored(rest.crossJoin(F.broadcast(qdf)), col("qe")), k)
+
+
+def _dim(embeddings: DataFrame, fn: str) -> int:
+    row = embeddings.select(F.size("embedding").alias("d")).first()
+    if row is None:
+        raise ValueError(f"{fn}: empty embeddings input")
+    return int(row["d"])
+
+
+def _units(dim: int) -> list:
+    """The embedding's unit-vector components u0..u{dim-1}."""
+    nrm = _norm(col("embedding"))
+    return [(col("embedding")[i].cast("double") / nrm).alias(f"u{i}") for i in range(dim)]
+
+
+def _unit_sums(embeddings: DataFrame, fn: str, *group):
+    """(agg, mean_pair): per-group n and per-dimension unit-vector sums,
+    and the mean pairwise cosine ‖Σv̂‖² − n over n(n−1) built on them."""
+    dim = _dim(embeddings, fn)
+    by = ["g"] if group else []
+    agg = embeddings.select(*group, *_units(dim)).groupBy(*by).agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.sum(f"u{i}").alias(f"s{i}") for i in range(dim)],
     )
-    return scored.orderBy(col("cos").desc(), col("vec_id").asc()).limit(k)
+    ssq = None
+    for i in range(dim):
+        t = col(f"s{i}") * col(f"s{i}")
+        ssq = t if ssq is None else ssq + t
+    n = col("n").cast("double")
+    return agg, (ssq - n) / (n * (n - F.lit(1.0)))
 
 
 def embedding_diversity(embeddings: DataFrame, round_dp: int = 6) -> DataFrame:
@@ -192,27 +253,7 @@ def embedding_diversity(embeddings: DataFrame, round_dp: int = 6) -> DataFrame:
     self-join. Exact, not an estimate; the brute pair loop is its test
     oracle.
     """
-    dim_row = embeddings.select(F.size("embedding").alias("d")).first()
-    if dim_row is None:
-        raise ValueError("embedding_diversity: empty embeddings input")
-    dim = int(dim_row["d"])
-    norm = _norm(col("embedding"))
-    unit = embeddings.select(
-        *[
-            (col("embedding")[i].cast("double") / norm).alias(f"u{i}")
-            for i in range(dim)
-        ]
-    )
-    agg = unit.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"u{i}").alias(f"s{i}") for i in range(dim)],
-    )
-    ssq = None
-    for i in range(dim):
-        t = col(f"s{i}") * col(f"s{i}")
-        ssq = t if ssq is None else ssq + t
-    n = col("n").cast("double")
-    mean_pair = (ssq - n) / (n * (n - F.lit(1.0)))
+    agg, mean_pair = _unit_sums(embeddings, "embedding_diversity")
     return agg.select(
         col("n").cast("long").alias("n"),
         F.round(mean_pair, round_dp).alias("mean_pairwise_cos"),
@@ -228,35 +269,13 @@ def diversity_by_group(
     (one hash agg to per-group per-dimension sums), so 10^4 sources
     over 10^12 vectors still cost one pass + a groups-sized aggregate.
     Groups with n < 2 are dropped (no pairs to average)."""
-    dim_row = embeddings.select(F.size("embedding").alias("d")).first()
-    if dim_row is None:
-        raise ValueError("diversity_by_group: empty embeddings input")
-    dim = int(dim_row["d"])
-    norm = _norm(col("embedding"))
-    unit = embeddings.select(
-        col(group_col).alias("g"),
-        *[
-            (col("embedding")[i].cast("double") / norm).alias(f"u{i}")
-            for i in range(dim)
-        ],
+    agg, mean_pair = _unit_sums(
+        embeddings, "diversity_by_group", col(group_col).alias("g")
     )
-    agg = unit.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"u{i}").alias(f"s{i}") for i in range(dim)],
-    )
-    ssq = None
-    for i in range(dim):
-        t = col(f"s{i}") * col(f"s{i}")
-        ssq = t if ssq is None else ssq + t
-    n = col("n").cast("double")
-    mean_pair = (ssq - n) / (n * (n - F.lit(1.0)))
-    return (
-        agg.filter(col("n") >= 2)
-        .select(
-            col("g").alias(group_col),
-            col("n").cast("long").alias("n"),
-            F.round(mean_pair, round_dp).alias("mean_pairwise_cos"),
-        )
+    return agg.filter(col("n") >= 2).select(
+        col("g").alias(group_col),
+        col("n").cast("long").alias("n"),
+        F.round(mean_pair, round_dp).alias("mean_pairwise_cos"),
     )
 
 
@@ -276,6 +295,28 @@ def _py_cos(a, b) -> float:
     return dot / (math.sqrt(na) * math.sqrt(nb))
 
 
+def _probe_cells(qvec, seeds, n_probe: int) -> list[int]:
+    """The n_probe seed cells nearest qvec: cosine rounded 9dp like
+    ivf_assign, ties to the smallest cell id."""
+    ranked = sorted((-round(_py_cos(qvec, vec), 9), cid) for cid, vec in seeds)
+    return [cid for _, cid in ranked[:n_probe]]
+
+
+def _seed_sample(embeddings: DataFrame, salt: str, n: int):
+    """The n rows with the smallest portable hash of `salt|vec_id`: a
+    seeded sample with no RNG state, reproducible in the DuckDB oracle."""
+    return (
+        embeddings.select(
+            "vec_id",
+            "embedding",
+            h64(F.concat(lit(f"{salt}|"), col("vec_id").cast("string"))).alias("rk"),
+        )
+        .orderBy("rk", "vec_id")
+        .limit(n)
+        .collect()
+    )
+
+
 def ivf_seeds(embeddings: DataFrame, n_cells: int = 16) -> list[tuple[int, list[float]]]:
     """Deterministic coarse quantizer: the n_cells vectors with the
     smallest portable hash of their id (a seeded 'random' sample with no
@@ -283,18 +324,7 @@ def ivf_seeds(embeddings: DataFrame, n_cells: int = 16) -> list[tuple[int, list[
     sampled seed centroids is the standard no-training baseline; a
     Lloyd-refined codebook drops in here without changing the serving
     shape."""
-    from search_engine_spark.operators.hashing import h64
-
-    ranked = (
-        embeddings.select(
-            "vec_id",
-            "embedding",
-            h64(F.concat(lit("ivf|"), col("vec_id").cast("string"))).alias("rk"),
-        )
-        .orderBy("rk", "vec_id")
-        .limit(n_cells)
-        .collect()
-    )
+    ranked = _seed_sample(embeddings, "ivf", n_cells)
     return [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in ranked]
 
 
@@ -305,13 +335,13 @@ def ivf_assign(
     cell id). Pure codegen column math over literal seed vectors — a
     narrow map, no shuffle; at 10^12 rows this runs inside the scan
     stage and the (vec → cell) table partitions by cell for serving."""
-    entries = []
-    for cid, vec in seeds:
-        sv = F.array(*[lit(float(x)) for x in vec])
-        c = F.round(_dot(col("embedding"), sv) / (_norm(col("embedding")) * _norm(sv)), 9)
-        entries.append(
-            F.struct(c.alias("c"), lit(-cid).cast("long").alias("negcell"))
+    entries = [
+        F.struct(
+            _cos(col("embedding"), _vec_lit(vec), 9).alias("c"),
+            lit(-cid).cast("long").alias("negcell"),
         )
+        for cid, vec in seeds
+    ]
     best = F.array_max(F.array(*entries))
     return embeddings.withColumn("cell", (-best["negcell"]).cast("long"))
 
@@ -332,37 +362,18 @@ def ivf_cosine_topk(
     column — with the assignment table partitioned by cell, a real
     index probe."""
     seeds = ivf_seeds(embeddings, n_cells)
-    qrows = embeddings.filter(col("vec_id") == query_vec_id).limit(1).collect()
-    if not qrows:
-        # unknown/deleted query vector → empty result, not a crash
-        # (r1 behavior, restored per review finding r2)
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_id long, cos double"
-        )
-    qe = qrows[0]["embedding"]
-    ranked = sorted(
-        ((round(_py_cos(qe, vec), 9), cid) for cid, vec in seeds),
-        key=lambda t: (-t[0], t[1]),
-    )
-    probe_cells = [cid for _, cid in ranked[:n_probe]]
+    q = _lookup(embeddings, query_vec_id)
+    if q is None:
+        return _empty(embeddings, "vec_id long, cos double")
     cands = (
         ivf_assign(embeddings, seeds)
-        .filter(col("cell").isin(probe_cells) & (col("vec_id") != query_vec_id))
+        .filter(
+            col("cell").isin(_probe_cells(q["embedding"], seeds, n_probe))
+            & (col("vec_id") != query_vec_id)
+        )
         .select("vec_id", "embedding")
     )
-    qe_col = F.array(*[lit(float(x)) for x in qe])
-    return (
-        cands.select(
-            "vec_id",
-            F.round(
-                _dot(col("embedding"), qe_col)
-                / (_norm(col("embedding")) * _norm(qe_col)),
-                6,
-            ).alias("cos"),
-        )
-        .orderBy(col("cos").desc(), col("vec_id").asc())
-        .limit(k)
-    )
+    return _rerank(cands, q["embedding"], k)
 
 
 def build_lsh_index(
@@ -522,47 +533,64 @@ def lsh_index_topk(
 ) -> DataFrame:
     """Probe a build_lsh_index table: the query's bucket keys are
     computed driver-side (py_hyperplane_sigs — bit-identical to the
-    build's Spark expression), and candidates come from a scan whose
-    (t, sig) predicates are PARTITION filters — Catalyst prunes every
-    non-matching bucket directory at planning time (plan-asserted in
-    tests/test_plans.py). Results are identical to the query-time
-    lsh_cosine_topk (same candidate semantics, same f64 rerank).
+    build's Spark expression), and candidates come from a scan filtered
+    on the (t, sig) bucket predicate. On the default sorted layout `t`
+    is a partition filter and the `sig` predicate is pushed to the
+    parquet scan, which skips row groups by their sig min/max; on
+    layout="partitioned" both are partition filters and Catalyst prunes
+    every non-matching bucket directory at planning time (both
+    plan-asserted in tests/test_plans.py). Results are identical to the
+    query-time lsh_cosine_topk (same candidate semantics, same f64
+    rerank).
 
-    `index` is a path OR the DataFrame from one spark.read.parquet of
-    that path: a serving loop MUST load once and probe many — passing
-    the path re-lists the 2^P·n_tables partition directories per query
+    `index` is a path OR the DataFrame from one load_lsh_index of that
+    path: a serving loop MUST load once and probe many — passing the
+    path re-lists the layout's partition directories per query
     (measured ~4 s/probe at sf0.01 vs sub-second on a held DataFrame).
     """
-    from search_engine_spark.operators.hashing import py_hyperplane_sigs
-
     qsigs = py_hyperplane_sigs(query_vec, dim, n_planes, n_tables)
     idx = load_lsh_index(spark, index) if isinstance(index, str) else index
-    per_table = [
-        (col("t") == t)
-        & col("sig").isin(
-            [int(s) for s in probe_keys(int(qsigs[t]), n_planes, probe_hamming)]
-        )
-        for t in range(n_tables)
-    ]
-    bucket_pred = per_table[0]
-    for p in per_table[1:]:
-        bucket_pred = bucket_pred | p
-    cands = idx.filter(bucket_pred)
+    cands = idx.filter(_bucket_pred(_probe_sigs(qsigs, n_planes, probe_hamming)))
     if query_vec_id is not None:
         cands = cands.filter(col("vec_id") != query_vec_id)
-    cands = cands.select("vec_id", "embedding").distinct()
-    qe_col = F.array(*[lit(float(x)) for x in query_vec])
+    return _rerank(cands.select("vec_id", "embedding").distinct(), query_vec, k)
+
+
+def _probe_sigs(qsigs, n_planes: int, probe_hamming: int) -> dict[int, list[int]]:
+    """Each table's probe keys for one query signature per table."""
+    return {
+        t: probe_keys(int(s), n_planes, probe_hamming) for t, s in enumerate(qsigs)
+    }
+
+
+def _bucket_pred(keys_by_table: dict[int, list[int]]):
+    """OR over tables of (t = T AND sig IN keys): the bucket probe, a
+    filter on the t/sig columns of either index layout."""
+    pred = None
+    for t, keys in keys_by_table.items():
+        p = (col("t") == t) & col("sig").isin(keys)
+        pred = p if pred is None else (pred | p)
+    return pred
+
+
+def _batch_topk(spark, cands: DataFrame, queries, k: int, exclude_self: bool):
+    """The batch probe's verification step: (query_id, vec_id,
+    embedding) candidates, minus each query's own vector when asked,
+    exact cosine against the broadcast query vectors, then k rows per
+    query_id under the result order."""
+    qvecs = spark.createDataFrame(
+        [(int(qid), [float(x) for x in vec]) for qid, vec in queries.items()],
+        "query_id long, qe array<double>",
+    )
+    if exclude_self:
+        cands = cands.filter(col("vec_id") != col("query_id"))
+    scored = _scored(cands.join(F.broadcast(qvecs), "query_id"), col("qe"), "query_id")
+    w = Window.partitionBy("query_id").orderBy(*_order())
     return (
-        cands.select(
-            "vec_id",
-            F.round(
-                _dot(col("embedding"), qe_col)
-                / (_norm(col("embedding")) * _norm(qe_col)),
-                6,
-            ).alias("cos"),
-        )
-        .orderBy(col("cos").desc(), col("vec_id").asc())
-        .limit(k)
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(col("_rn") <= k)
+        .drop("_rn")
+        .orderBy("query_id", *_order())
     )
 
 
@@ -581,8 +609,8 @@ def lsh_index_topk_batch(
     job — the serving-loop shape. A per-query lsh_index_topk loop pays
     the fixed job-scheduling constant per query (~1-2 s at toy scale,
     and Q sequential barriers at any scale); here the scan reads the
-    UNION of every query's probe buckets once (still a static partition
-    filter — pruned at planning time), then a broadcast join against
+    UNION of every query's probe buckets once (the same bucket
+    predicate, pruned as in lsh_index_topk), then a broadcast join against
     the tiny (query_id, t, sig) probe-key relation routes candidates to
     their queries, and one window per query_id takes top-k.
 
@@ -594,52 +622,22 @@ def lsh_index_topk_batch(
 
     Returns (query_id, vec_id, cos), k rows per query.
     """
-    from search_engine_spark.operators.hashing import py_hyperplane_sigs
-
     idx = load_lsh_index(spark, index) if isinstance(index, str) else index
     qkey_rows = []
     keys_by_table: dict[int, set[int]] = {t: set() for t in range(n_tables)}
     for qid, vec in queries.items():
         qsigs = py_hyperplane_sigs(vec, dim, n_planes, n_tables)
-        for t in range(n_tables):
-            for s in probe_keys(int(qsigs[t]), n_planes, probe_hamming):
-                qkey_rows.append((int(qid), t, int(s)))
-                keys_by_table[t].add(int(s))
-
-    bucket_pred = None
-    for t in range(n_tables):
-        p = (col("t") == t) & col("sig").isin(sorted(keys_by_table[t]))
-        bucket_pred = p if bucket_pred is None else (bucket_pred | p)
-
+        for t, keys in _probe_sigs(qsigs, n_planes, probe_hamming).items():
+            qkey_rows += [(int(qid), t, s) for s in keys]
+            keys_by_table[t].update(keys)
     qkeys = spark.createDataFrame(qkey_rows, "query_id long, t int, sig long")
-    qvecs = spark.createDataFrame(
-        [(int(qid), [float(x) for x in vec]) for qid, vec in queries.items()],
-        "query_id long, qe array<double>",
-    )
     cands = (
-        idx.filter(bucket_pred)
+        idx.filter(_bucket_pred({t: sorted(v) for t, v in keys_by_table.items()}))
         .join(F.broadcast(qkeys), ["t", "sig"])
         .select("query_id", "vec_id", "embedding")
         .distinct()
     )
-    if exclude_self:
-        cands = cands.filter(col("vec_id") != col("query_id"))
-    scored = cands.join(F.broadcast(qvecs), "query_id").select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _dot(col("embedding"), col("qe"))
-            / (_norm(col("embedding")) * _norm(col("qe"))),
-            6,
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(col("cos").desc(), col("vec_id").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", col("cos").desc(), col("vec_id").asc())
-    )
+    return _batch_topk(spark, cands, queries, k, exclude_self)
 
 
 def ivf_index_topk_batch(
@@ -658,45 +656,18 @@ def ivf_index_topk_batch(
     seeds, assign = (
         load_ivf_index(spark, index) if isinstance(index, str) else index
     )
-    qcell_rows = []
-    all_cells: set[int] = set()
-    for qid, vec in queries.items():
-        ranked = sorted(
-            ((round(_py_cos(vec, svec), 9), cid) for cid, svec in seeds),
-            key=lambda t: (-t[0], t[1]),
-        )
-        for _, cid in ranked[:n_probe]:
-            qcell_rows.append((int(qid), int(cid)))
-            all_cells.add(int(cid))
-
+    qcell_rows = [
+        (int(qid), int(cid))
+        for qid, vec in queries.items()
+        for cid in _probe_cells(vec, seeds, n_probe)
+    ]
     qcells = spark.createDataFrame(qcell_rows, "query_id long, cell long")
-    qvecs = spark.createDataFrame(
-        [(int(qid), [float(x) for x in vec]) for qid, vec in queries.items()],
-        "query_id long, qe array<double>",
-    )
     cands = (
-        assign.filter(col("cell").isin(sorted(all_cells)))
+        assign.filter(col("cell").isin(sorted({c for _, c in qcell_rows})))
         .join(F.broadcast(qcells), "cell")
         .select("query_id", "vec_id", "embedding")
     )
-    if exclude_self:
-        cands = cands.filter(col("vec_id") != col("query_id"))
-    scored = cands.join(F.broadcast(qvecs), "query_id").select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _dot(col("embedding"), col("qe"))
-            / (_norm(col("embedding")) * _norm(col("qe"))),
-            6,
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(col("cos").desc(), col("vec_id").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", col("cos").desc(), col("vec_id").asc())
-    )
+    return _batch_topk(spark, cands, queries, k, exclude_self)
 
 
 def build_ivf_index(
@@ -738,11 +709,7 @@ def ivf_index_add(new_embeddings: DataFrame, path: str) -> None:
     every cell) and parquet-append into the cell-partitioned
     assignment table. O(batch) narrow work + one append; probe results
     equal a frozen-seed full rebuild over the union (parity-tested)."""
-    spark = new_embeddings.sparkSession
-    seeds = [
-        (int(r["cell"]), [float(x) for x in r["seed"]])
-        for r in spark.read.parquet(f"{path}/seeds").collect()
-    ]
+    seeds = _read_seeds(new_embeddings.sparkSession, path)
     ivf_assign(new_embeddings, seeds).repartition("cell").write.mode(
         "append"
     ).partitionBy("cell").parquet(f"{path}/assign")
@@ -754,11 +721,15 @@ def load_ivf_index(spark, path: str):
     Probing via the handle skips the per-query seeds collect and
     partition-directory listing; the anti-join sits above the scan so
     cell partition pruning is unaffected."""
-    seeds = [
+    seeds = _read_seeds(spark, path)
+    return seeds, _layout.live(spark, path, spark.read.parquet(f"{path}/assign"))
+
+
+def _read_seeds(spark, path: str) -> list[tuple[int, list[float]]]:
+    return [
         (int(r["cell"]), [float(x) for x in r["seed"]])
         for r in spark.read.parquet(f"{path}/seeds").collect()
     ]
-    return seeds, _layout.live(spark, path, spark.read.parquet(f"{path}/assign"))
 
 
 def ivf_index_topk(
@@ -787,29 +758,12 @@ def ivf_index_topk(
     seeds, assign = (
         load_ivf_index(spark, index) if isinstance(index, str) else index
     )
-    ranked = sorted(
-        ((round(_py_cos(query_vec, vec), 9), cid) for cid, vec in seeds),
-        key=lambda t: (-t[0], t[1]),
-    )
-    probe_cells = [cid for _, cid in ranked[:n_probe]]
-    cands = assign.filter(col("cell").isin(probe_cells))
+    cands = assign.filter(col("cell").isin(_probe_cells(query_vec, seeds, n_probe)))
     if label is not None:
         cands = cands.filter(col("label") == label)
     if query_vec_id is not None:
         cands = cands.filter(col("vec_id") != query_vec_id)
-    qe_col = F.array(*[lit(float(x)) for x in query_vec])
-    return (
-        cands.select(
-            "vec_id",
-            F.round(
-                _dot(col("embedding"), qe_col)
-                / (_norm(col("embedding")) * _norm(qe_col)),
-                6,
-            ).alias("cos"),
-        )
-        .orderBy(col("cos").desc(), col("vec_id").asc())
-        .limit(k)
-    )
+    return _rerank(cands, query_vec, k)
 
 
 def probe_keys(qsig: int, n_planes: int, probe_hamming: int) -> list[int]:
@@ -852,52 +806,17 @@ def lsh_cosine_topk(
     sig_col = hyperplane_sigs(col("embedding"), dim, n_planes, n_tables)
     with_sig = embeddings.select("vec_id", "embedding", sig_col.alias("sigs"))
 
-    qrows = (
-        with_sig.filter(col("vec_id") == query_vec_id)
-        .select("sigs", "embedding")
-        .limit(1)
-        .collect()
-    )
-    if not qrows:
-        # unknown/deleted query vector → empty result, not a crash
-        # (r1 behavior, restored per review finding r2)
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_id long, cos double"
-        )
-    qsigs, qe = qrows[0]["sigs"], qrows[0]["embedding"]
-
-    sigs = with_sig.select(
-        "vec_id", "embedding", F.posexplode("sigs").alias("t", "sig")
-    )
-    per_table = [
-        (col("t") == t)
-        & col("sig").isin(
-            [int(s) for s in probe_keys(int(qsigs[t]), n_planes, probe_hamming)]
-        )
-        for t in range(n_tables)
-    ]
-    bucket_pred = per_table[0]
-    for p in per_table[1:]:
-        bucket_pred = bucket_pred | p
+    q = _lookup(with_sig, query_vec_id, "sigs", "embedding")
+    if q is None:
+        return _empty(embeddings, "vec_id long, cos double")
     cands = (
-        sigs.filter(col("vec_id") != query_vec_id)
-        .filter(bucket_pred)
+        with_sig.select("vec_id", "embedding", F.posexplode("sigs").alias("t", "sig"))
+        .filter(col("vec_id") != query_vec_id)
+        .filter(_bucket_pred(_probe_sigs(q["sigs"], n_planes, probe_hamming)))
         .select("vec_id", "embedding")
         .distinct()
     )
-    qe_col = F.array(*[lit(float(x)) for x in qe])
-    return (
-        cands.select(
-            "vec_id",
-            F.round(
-                _dot(col("embedding"), qe_col)
-                / (_norm(col("embedding")) * _norm(qe_col)),
-                6,
-            ).alias("cos"),
-        )
-        .orderBy(col("cos").desc(), col("vec_id").asc())
-        .limit(k)
-    )
+    return _rerank(cands, q["embedding"], k)
 
 
 # ---- k-means topic clustering ----------------------------------------------
@@ -909,18 +828,7 @@ def kmeans_seeds(embeddings: DataFrame, k: int = 8) -> list[list[float]]:
     Coordinates are rounded to 6dp — every centroid the algorithm ever
     uses lives on the same fixed-point grid, which is what makes the
     DuckDB oracle value-exact across engines."""
-    from search_engine_spark.operators.hashing import h64
-
-    ranked = (
-        embeddings.select(
-            "vec_id",
-            "embedding",
-            h64(F.concat(lit("km|"), col("vec_id").cast("string"))).alias("rk"),
-        )
-        .orderBy("rk", "vec_id")
-        .limit(k)
-        .collect()
-    )
+    ranked = _seed_sample(embeddings, "km", k)
     return [[round(float(x), 6) for x in r["embedding"]] for r in ranked]
 
 
@@ -932,27 +840,25 @@ def kmeans_assign(
     column math over literal centroid vectors — a narrow map that runs
     inside the scan stage, no shuffle, so assignment costs one pass
     over the relation regardless of scale."""
-    entries = []
-    for cid, vec in enumerate(centroids):
-        cv = F.array(*[lit(float(x)) for x in vec])
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    col("embedding"),
-                    cv,
-                    lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-                ),
-                lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            9,
-        )
-        entries.append(
-            F.struct(d2.alias("d2"), lit(cid).cast("long").alias("cell"))
-        )
-    best = F.array_min(F.array(*entries))
+    best = _nearest(col("embedding"), centroids, "cell")
     return embeddings.withColumn("cell", best["cell"]).withColumn(
         "d2", best["d2"]
+    )
+
+
+def _nearest(vec, centroids: list[list[float]], name: str):
+    """struct(d2, name) of the nearest literal centroid: squared L2
+    rounded to the 9dp grid, ties to the smallest centroid index."""
+    return F.array_min(
+        F.array(
+            *[
+                F.struct(
+                    F.round(_d2(vec, _vec_lit(c)), 9).alias("d2"),
+                    lit(cid).cast("long").alias(name),
+                )
+                for cid, c in enumerate(centroids)
+            ]
+        )
     )
 
 
@@ -1026,22 +932,11 @@ def pq_train(
     collected and re-literalized, so per-iteration shuffle payload is
     independent of corpus size.
     """
-    from search_engine_spark.operators.hashing import h64
-
     dim = len(embeddings.select("embedding").first()["embedding"])
     assert dim % m == 0, f"dim {dim} not divisible by m={m}"
     dsub = dim // m
 
-    seeds = (
-        embeddings.select(
-            "vec_id",
-            "embedding",
-            h64(F.concat(lit("pq|"), col("vec_id").cast("string"))).alias("rk"),
-        )
-        .orderBy("rk", "vec_id")
-        .limit(ks)
-        .collect()
-    )
+    seeds = _seed_sample(embeddings, "pq", ks)
     books = [
         [
             [round(float(x), 6) for x in r["embedding"]][s * dsub : (s + 1) * dsub]
@@ -1092,26 +987,7 @@ def _pq_best(s: int, book: list[list[float]]):
     build from it so codes can never diverge from the trained
     trajectory."""
     dsub = len(book[0])
-    sub = F.slice(col("embedding"), s * dsub + 1, dsub)
-    entries = []
-    for cid, vec in enumerate(book):
-        cv = F.array(*[lit(float(x)) for x in vec])
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    sub,
-                    cv,
-                    lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-                ),
-                lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            9,
-        )
-        entries.append(
-            F.struct(d2.alias("d2"), lit(cid).cast("long").alias("code"))
-        )
-    return F.array_min(F.array(*entries))
+    return _nearest(F.slice(col("embedding"), s * dsub + 1, dsub), book, "code")
 
 
 def pq_assign(
@@ -1175,7 +1051,9 @@ def pq_adc_topk(
     """
     dsub = len(codebooks[0][0])
     if query_vec is None:
-        qrow = embeddings.filter(col("vec_id") == query_vec_id).first()
+        qrow = _lookup(embeddings, query_vec_id)
+        if qrow is None:
+            return _empty(embeddings, "vec_id long, adc double")
         query_vec = [float(x) for x in qrow["embedding"]]
     q = query_vec
     if codes is None:
@@ -1194,11 +1072,12 @@ def pq_adc_topk(
         )
         term = F.element_at(lut, (col("codes")[s] + 1).cast("int"))
         adc = term if adc is None else adc + term
-    return (
-        codes.filter(col("vec_id") != query_vec_id)
-        .select("vec_id", F.round(adc, 6).alias("adc"))
-        .orderBy(col("adc").asc(), col("vec_id").asc())
-        .limit(k)
+    return _top(
+        codes.filter(col("vec_id") != query_vec_id).select(
+            "vec_id", F.round(adc, 6).alias("adc")
+        ),
+        k,
+        "adc",
     )
 
 
@@ -1216,27 +1095,21 @@ def pq_topk_rerank(
     in tests), and the returned order/distances are exact for whatever
     the shortlist contains.
     """
-    qrow = embeddings.filter(col("vec_id") == query_vec_id).first()
+    qrow = _lookup(embeddings, query_vec_id)
+    if qrow is None:
+        return _empty(embeddings, "vec_id long, d2 double")
     q = [float(x) for x in qrow["embedding"]]
     # the query row is fetched ONCE and threaded through to the ADC scan
     short = pq_adc_topk(
         embeddings, codebooks, query_vec_id, k=candidates, query_vec=q
     )
-    qcol = F.array(*[lit(v) for v in q])
-    d2 = F.aggregate(
-        F.zip_with(
-            col("embedding"),
-            qcol,
-            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
+    d2 = F.round(_d2(col("embedding"), _vec_lit(q)), 6)
+    return _top(
+        embeddings.join(F.broadcast(short.select("vec_id")), "vec_id").select(
+            "vec_id", d2.alias("d2")
         ),
-        lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        embeddings.join(F.broadcast(short.select("vec_id")), "vec_id")
-        .select("vec_id", F.round(d2, 6).alias("d2"))
-        .orderBy(col("d2").asc(), col("vec_id").asc())
-        .limit(k)
+        k,
+        "d2",
     )
 
 
@@ -1250,26 +1123,10 @@ def _within_cell_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     b = emb.select(
         "cell", col("vec_id").alias("dst"), col("embedding").alias("eb")
     )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     return (
         a.join(b, "cell")
         .filter(col("src") < col("dst"))
-        .select(
-            "src",
-            "dst",
-            F.round(dot / (norm(col("ea")) * norm(col("eb"))), 6).alias("cos"),
-        )
+        .select("src", "dst", _cos(col("ea"), col("eb")).alias("cos"))
         .filter(col("cos") >= threshold)
         .select("src", "dst")
     )
@@ -1281,16 +1138,8 @@ def _cell_tightness(emb: DataFrame) -> DataFrame:
     scalar that certifies a cell as an all-pairs near-dup ball (see
     semdedup's guard). Two hash aggs over (cell, dim) sums; nothing
     quadratic."""
-    dim = int(emb.select(F.size("embedding").alias("d")).first()["d"])
-    nrm = _norm(col("embedding"))
-    u = emb.select(
-        "cell",
-        "vec_id",
-        *[
-            (col("embedding")[i].cast("double") / nrm).alias(f"u{i}")
-            for i in range(dim)
-        ],
-    )
+    dim = _dim(emb, "semdedup")
+    u = emb.select("cell", "vec_id", *_units(dim))
     cent = u.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n"),
         *[F.sum(f"u{i}").alias(f"c{i}") for i in range(dim)],
@@ -1500,8 +1349,6 @@ def cluster_balanced_sample(
     `family="portable"` makes membership replayable outside Spark
     (oracle gate); default xxhash64 stays in codegen.
     """
-    from search_engine_spark.operators.hashing import h64
-
     if n < 0:
         raise ValueError(f"n must be >= 0, got {n}")
     cells = kmeans_clusters(embeddings, k=k, iters=iters).select(

@@ -188,3 +188,48 @@ def test_compaction_survives_a_crash_at_every_step(
         assert load() == before, f"compaction after crash at step {n}"
         assert _leftovers(scan) == []
     assert n > 4, "the compaction made fewer renames/deletes than expected"
+
+
+@pytest.mark.parametrize("partition_by", [["p"], None])
+def test_merge_table_survives_a_crash_at_every_step(
+    spark, tmp_path, monkeypatch, partition_by
+):
+    """Crash a merge at each rename/delete in turn: re-running it
+    succeeds, serves each key once with its new value, keeps `p` an
+    integer partition column and leaves no `__old` or temp sibling."""
+    from search_engine_spark.catalog import merge_table
+
+    base = spark.createDataFrame(
+        [(k, k % 3, f"v{k}") for k in range(6)], "k long, p int, v string"
+    )
+    src = spark.createDataFrame(
+        [(k, k % 3, f"u{k}") for k in (1, 2, 7)], "k long, p int, v string"
+    )
+    want = sorted(
+        [(k, k % 3, f"v{k}") for k in (0, 3, 4, 5)]
+        + [(k, k % 3, f"u{k}") for k in (1, 2, 7)]
+    )
+
+    def rows(path):
+        df = spark.read.parquet(path)
+        assert dict(df.dtypes)["p"] == "int"
+        return sorted(map(tuple, df.select("k", "p", "v").collect()))
+
+    for n in itertools.count(1):
+        root = tmp_path / f"m{n}"
+        path = str(root / "t")
+        merge_table(base, path, keys=["k"], partition_by=partition_by)
+        with monkeypatch.context() as m:
+            _crash_at(m, n)
+            try:
+                merge_table(src, path, keys=["k"], partition_by=partition_by)
+            except _Crash:
+                pass
+            else:
+                break
+        merge_table(src, path, keys=["k"], partition_by=partition_by)
+        assert rows(path) == want, f"merge after crash at step {n}"
+        assert _leftovers(path) == [] and _leftovers(root) == []
+        assert os.listdir(root) == ["t"]
+    assert rows(path) == want
+    assert n > 4, "the merge made fewer renames/deletes than expected"

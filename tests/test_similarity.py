@@ -116,16 +116,28 @@ def test_ivf_assignment_is_total_partition(spark):
 
 
 def test_topk_missing_query_vector_returns_empty(spark):
-    """Review finding: an unknown query_vec_id must yield an empty
-    result (the r1 contract), not an IndexError."""
+    """An unknown query_vec_id yields an empty frame of the call's own
+    schema on every by-id path, not an IndexError/TypeError/KeyError."""
     from search_engine_spark.operators.similarity import (
         ivf_cosine_topk,
         lsh_cosine_topk,
+        pq_adc_topk,
+        pq_topk_rerank,
+        pq_train,
+        rocchio_cosine_topk,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    assert lsh_cosine_topk(emb, 10**9).count() == 0
-    assert ivf_cosine_topk(emb, 10**9).count() == 0
+    books = pq_train(emb, m=8, ks=4, iters=0)
+    for out, score in (
+        (lsh_cosine_topk(emb, 10**9), "cos"),
+        (ivf_cosine_topk(emb, 10**9), "cos"),
+        (pq_adc_topk(emb, books, query_vec_id=999_999), "adc"),
+        (pq_topk_rerank(emb, books, query_vec_id=999_999), "d2"),
+        (rocchio_cosine_topk(emb, 999_999, [1, 2]), "cos"),
+    ):
+        assert out.count() == 0
+        assert out.schema.simpleString() == f"struct<vec_id:bigint,{score}:double>"
 
 
 def test_lsh_index_topk_equals_querytime(spark, tmp_path):
