@@ -981,11 +981,10 @@ def pq_train(
 
 
 def _pq_best(s: int, book: list[list[float]]):
-    """struct(d2, code) of subspace s's nearest codebook entry — the ONE
-    place the PQ distance/rounding/tie rule lives (squared L2 rounded to
-    the 9dp grid, ties → smallest code); pq_assign and pq_encode both
-    build from it so codes can never diverge from the trained
-    trajectory."""
+    """struct(d2, code) of subspace s's nearest codebook entry (the
+    kmeans_assign rule: squared L2 rounded to the 9dp grid, ties →
+    smallest code); pq_assign and pq_encode both build from it so codes
+    can never diverge from the trained trajectory."""
     dsub = len(book[0])
     return _nearest(F.slice(col("embedding"), s * dsub + 1, dsub), book, "code")
 
