@@ -630,3 +630,36 @@ def test_significant_terms_never_shuffles_postings_on_doc(spark, stored_index):
     )
     assert "SortMergeJoin" not in plan, plan[:3000]
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("scorer", ["lm_dirichlet", "jm", "absolute_discount"])
+def test_lm_scorers_keep_the_serving_plan_shape(spark, stored_index, scorer):
+    """Each LM smoother serves on the shared match: the dictionary seek
+    reaches the postings scan, the small sides are broadcast and the
+    per-query cut compiles to WindowGroupLimit."""
+    from search_engine_spark.operators.query import search
+
+    _, idx = stored_index
+    plan = _plan(search(idx, spark, {0: "hippopotamus ladder"}, scorer=scorer))
+    assert "In(term" in plan, plan[:2000]
+    assert "BroadcastHashJoin" in plan
+    assert "WindowGroupLimit" in plan, plan[:3000]
+
+
+def test_bm25f_keeps_the_serving_plan_shape(spark, stored_index):
+    """score_bm25f prunes the body postings at the scan, broadcasts the
+    query terms and cuts per query with WindowGroupLimit."""
+    from search_engine_spark.operators.query import score_bm25f
+
+    _, idx = stored_index
+    terms = ["hippopotamus", "ladder"]
+    anchors = idx.doc_stats.limit(20).select(
+        "doc_id",
+        F.lit("ladder").alias("term"),
+        F.lit(2).cast("long").alias("tf_anchor"),
+    )
+    qt = queries_to_terms(spark, {0: "hippopotamus ladder"})
+    plan = _plan(score_bm25f(idx, anchors, qt, k=10, terms=terms))
+    assert "In(term" in plan, plan[:2000]
+    assert "BroadcastHashJoin" in plan
+    assert "WindowGroupLimit" in plan, plan[:3000]
