@@ -50,6 +50,7 @@ from search_engine_spark.operators.compression import (
     varbyte_encode,
 )
 from search_engine_spark.operators.index_build import InvertedIndex
+from search_engine_spark.operators.query import _f64, topk
 
 BLOCKS_SCHEMA = (
     "bucket int, term string, block_id int, n int, min_doc long, "
@@ -381,8 +382,6 @@ def block_search(
         per_bucket, "query_id int, doc_id long, score double"
     )
     # same Q7-tie-break window-limit merge as the row-postings path
-    from search_engine_spark.operators.query import topk
-
     # round BEFORE the final window when comparing against a rounded
     # oracle, so sub-grain score differences tie and break on doc_id
     if round_dp is not None:
@@ -390,77 +389,61 @@ def block_search(
     return topk(local, k)
 
 
-def bm25f_contributions(
+def _bm25f_contrib(
     index: InvertedIndex,
     anchor_tf: DataFrame,
+    terms: list[str] | None = None,
     w_anchor: float = 2.0,
     b_body: float = 0.75,
     b_anchor: float = 0.5,
     k1: float = 1.2,
 ) -> DataFrame:
-    """(term, doc_id, tf, score): the QUERY-INDEPENDENT per-posting
+    """(term, doc_id, tf, score): the query-independent per-posting
     BM25F contribution c_td = idf_t · x_td / (k1 + x_td), with
-    x_td = Σ_f w_f·tf_tdf/(1 − b_f + b_f·len_df/avglen_f) over body +
-    anchor fields — identical math to query.score_bm25f:423-? but with
-    no query restriction, because a serving index must cover every
-    term. BM25F's total is Σ_t c_td: additive over terms with
-    c_td ≥ 0, so the block TA pruning (per-block max c as the upper
-    bound) remains EXACT for it.
+    x_td = Σ_f w_f·tf_tdf/(1 − b_f + b_f·len_df/avglen_f) over the body
+    (index postings, w = 1) and anchor fields; `tf` is the combined raw
+    field tf. BM25F's total is Σ_t c_td, additive with c_td ≥ 0.
 
-    One groupBy(term, doc_id) shuffle merges the two field relations;
-    `tf` stored in the blocks is the combined raw field tf (diagnostic
-    only — the serving path never reads tf_bytes).
-    """
-    anchor_len = anchor_tf.groupBy("doc_id").agg(
-        F.sum("tf_anchor").alias("alen")
-    )
+    One groupBy(term, doc_id) merges the two field relations (x sums at
+    most 2 rows). With `terms`, both field scans and term_stats are
+    isin-pruned (term_stats then broadcast); avglen_anchor is always
+    taken over ALL anchors, so pruning never changes a contribution."""
+    anchor_len = anchor_tf.groupBy("doc_id").agg(F.sum("tf_anchor").alias("alen"))
     avg_alen = anchor_len.agg(F.avg("alen")).first()[0]
     if avg_alen is None:
+        # no anchors at all (edge-less graph): the anchor branch yields
+        # zero rows anyway — any non-zero divisor keeps the plan valid
         avg_alen = 1.0
+    body, anch = index.postings, anchor_tf
+    ts = index.term_stats.select("term", "bm25_idf")
+    if terms:
+        body, anch, ts = (r.filter(F.col("term").isin(terms)) for r in (body, anch, ts))
+        ts = F.broadcast(ts)
 
-    body_n = index.postings.join(index.doc_stats, "doc_id").select(
-        "term",
-        "doc_id",
-        F.col("tf").cast("long").alias("ftf"),
-        (
-            F.col("tf").cast("double")
-            / (
-                F.lit(1.0 - b_body)
-                + F.lit(b_body)
-                * F.col("dl").cast("double")
-                / F.lit(float(index.avgdl))
-            )
-        ).alias("x"),
-    )
-    anch_n = anchor_tf.join(anchor_len, "doc_id").select(
-        "term",
-        "doc_id",
-        F.col("tf_anchor").cast("long").alias("ftf"),
-        (
-            F.lit(w_anchor)
-            * F.col("tf_anchor").cast("double")
-            / (
-                F.lit(1.0 - b_anchor)
-                + F.lit(b_anchor)
-                * F.col("alen").cast("double")
-                / F.lit(float(avg_alen))
-            )
-        ).alias("x"),
-    )
+    def field(rel, tf, lens, length, avg, b, w=None):
+        num = _f64(tf) if w is None else F.lit(w) * _f64(tf)
+        norm = F.lit(1.0 - b) + F.lit(b) * _f64(length) / F.lit(float(avg))
+        return rel.join(lens, "doc_id").select(
+            "term",
+            "doc_id",
+            F.col(tf).cast("long").alias("ftf"),
+            (num / norm).alias("x"),
+        )
+
+    x = F.col("x")
     return (
-        body_n.unionByName(anch_n)
+        field(body, "tf", index.doc_stats, "dl", index.avgdl, b_body)
+        .unionByName(
+            field(anch, "tf_anchor", anchor_len, "alen", avg_alen, b_anchor, w_anchor)
+        )
         .groupBy("term", "doc_id")
         .agg(F.sum("ftf").alias("tf"), F.sum("x").alias("x"))
-        .join(index.term_stats.select("term", "bm25_idf"), "term")
+        .join(ts, "term")
         .select(
             "term",
             "doc_id",
             F.col("tf").cast("int").alias("tf"),
-            (
-                F.col("bm25_idf")
-                * F.col("x")
-                / (F.lit(k1) + F.col("x"))
-            ).alias("score"),
+            (F.col("bm25_idf") * x / (F.lit(k1) + x)).alias("score"),
         )
     )
 
@@ -482,12 +465,16 @@ def build_block_index_bm25f(
     contributions (body + anchor fields) instead of plain BM25 —
     block_search over it returns exact BM25F top-k with the same
     block-max pruning (property-tested equal to query.score_bm25f).
-    Same one-shuffle layout and knobs as build_block_index."""
+    The contributions come from query._bm25f_contrib unpruned (a
+    serving index covers every term); score_bm25f sums the same
+    builder's query-term-pruned rows. Their total is additive with
+    every c_td ≥ 0, so the block-max bound stays exact. Same
+    one-shuffle layout and knobs as build_block_index."""
     spark = index.postings.sparkSession
     nb = num_buckets or spark.sparkContext.defaultParallelism * 2
     f64 = score_dtype == "float64"
-    contrib = bm25f_contributions(
-        index, anchor_tf, w_anchor, b_body, b_anchor, k1
+    contrib = _bm25f_contrib(
+        index, anchor_tf, None, w_anchor, b_body, b_anchor, k1
     )
     scored = (
         contrib.withColumn(

@@ -43,6 +43,7 @@ from search_engine_spark.operators.hashing import (
     hyperplane_sigs,
     minhash_columns,
 )
+from search_engine_spark.operators.query import _rank_cut
 from search_engine_spark.operators.similarity import _cos
 from search_engine_spark.operators.text_analytics import tokens_df
 
@@ -892,19 +893,12 @@ def select_representatives(
     the topk shape keyed by group instead of query) + one join back —
     nothing corpus-sized crosses more than the group-key shuffle.
     """
-    from pyspark.sql import Window
-
     g = labels.select("doc_id", "keep_id").join(
         scores.select("doc_id", F.col(score_col).alias("_s")), "doc_id"
     )
-    w = Window.partitionBy("keep_id").orderBy(
-        F.col("_s").desc(), F.col("doc_id").asc()
-    )
-    reps = (
-        g.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("keep_id", F.col("doc_id").alias("rep_id"))
-    )
+    reps = _rank_cut(
+        g, 1, ["keep_id"], F.col("_s").desc(), F.col("doc_id").asc()
+    ).select("keep_id", F.col("doc_id").alias("rep_id"))
     return (
         labels.select("doc_id", "keep_id")
         .join(reps, "keep_id")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from search_engine_spark.operators.query import _rank_cut
+
 
 def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
     """(ws, event_type, n, sum_value): tumbling event-time windows."""
@@ -355,11 +357,11 @@ def related_items(
             ).alias("lift"),
         )
     )
-    rw = Window.partitionBy("item").orderBy(
-        F.col("lift").desc(), F.col("n_ab").desc(), F.col("related").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(rw))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+    return _rank_cut(
+        scored,
+        k,
+        ["item"],
+        F.col("lift").desc(),
+        F.col("n_ab").desc(),
+        F.col("related").asc(),
     )

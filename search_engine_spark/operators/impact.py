@@ -32,11 +32,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
-from search_engine_spark.operators.query import _query_terms
+from search_engine_spark.operators.query import _query_terms, _rank_cut
 
 __all__ = ["QuantizedIndex", "quantize_impacts", "quantized_search"]
 
@@ -159,21 +159,9 @@ def quantized_search(
             6,
         ),
     )
-    w = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(
-            F.col("sum_q").desc(),
-            F.col("n_matched").desc(),
-            F.col("doc_id").asc(),
-        )
+    order = (
+        F.col("sum_q").desc(),
+        F.col("n_matched").desc(),
+        F.col("doc_id").asc(),
     )
-    return (
-        ranked.withColumn("rn", w)
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy(
-            "query_id",
-            F.col("sum_q").desc(),
-            F.col("n_matched").desc(),
-            F.col("doc_id").asc(),
-        )
-    )
+    return _rank_cut(ranked, k, ["query_id"], *order).orderBy("query_id", *order)

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -35,6 +35,20 @@ from search_engine_spark.functions.textproc import extract_text_udf, tokenize_ud
 
 K1 = 1.2
 B = 0.75
+
+
+def _bm25_idf(n_docs: int) -> Column:
+    """BM25 idf of the `df` column over an `n_docs` corpus:
+    ln(1 + (N − df + 0.5) / (df + 0.5))."""
+    df = F.col("df")
+    return F.log(F.lit(1.0) + (F.lit(float(n_docs)) - df + 0.5) / (df + 0.5))
+
+
+def _tf_norm(avgdl: float, k1: float = K1, b: float = B) -> Column:
+    """BM25 saturated, length-normalized tf of the `tf` and `dl`
+    columns: tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))."""
+    tf = F.col("tf")
+    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
 
 
 def check_doc_id_collisions(docs: DataFrame) -> int:
@@ -259,7 +273,7 @@ def index_from_raw_postings(
         "df",
         idf.alias("idf"),
         idf.cast("float").alias("idf_f32"),  # quirk Q5: reference scores are f32
-        F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("bm25_idf"),
+        _bm25_idf(n_docs).alias("bm25_idf"),
     )
 
     # precompute the BM25 doc-length normalization into each posting
@@ -270,10 +284,7 @@ def index_from_raw_postings(
             "term",
             "doc_id",
             "tf",
-            (
-                F.col("tf") * (k1 + 1.0)
-                / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl or 1.0)))
-            ).alias("tf_norm"),
+            _tf_norm(avgdl or 1.0, k1, b).alias("tf_norm"),
         )
     )
 

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from search_engine_spark.operators.query import _rank_cut
+
 __all__ = ["cooccurrence_edges", "textrank_keywords"]
 
 
@@ -130,15 +132,8 @@ def textrank_keywords(
     ranked = ws.select(
         "doc_id", "term", F.round("ws", round_dp).alias("score")
     )
-    rw = Window.partitionBy("doc_id").orderBy(
-        col("score").desc(), col("term").asc()
-    )
-    out = (
-        ranked.withColumn("rn", F.row_number().over(rw))
-        .filter(col("rn") <= k)
-        .drop("rn")
-        .orderBy("doc_id", col("score").desc(), col("term").asc())
-    )
+    order = (col("score").desc(), col("term").asc())
+    out = _rank_cut(ranked, k, ["doc_id"], *order).orderBy("doc_id", *order)
     e.unpersist()
     nodes.unpersist()
     return out

@@ -28,8 +28,10 @@ checks value-exact.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from search_engine_spark.operators.query import _bm25, _matched, _rank_cut, topk
 
 
 def positional_postings(docs: DataFrame, tokenizer) -> DataFrame:
@@ -335,8 +337,6 @@ def proximity_bm25(
     standard broadcast-join BM25 aggregate before the top-k window —
     the postings relation itself is never shuffled or re-scanned.
     """
-    from search_engine_spark.operators.query import _bm25, _matched, topk
-
     if pos_index is not None:
         # serving path: isin-pruned scan of the materialized positional
         # index (PushedFilters at the parquet reader — no tokenizer UDF
@@ -431,12 +431,9 @@ def best_passage(
             F.count(F.lit(1)).alias("n_matches"),
         )
     )
-    per_doc = Window.partitionBy("doc_id").orderBy(
-        F.col("n_terms").desc(), F.col("n_matches").desc(), F.col("win").asc()
-    )
+    order = (F.col("n_terms").desc(), F.col("n_matches").desc(), F.col("win").asc())
     best = (
-        wb.withColumn("rn", F.row_number().over(per_doc))
-        .filter(F.col("rn") == 1)
+        _rank_cut(wb, 1, ["doc_id"], *order)
         .select(
             "doc_id",
             (F.col("win") * passage_size).cast("long").alias("passage_start"),

@@ -304,12 +304,9 @@ def did_you_mean(
         .withColumn("dist", F.levenshtein("q", "term"))
         .filter(F.col("dist") <= max_dist)
     )
-    w = Window.partitionBy("q").orderBy(
-        F.col("dist").asc(), F.col("df").desc(), F.col("term").asc()
-    )
+    order = (F.col("dist").asc(), F.col("df").desc(), F.col("term").asc())
     return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _rank_cut(cand, 1, ["q"], *order)
         .select(
             F.col("q").alias("term"),
             F.col("term").alias("suggestion"),
@@ -582,6 +579,8 @@ def sharded_search(
     live; here both stages are one job, which is the point of
     expressing topology as a plan property instead of RPC code.
     """
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     spark = index.postings.sparkSession
     qt, terms = _query_terms(spark, query_terms, tokenized=True)
     if not terms:
@@ -670,34 +669,6 @@ def corrected_search(
     return topk(_bm25(_matched(index, qt, terms), round_dp), k)
 
 
-def score_lm_dirichlet(
-    index: InvertedIndex,
-    query_terms: DataFrame,
-    mu: float = 2000.0,
-    k: int = 10,
-    terms: list[str] | None = None,
-) -> DataFrame:
-    """Query-likelihood ranking with Dirichlet-prior smoothing (Zhai &
-    Lafferty 2001) — the standard LM alternative to BM25, in the
-    rank-equivalent matched-terms decomposition (the query-constant
-    Σ_t ln p(t|C) is dropped, so values can be positive):
-
-        score(q,d) = Σ_t∈q∩d ln(1 + tf_td / (μ·p(t|C)))
-                     + |q|·ln(μ / (dl_d + μ))
-
-    The candidate set is docs matching ≥1 query term (standard
-    inverted-index retrieval). p(t|C) = cf_t / |C| (collection
-    frequency over total tokens) is computed from the isin-pruned
-    postings scan — rows only for the query terms, a scalar-sized
-    aggregate at any corpus size — and broadcast (`_lm_matched`). dl
-    comes from doc_stats. Ties: score DESC, doc_id ASC (the Q7 rule).
-
-    Scores are ≤ 0 (log-probabilities); only rank matters. Rounded 9dp
-    for oracle comparison.
-    """
-    return topk(_lm_dirichlet_scored(index, query_terms, mu, terms), k)
-
-
 def _lm_matched(
     index: InvertedIndex, query_terms: DataFrame, terms: list[str] | None
 ) -> DataFrame:
@@ -724,42 +695,74 @@ def _lm_matched(
     )
 
 
-def _lm_dirichlet_scored(
+def _lm(
+    index: InvertedIndex,
+    query_terms: DataFrame,
+    terms: list[str] | None,
+    per_term,
+    tail=None,
+    doc: tuple[DataFrame, ...] = (),
+) -> DataFrame:
+    """Uncut (query_id, doc_id, score) of one query-likelihood smoother
+    in the rank-equivalent matched-terms decomposition (the
+    doc-independent Σ_t ln p(t|C) is dropped):
+
+        score = round(Σ_{t∈q∩d} per_term + |q|·tail, 9)
+
+    `per_term` reads the `_lm_matched` row (tf, p_c) and the columns of
+    the `doc` relations, joined on doc_id before the one aggregate;
+    `tail` (absent: no length term) reads dl and the `doc` columns,
+    joined again after it on the matched-doc-sized sums."""
+    m = _lm_matched(index, query_terms, terms)
+    for d in doc:
+        m = m.join(d, "doc_id")
+    s = m.groupBy("query_id", "doc_id").agg(F.sum(per_term).alias("s_matched"))
+    score = F.col("s_matched")
+    if tail is not None:
+        nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
+        for d in (index.doc_stats, *doc):
+            s = s.join(d, "doc_id")
+        s = s.join(F.broadcast(nq), "query_id")
+        score = score + F.col("nq").cast("double") * tail
+    return s.select("query_id", "doc_id", F.round(score, 9).alias("score"))
+
+
+def _f64(name: str):
+    """Column `name` cast to f64."""
+    return F.col(name).cast("double")
+
+
+def _dirichlet(mu: float) -> tuple:
+    """LM-Dirichlet's (per_term, tail) for `_lm` (see score_lm_dirichlet)."""
+    return (
+        F.log(F.lit(1.0) + _f64("tf") / (F.lit(mu) * F.col("p_c"))),
+        F.log(F.lit(mu) / (_f64("dl") + F.lit(mu))),
+    )
+
+
+def score_lm_dirichlet(
     index: InvertedIndex,
     query_terms: DataFrame,
     mu: float = 2000.0,
+    k: int = 10,
     terms: list[str] | None = None,
 ) -> DataFrame:
-    """Uncut LM-Dirichlet scores (see score_lm_dirichlet) — shared by
-    the top-k path and the rescore window."""
-    nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
-    matched_part = (
-        _lm_matched(index, query_terms, terms)
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(
-                F.log(
-                    F.lit(1.0)
-                    + F.col("tf").cast("double") / (F.lit(mu) * F.col("p_c"))
-                )
-            ).alias("s_matched")
-        )
-    )
-    scored = (
-        matched_part.join(index.doc_stats, "doc_id")
-        .join(F.broadcast(nq), "query_id")
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(
-                F.col("s_matched")
-                + F.col("nq").cast("double")
-                * F.log(F.lit(mu) / (F.col("dl").cast("double") + F.lit(mu))),
-                9,
-            ).alias("score"),
-        )
-    )
-    return scored
+    """Query-likelihood ranking with Dirichlet-prior smoothing (Zhai &
+    Lafferty 2001) — the standard LM alternative to BM25; values can be
+    positive since the query constant is dropped (`_lm`):
+
+        score(q,d) = Σ_t∈q∩d ln(1 + tf_td / (μ·p(t|C)))
+                     + |q|·ln(μ / (dl_d + μ))
+
+    The candidate set is docs matching ≥1 query term (standard
+    inverted-index retrieval). p(t|C) = cf_t / |C| (collection
+    frequency over total tokens) is computed from the isin-pruned
+    postings scan — rows only for the query terms, a scalar-sized
+    aggregate at any corpus size — and broadcast (`_lm_matched`). dl
+    comes from doc_stats. Ties: score DESC, doc_id ASC (the Q7 rule).
+    Rounded 9dp for oracle comparison.
+    """
+    return topk(_lm(index, query_terms, terms, *_dirichlet(mu)), k)
 
 
 def score_jelinek_mercer(
@@ -772,9 +775,7 @@ def score_jelinek_mercer(
     """Query-likelihood ranking with Jelinek-Mercer (fixed-λ linear)
     smoothing — the second classic LM smoother next to Dirichlet
     (Zhai & Lafferty 2001: JM favors verbose queries, Dirichlet short
-    ones; an engine offering LM ranking ships both). Matched-terms
-    rank-equivalent decomposition (the doc-independent
-    Σ_t ln((1−λ)p(t|C)) is dropped):
+    ones; an engine offering LM ranking ships both):
 
         score(q,d) = Σ_{t∈q∩d} ln(1 + λ·(tf/dl) / ((1−λ)·p(t|C)))
 
@@ -782,25 +783,9 @@ def score_jelinek_mercer(
     that's the λ-vs-μ trade). Rounded 9dp for oracle comparison;
     ties Q7.
     """
-    scored = (
-        _lm_matched(index, query_terms, terms)
-        .join(index.doc_stats, "doc_id")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.log(
-                        F.lit(1.0)
-                        + F.lit(lam)
-                        * (F.col("tf").cast("double") / F.col("dl").cast("double"))
-                        / (F.lit(1.0 - lam) * F.col("p_c"))
-                    )
-                ),
-                9,
-            ).alias("score")
-        )
-    )
-    return topk(scored, k)
+    p_d = F.lit(lam) * (_f64("tf") / _f64("dl"))
+    per_term = F.log(F.lit(1.0) + p_d / (F.lit(1.0 - lam) * F.col("p_c")))
+    return topk(_lm(index, query_terms, terms, per_term, doc=(index.doc_stats,)), k)
 
 
 def score_absolute_discount(
@@ -815,10 +800,6 @@ def score_absolute_discount(
     seen count, mass redistributed via the doc's distinct-term count):
 
         p_δ(t|d) = max(tf−δ,0)/dl + (δ·|d|_u/dl)·p(t|C)
-
-    Matched-terms rank-equivalent decomposition (dropping the
-    doc-independent Σ_t ln p(t|C)):
-
         score = Σ_{t∈q∩d} ln(1 + max(tf−δ,0)/(δ·|d|_u·p(t|C)))
                 + |q|·ln(δ·|d|_u/dl)
 
@@ -832,43 +813,11 @@ def score_absolute_discount(
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("du"))
     )
-    nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
-    matched_part = (
-        _lm_matched(index, query_terms, terms)
-        .join(du, "doc_id")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(
-                F.log(
-                    F.lit(1.0)
-                    + F.greatest(
-                        F.col("tf").cast("double") - F.lit(delta), F.lit(0.0)
-                    )
-                    / (F.lit(delta) * F.col("du").cast("double") * F.col("p_c"))
-                )
-            ).alias("s_matched")
-        )
-    )
-    scored = (
-        matched_part.join(index.doc_stats, "doc_id")
-        .join(du, "doc_id")
-        .join(F.broadcast(nq), "query_id")
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(
-                F.col("s_matched")
-                + F.col("nq").cast("double")
-                * F.log(
-                    F.lit(delta)
-                    * F.col("du").cast("double")
-                    / F.col("dl").cast("double")
-                ),
-                9,
-            ).alias("score"),
-        )
-    )
-    return topk(scored, k)
+    seen = F.greatest(_f64("tf") - F.lit(delta), F.lit(0.0))
+    d_du = F.lit(delta) * _f64("du")
+    per_term = F.log(F.lit(1.0) + seen / (d_du * F.col("p_c")))
+    tail = F.log(d_du / _f64("dl"))
+    return topk(_lm(index, query_terms, terms, per_term, tail, doc=(du,)), k)
 
 
 def score_bm25f(
@@ -894,80 +843,18 @@ def score_bm25f(
     target, the classic high-precision web field). idf stays the
     body-corpus BM25 idf from term_stats.
 
-    Plan: both field relations are isin-pruned to the query terms at
-    their scans, field-normalized narrowly, unioned (2-row-source
-    union, no join of big relations), then ONE hash agg per
-    (query, doc) and the top-k window — the same single-shuffle budget
-    as plain BM25 plus the anchor scan. Rounded 6dp.
+    Plan: the isin-pruned per-posting contributions
+    (blocks._bm25f_contrib, the scores the BM25F block index stores)
+    ⋈ BROADCAST(query terms) → ONE hash agg per (query, doc) → the
+    top-k window. Rounded 6dp.
     """
-    anchor_len = anchor_tf.groupBy("doc_id").agg(
-        F.sum("tf_anchor").alias("alen")
-    )
-    avg_alen = anchor_len.agg(F.avg("alen")).first()[0]
-    if avg_alen is None:
-        # no anchors at all (edge-less graph): the anchor branch yields
-        # zero rows anyway — any non-zero divisor keeps the plan valid
-        avg_alen = 1.0
-    qt = F.broadcast(query_terms)
+    from search_engine_spark.operators.blocks import _bm25f_contrib
 
-    body = index.postings.select("term", "doc_id", "tf")
-    anch = anchor_tf.select("term", "doc_id", F.col("tf_anchor").alias("tf"))
-    if terms:
-        body = body.filter(F.col("term").isin(terms))
-        anch = anch.filter(F.col("term").isin(terms))
-
-    body_n = (
-        body.join(index.doc_stats, "doc_id")
-        .select(
-            "term",
-            "doc_id",
-            (
-                F.lit(1.0)
-                * F.col("tf").cast("double")
-                / (
-                    F.lit(1.0 - b_body)
-                    + F.lit(b_body)
-                    * F.col("dl").cast("double")
-                    / F.lit(float(index.avgdl))
-                )
-            ).alias("x"),
-        )
-    )
-    anch_n = (
-        anch.join(anchor_len, "doc_id")
-        .select(
-            "term",
-            "doc_id",
-            (
-                F.lit(w_anchor)
-                * F.col("tf").cast("double")
-                / (
-                    F.lit(1.0 - b_anchor)
-                    + F.lit(b_anchor)
-                    * F.col("alen").cast("double")
-                    / F.lit(float(avg_alen))
-                )
-            ).alias("x"),
-        )
-    )
-    ts_q = index.term_stats.select("term", "bm25_idf")
-    if terms:
-        ts_q = ts_q.filter(F.col("term").isin(terms))
+    c = _bm25f_contrib(index, anchor_tf, terms, w_anchor, b_body, b_anchor, k1)
     scored = (
-        body_n.unionByName(anch_n)
-        .join(qt, "term")
-        .groupBy("query_id", "doc_id", "term")
-        .agg(F.sum("x").alias("x"))
-        .join(F.broadcast(ts_q), "term")
+        c.join(F.broadcast(query_terms), "term")
         .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("bm25_idf") * F.col("x") / (F.lit(k1) + F.col("x"))
-                ),
-                6,
-            ).alias("score")
-        )
+        .agg(F.round(F.sum("score"), 6).alias("score"))
     )
     return topk(scored, k)
 
@@ -1154,9 +1041,7 @@ def rescore_topk(
     win = _rank_cut(
         base, window, ["query_id"], F.col("base").desc(), F.col("doc_id").asc()
     )
-    lm = _lm_dirichlet_scored(index, qt, mu=mu, terms=terms).withColumnRenamed(
-        "score", "lm"
-    )
+    lm = _lm(index, qt, terms, *_dirichlet(mu)).withColumnRenamed("score", "lm")
     combined = win.join(lm, ["query_id", "doc_id"]).select(
         "query_id",
         "doc_id",
@@ -1744,6 +1629,8 @@ def decay_search(
     query-time form for priors that change faster than the index
     (freshness does; PageRank doesn't).
     """
+    if not half_life > 0:
+        raise ValueError(f"half_life must be > 0, got {half_life}")
     qt, terms = _query_terms(spark, queries)
     if not terms:
         return spark.createDataFrame([], _HITS)

@@ -34,7 +34,12 @@ from search_engine_spark.operators.index_build import (
     InvertedIndex,
     raw_postings_from_docs,
 )
-from search_engine_spark.operators.query import _bm25, _matched, _query_terms
+from search_engine_spark.operators.query import (
+    _bm25,
+    _matched,
+    _query_terms,
+    _rank_cut,
+)
 
 _PICKS = "rank int, doc_id long, score double"
 
@@ -220,18 +225,12 @@ def collapse_hosts(
     per-query top-N run (N ≥ k·max hosts you expect to crowd), never
     the corpus.
     """
-    from pyspark.sql import Window
-
     d = dims.select("doc_id", F.col(key).alias("_host"))
     g = run.select("query_id", "doc_id", "score").join(d, "doc_id")
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    hw = Window.partitionBy("query_id", "_host").orderBy(*order)
-    qw = Window.partitionBy("query_id").orderBy(*order)
+    per_host = _rank_cut(g, max_per_key, ["query_id", "_host"], *order)
     return (
-        g.withColumn("hr", F.row_number().over(hw))
-        .filter(F.col("hr") <= max_per_key)
-        .withColumn("rn", F.row_number().over(qw))
-        .filter(F.col("rn") <= k)
+        _rank_cut(per_host, k, ["query_id"], *order)
         .select(
             "query_id", "doc_id", "score", F.col("_host").alias(key)
         )

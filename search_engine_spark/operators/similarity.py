@@ -186,6 +186,9 @@ def rocchio_cosine_topk(
     }
     if int(query_vec_id) not in got:
         return _empty(embeddings, "vec_id long, cos double")
+    unknown = [i for i in ids[1:] if i not in got]
+    if unknown:
+        raise ValueError(f"rocchio_cosine_topk: unknown feedback ids {unknown}")
     qv = got[int(query_vec_id)]
     dim = len(qv)
 

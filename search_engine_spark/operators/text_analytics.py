@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from search_engine_spark.operators.index_build import B, K1
+from search_engine_spark.operators.index_build import B, K1, _bm25_idf, _tf_norm
+from search_engine_spark.operators.query import _rank_cut
 
 
 def ws_tokens(c: Column) -> Column:
@@ -99,17 +100,12 @@ def bm25_topk(
     n, avgdl = int(row["n"]), float(row["avgdl"])
     matched = tf.filter(F.col("term").isin(terms))
     df = matched.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_norm = (
-        F.col("tf") * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-    )
     scored = (
         matched.join(F.broadcast(df), "term")
         .join(dl, "doc_id")
         .groupBy("doc_id")
         .agg(
-            F.round(F.sum(idf * tf_norm), 6).alias("score"),
+            F.round(F.sum(_bm25_idf(n) * _tf_norm(avgdl, k1, b)), 6).alias("score"),
             F.count(F.lit(1)).alias("n_matched"),
         )
     )
@@ -186,8 +182,6 @@ def langid_ngram(documents: DataFrame) -> DataFrame:
     trigram explode is the substring/sequence trick, the classify step
     one broadcast join + two aggs.
     """
-    from pyspark.sql import Window
-
     spark = documents.sparkSession
     profiles = F.broadcast(
         spark.createDataFrame(lang_trigram_profiles(), "plang string, tri string")
@@ -218,12 +212,8 @@ def langid_ngram(documents: DataFrame) -> DataFrame:
         (F.col("hits") / F.col("n_tri")).alias("_raw"),
     )
     # order by the RAW ratio (oracle does too); round only for output
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("_raw").desc(), F.col("plang").asc()
-    )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _rank_cut(scored, 1, ["doc_id"], F.col("_raw").desc(), F.col("plang").asc())
         .select(
             "doc_id",
             F.col("plang").alias("pred_lang"),
@@ -575,12 +565,6 @@ def more_like_this(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
     ).collect()[0]
     n, avgdl = int(row["n"]), float(row["avgdl"])
-
-    def idf(df_col):
-        return F.log(
-            F.lit(1.0) + (F.lit(float(n)) - df_col + 0.5) / (df_col + 0.5)
-        )
-
     df_all = term_tf(documents).groupBy("term").agg(
         F.count(F.lit(1)).alias("df")
     )
@@ -589,7 +573,7 @@ def more_like_this(
         .join(df_all, "term")
         .select(
             "term",
-            F.round(F.col("tf") * idf(F.col("df")), 6).alias("w"),
+            F.round(F.col("tf") * _bm25_idf(n), 6).alias("w"),
         )
         .orderBy(F.col("w").desc(), F.col("term").asc())
         .limit(n_terms)
@@ -599,15 +583,11 @@ def more_like_this(
     matched = tf.filter(F.col("term").isin(terms))
     # df over matched == full-corpus df per term (term-equality filter)
     dfq = matched.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    tf_norm = (
-        F.col("tf") * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-    )
     return (
         matched.join(F.broadcast(dfq), "term")
         .join(dl, "doc_id")
         .groupBy("doc_id")
-        .agg(F.round(F.sum(idf(F.col("df")) * tf_norm), 6).alias("score"))
+        .agg(F.round(F.sum(_bm25_idf(n) * _tf_norm(avgdl, k1, b)), 6).alias("score"))
         .filter(F.col("doc_id") != doc_id)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
@@ -798,21 +778,15 @@ def source_keyness(
     signed = F.when(
         k11 * F.col("n") >= F.col("ta") * F.col("ct_all"), llr
     ).otherwise(-llr)
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("llr_r").desc(), F.col("term").asc()
+    ranked = j.select(
+        F.col("g").alias(group_col),
+        "term",
+        k11.cast("long").alias("n"),
+        F.round(signed, round_dp).alias("llr_r"),
     )
-    return (
-        j.select(
-            F.col("g").alias(group_col),
-            "term",
-            k11.cast("long").alias("n"),
-            F.round(signed, round_dp).alias("llr_r"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .withColumnRenamed("llr_r", "llr")
-    )
+    return _rank_cut(
+        ranked, k, [group_col], F.col("llr_r").desc(), F.col("term").asc()
+    ).withColumnRenamed("llr_r", "llr")
 
 
 def divergence_contrib(docs_a: DataFrame, docs_b: DataFrame) -> DataFrame:

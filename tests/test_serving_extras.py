@@ -112,6 +112,18 @@ def test_decay_reorders_before_topk(spark, index):
     assert got == want
 
 
+def test_invalid_shard_count_and_half_life_raise_at_call_time(spark, index):
+    """Rejected when called, not later inside a Spark task as
+    REMAINDER_BY_ZERO / DIVIDE_BY_ZERO on the first read."""
+    ages = index.doc_stats.select("doc_id", F.lit(1.0).alias("age_days"))
+    for n_shards in (0, -1):
+        with pytest.raises(ValueError, match="n_shards"):
+            Q.sharded_search(index, ["spark", "merge"], n_shards=n_shards)
+    for half_life in (0.0, -5.0, float("nan")):
+        with pytest.raises(ValueError, match="half_life"):
+            decay_search(index, spark, QUERY, ages, half_life=half_life)
+
+
 def test_top_hits_by_facet_buckets_and_cut(spark, index):
     from search_engine_spark.operators.query import top_hits_by_facet
 

@@ -512,6 +512,19 @@ def test_rocchio_moves_query_toward_relevant(spark):
     assert ids[0] == 10
 
 
+def test_rocchio_rejects_unknown_feedback_ids(spark):
+    from search_engine_spark.operators.similarity import rocchio_cosine_topk
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match=r"unknown feedback ids \[999999\]"):
+        rocchio_cosine_topk(emb, 0, rel_ids=[1, 999_999])
+    with pytest.raises(ValueError, match=r"\[7\]"):
+        rocchio_cosine_topk(emb, 0, rel_ids=[1], nonrel_ids=[2, 7])
+
+
 def test_embedding_diversity_identity_vs_brute_pairs(spark):
     import itertools
     import math
