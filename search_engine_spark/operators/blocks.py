@@ -465,11 +465,11 @@ def build_block_index_bm25f(
     contributions (body + anchor fields) instead of plain BM25 —
     block_search over it returns exact BM25F top-k with the same
     block-max pruning (property-tested equal to query.score_bm25f).
-    The contributions come from query._bm25f_contrib unpruned (a
-    serving index covers every term); score_bm25f sums the same
-    builder's query-term-pruned rows. Their total is additive with
-    every c_td ≥ 0, so the block-max bound stays exact. Same
-    one-shuffle layout and knobs as build_block_index."""
+    The scores are `_bm25f_contrib` unpruned (a serving index covers
+    every term); score_bm25f sums the same builder's query-term-pruned
+    rows. Their total is additive with every c_td ≥ 0, so the
+    block-max bound stays exact. Same one-shuffle layout and knobs as
+    build_block_index."""
     spark = index.postings.sparkSession
     nb = num_buckets or spark.sparkContext.defaultParallelism * 2
     f64 = score_dtype == "float64"
