@@ -24,7 +24,13 @@ one skeleton on shared private builders, so they share one plan:
   → topk / _rank_cut: rank-limit window (pushed down as
       WindowGroupLimit).
 
-The LM scorers use the same match with p(t|C) attached (_lm_matched).
+The LM family (Dirichlet, Jelinek-Mercer, absolute discount, and the
+rescore window's Dirichlet pass) is one builder, _lm: the same match
+with p(t|C) attached (_lm_matched) → one hash agg of a per-term log
+expression (+ |q|·tail) rounded 9dp; each smoother only supplies its
+two expressions. BM25F sums the per-posting contributions the BM25F
+block index stores (blocks._bm25f_contrib, isin-pruned to the query
+terms) after a broadcast join with the query terms.
 
 Feature-specific steps (tombstone anti-join, keyset cursor, shard
 window, decay multiply, …) sit between the aggregate and the cut on
