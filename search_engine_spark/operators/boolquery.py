@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.index_build import InvertedIndex
-from search_engine_spark.operators.query import _query_terms, score_bm25
+from search_engine_spark.operators.query import _bm25, _matched, _query_terms
 
 __all__ = ["parse_boolean", "boolean_search"]
 
@@ -191,9 +191,7 @@ def boolean_search(
     survivors = ev(tree)
     qt, terms = _query_terms(spark, _positive_terms(tree), tokenized=True)
     if terms:
-        scored = score_bm25(index, qt, k=2_147_483_647, terms=terms).select(
-            "doc_id", "score"
-        )
+        scored = _bm25(_matched(index, qt, terms)).select("doc_id", "score")
     else:
         scored = spark.createDataFrame([], "doc_id long, score double")
     return (

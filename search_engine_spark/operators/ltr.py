@@ -42,6 +42,7 @@ from search_engine_spark.operators.query import (
     _bm25_agg,
     _matched,
     _rank_cut,
+    _sorted,
     topk,
 )
 
@@ -199,4 +200,4 @@ def hard_negatives(
         ["query_id", "doc_id"],
         "left_anti",
     )
-    return _rank_cut(neg, n_neg, ["query_id"], "rank").orderBy("query_id", "rank")
+    return _sorted(_rank_cut(neg, n_neg, ["query_id"], "rank"), "query_id", "rank")

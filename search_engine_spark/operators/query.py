@@ -10,19 +10,25 @@ Every BM25 serving function here (and in ltr/rerank/graph/phrase) is
 one skeleton on shared private builders, so they share one plan:
 
   _query_terms: queries tokenized ONCE on the driver → (query_id, term)
-      table + the literal term list. No indexable term (an empty list,
-      or only stop words) → the caller returns an empty frame of its
+      table + the literal term list. The table is built from Arrow
+      columns, so it plans as a LocalRelation that broadcasts from the
+      driver with no Spark job. No indexable term (an empty list, or
+      only stop words) → the caller returns an empty frame of its
       schema without building a postings join.
   _matched: postings ⋈ BROADCAST(query_terms)       -- no shuffle
                      ⋈ BROADCAST(term_stats∩qterms) -- tiny dim
-      with `term IN (...)` pushed into both parquet scans.
+      with `term IN (...)` pushed into both parquet scans; that
+      literal isin is the whole term restriction (no semi-join of
+      term_stats against the term table unless the list is unknown).
   _bm25: groupBy(query_id, doc_id) hash agg of Σ bm25_idf·tf_norm
       (× a `weight` column when the term table has one), optionally
       rounded BEFORE any cut so sub-epsilon twins replay identically,
       plus an optional matched-term threshold (m-of-n, AND) applied
       after the agg — the one shuffle.
   → topk / _rank_cut: rank-limit window (pushed down as
-      WindowGroupLimit).
+      WindowGroupLimit); topk sorts the ≤ k·|queries| survivors inside
+      ONE output partition (_sorted), with no range-partition sampling
+      job. A `search` request on a persisted index runs 5 Spark jobs.
 
 The LM family (Dirichlet, Jelinek-Mercer, absolute discount, and the
 rescore window's Dirichlet pass) is one builder, _lm: the same match
@@ -47,6 +53,7 @@ from __future__ import annotations
 
 from dataclasses import replace
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -55,6 +62,8 @@ from search_engine_spark.operators.index_build import InvertedIndex
 
 #: schema of every (query_id, doc_id, score) hit list, empty ones too
 _HITS = "query_id int, doc_id long, score double"
+#: schema of the driver-built query-term table
+_TERMS = pa.schema([("query_id", pa.int32()), ("term", pa.string())])
 
 
 def _tokenized(queries: dict[int, str] | list[str]) -> dict[int, list[str]]:
@@ -78,13 +87,16 @@ def _query_terms(
     pushed isin. `queries` are query strings, tokenized here; with
     `tokenized=True` they are ONE query's terms, served as query 0.
     A batch's term list is sorted, a single query's keeps its order.
-    An empty term list means there is nothing to match."""
+    An empty term list means there is nothing to match. The table is
+    built from Arrow columns, so it plans as a LocalRelation: it
+    broadcasts from the driver without a Spark job of its own."""
     toks = {0: list(dict.fromkeys(queries))} if tokenized else _tokenized(queries)
     rows = [(qid, t) for qid, ts in toks.items() for t in ts]
     terms = list(dict.fromkeys(t for _, t in rows))
     if not tokenized:
         terms.sort()
-    return spark.createDataFrame(rows, "query_id int, term string"), terms
+    table = pa.table([list(c) for c in zip(*rows)] or [[], []], schema=_TERMS)
+    return spark.createDataFrame(table), terms
 
 
 def queries_to_terms(
@@ -111,15 +123,27 @@ def _matched(
     seek, and the difference between O(index) and O(matched postings)
     IO at 10^12-doc scale.
     """
-    qt = F.broadcast(query_terms)
-    postings, term_stats = index.postings, index.term_stats
+    postings = index.postings
     if terms:
         postings = postings.filter(F.col("term").isin(terms))
-        term_stats = term_stats.filter(F.col("term").isin(terms))
-    ts_q = term_stats.join(
+    ts_q = _of_terms(index.term_stats, query_terms, terms)
+    return postings.join(F.broadcast(query_terms), "term").join(
+        F.broadcast(ts_q), "term"
+    )
+
+
+def _of_terms(
+    df: DataFrame, query_terms: DataFrame, terms: list[str] | None
+) -> DataFrame:
+    """`df` restricted to the query terms: by the pushed isin when the
+    literal list is known (a semi-join against the term table on top of
+    it would only add a shuffle and a broadcast), else by a broadcast
+    semi-join against the term table."""
+    if terms:
+        return df.filter(F.col("term").isin(terms))
+    return df.join(
         F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
     )
-    return postings.join(qt, "term").join(F.broadcast(ts_q), "term")
 
 
 def _bm25_agg(
@@ -175,14 +199,24 @@ def _rank_cut(df: DataFrame, n: int, keys: list[str], *order) -> DataFrame:
     )
 
 
+def _sorted(df: DataFrame, *order) -> DataFrame:
+    """`df` sorted by `order` in ONE output partition. For output a
+    rank cut has already bounded (a few rows per group) this replaces
+    a global orderBy, whose range partitioning runs a sampling job."""
+    return df.coalesce(1).sortWithinPartitions(*order)
+
+
+def _by_score(score: str = "score") -> tuple:
+    """The hit order: `score` DESC, ties doc_id ASC (quirk Q7)."""
+    return F.col(score).desc(), F.col("doc_id").asc()
+
+
 def topk(scored: DataFrame, k: int = 10) -> DataFrame:
     """Per-query top-k, tie-break (score DESC, doc_id ASC) — quirk Q7:
     the distributed top-k heap merge of TakeOrderedAndProject
     generalized per query_id."""
-    by_score = (F.col("score").desc(), F.col("doc_id").asc())
-    return _rank_cut(scored, k, ["query_id"], *by_score).orderBy(
-        "query_id", *by_score
-    )
+    cut = _rank_cut(scored, k, ["query_id"], *_by_score())
+    return _sorted(cut, "query_id", *_by_score())
 
 
 def score_tfidf_compat(
@@ -594,10 +628,7 @@ def sharded_search(
     scored = _bm25(_matched(index, qt, terms), round_dp).withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_shards))
     )
-    local_topk = _rank_cut(
-        scored, k, ["query_id", "shard"], F.col("score").desc(),
-        F.col("doc_id").asc(),
-    )
+    local_topk = _rank_cut(scored, k, ["query_id", "shard"], *_by_score())
     return topk(local_topk.drop("shard"), k)
 
 
@@ -682,15 +713,12 @@ def _lm_matched(
     p(t|C) is a CORPUS constant — computed from the (isin-pruned)
     postings themselves, NOT from the matched rows: those hold one row
     per (query, posting), so a term shared by several batch queries
-    would double its collection frequency there. |C| sums doc_stats.dl."""
-    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
-    cf_src = index.postings
-    if terms:
-        cf_src = cf_src.filter(F.col("term").isin(terms))
+    would double its collection frequency there. |C| = Σ doc_stats.dl
+    comes from the driver scalars, n_docs·avgdl (Spark's avg of a long
+    sums in f64, so the rounded product is exact below 2^51 tokens)."""
+    total_tokens = round(index.n_docs * index.avgdl)
     p_c = (
-        cf_src.join(
-            F.broadcast(query_terms.select("term").distinct()), "term", "left_semi"
-        )
+        _of_terms(index.postings, query_terms, terms)
         .select("term", "tf")
         .groupBy("term")
         .agg(F.sum("tf").alias("cf"))
@@ -717,18 +745,20 @@ def _lm(
 
     `per_term` reads the `_lm_matched` row (tf, p_c) and the columns of
     the `doc` relations, joined on doc_id before the one aggregate;
-    `tail` (absent: no length term) reads dl and the `doc` columns,
-    joined again after it on the matched-doc-sized sums."""
+    `tail` (absent: no length term) reads dl, joined after it on the
+    matched-doc-sized sums, and the `doc` columns, which ride through
+    the aggregate as group keys (one doc_id, one value each)."""
     m = _lm_matched(index, query_terms, terms)
+    keys = ["query_id", "doc_id"]
     for d in doc:
         m = m.join(d, "doc_id")
-    s = m.groupBy("query_id", "doc_id").agg(F.sum(per_term).alias("s_matched"))
+        if tail is not None:
+            keys += [c for c in d.columns if c != "doc_id"]
+    s = m.groupBy(*keys).agg(F.sum(per_term).alias("s_matched"))
     score = F.col("s_matched")
     if tail is not None:
         nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
-        for d in (index.doc_stats, *doc):
-            s = s.join(d, "doc_id")
-        s = s.join(F.broadcast(nq), "query_id")
+        s = s.join(index.doc_stats, "doc_id").join(F.broadcast(nq), "query_id")
         score = score + F.col("nq").cast("double") * tail
     return s.select("query_id", "doc_id", F.round(score, 9).alias("score"))
 
@@ -919,16 +949,14 @@ def top_hits_by_facet(
     """
     scored = _bm25(_matched(index, query_terms, terms), round_dp)
     dim = dims.select("doc_id", F.col(facet).alias("facet"))
-    w = Window.partitionBy("query_id", "facet").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
+    w = Window.partitionBy("query_id", "facet").orderBy(*_by_score())
+    ranked = (
         scored.join(dim, "doc_id")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= n)
         .select("query_id", "facet", "doc_id", "score", "rn")
-        .orderBy("query_id", "facet", "rn")
     )
+    return _sorted(ranked, "query_id", "facet", "rn")
 
 
 def date_histogram_hits(
@@ -982,7 +1010,8 @@ def significant_terms(
     the per-query top-terms cut; ties break on term ASC.
     """
     scored = _bm25(_matched(index, query_terms, terms), round_dp)
-    hits = topk(scored, k_hits).select("query_id", "doc_id")
+    top_hits = _rank_cut(scored, k_hits, ["query_id"], *_by_score())
+    hits = top_hits.select("query_id", "doc_id")
     fg_size = hits.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("fg_size")
     )
@@ -1010,10 +1039,9 @@ def significant_terms(
             F.round(jlh, round_dp).alias("score"),
         )
     )
-    return _rank_cut(
-        ranked, top_terms, ["query_id"], F.col("score").desc(),
-        F.col("term").asc(),
-    ).orderBy("query_id", F.col("score").desc(), "term")
+    order = (F.col("score").desc(), F.col("term").asc())
+    cut = _rank_cut(ranked, top_terms, ["query_id"], *order)
+    return _sorted(cut, "query_id", *order)
 
 
 def rescore_topk(
@@ -1044,9 +1072,7 @@ def rescore_topk(
     if not terms:
         return spark.createDataFrame([], _HITS)
     base = _bm25(_matched(index, qt, terms), round_dp, score="base")
-    win = _rank_cut(
-        base, window, ["query_id"], F.col("base").desc(), F.col("doc_id").asc()
-    )
+    win = _rank_cut(base, window, ["query_id"], *_by_score("base"))
     lm = _lm(index, qt, terms, *_dirichlet(mu)).withColumnRenamed("score", "lm")
     combined = win.join(lm, ["query_id", "doc_id"]).select(
         "query_id",
@@ -1333,7 +1359,7 @@ def rm3_expand(
     # twins differently from the replay
     fb = (  # ≤ fb_docs scalars — the PRF barrier
         _bm25(_matched(index, qt, qset), round_dp, score="s")
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
+        .orderBy(*_by_score("s"))
         .limit(fb_docs)
         .collect()
     )
@@ -1548,10 +1574,9 @@ def tiered_search(
     qt, terms = _query_terms(spark, refill)
     if not terms:  # nothing to refill, or only term-less queries
         return kept_df
-    tier2 = topk(_bm25(_matched(index, qt, terms), round_dp), k)
-    return kept_df.unionByName(tier2).orderBy(
-        "query_id", F.col("score").desc(), F.col("doc_id").asc()
-    )
+    scored = _bm25(_matched(index, qt, terms), round_dp)
+    tier2 = _rank_cut(scored, k, ["query_id"], *_by_score())
+    return _sorted(kept_df.unionByName(tier2), "query_id", *_by_score())
 
 
 def msm_search(

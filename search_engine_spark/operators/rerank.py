@@ -39,6 +39,7 @@ from search_engine_spark.operators.query import (
     _matched,
     _query_terms,
     _rank_cut,
+    _sorted,
 )
 
 _PICKS = "rank int, doc_id long, score double"
@@ -229,10 +230,7 @@ def collapse_hosts(
     g = run.select("query_id", "doc_id", "score").join(d, "doc_id")
     order = [F.col("score").desc(), F.col("doc_id").asc()]
     per_host = _rank_cut(g, max_per_key, ["query_id", "_host"], *order)
-    return (
-        _rank_cut(per_host, k, ["query_id"], *order)
-        .select(
-            "query_id", "doc_id", "score", F.col("_host").alias(key)
-        )
-        .orderBy("query_id", *order)
+    top = _rank_cut(per_host, k, ["query_id"], *order).select(
+        "query_id", "doc_id", "score", F.col("_host").alias(key)
     )
+    return _sorted(top, "query_id", *order)

@@ -98,6 +98,27 @@ class TestSparkGolden:
             1: 3, 2: 3, 3: 3,
         }
 
+    def test_driver_scalars_give_total_tokens(self, spark, index, tmp_path):
+        """The LM scorers take the collection size |C| from the index's
+        driver scalars, round(n_docs·avgdl): it equals Σ doc_stats.dl
+        exactly on the golden corpus and on a synthetic one, also after
+        a write/read round trip."""
+        from pyspark.sql import functions as F
+
+        from search_engine_spark.operators.index_build import (
+            build_index_from_pages,
+            read_index,
+            write_index,
+        )
+        from search_engine_spark.sources.corpus import synth_pages
+
+        synth = build_index_from_pages(synth_pages(spark, 300, seed=13))
+        write_index(synth, str(tmp_path))
+        for idx in (index, synth, read_index(spark, str(tmp_path))):
+            total = idx.doc_stats.agg(F.sum("dl")).first()[0]
+            assert total > idx.n_docs
+            assert round(idx.n_docs * idx.avgdl) == total
+
     def test_compat_ranking_matches_golden(self, spark, index):
         qt = queries_to_terms(spark, ["ladder pipe"])
         res = score_tfidf_compat(index, qt).collect()

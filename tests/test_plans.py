@@ -663,3 +663,73 @@ def test_bm25f_keeps_the_serving_plan_shape(spark, stored_index):
     assert "In(term" in plan, plan[:2000]
     assert "BroadcastHashJoin" in plan
     assert "WindowGroupLimit" in plan, plan[:3000]
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs `action()` runs, counted through a job group of its own."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"plans-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_BATCH = {
+    0: "hippopotamus ladder",
+    1: "ladder",
+    3: "zzzunknownzzz hippopotamus",
+    4: "the of",
+    7: "ladder hippopotamus ladder",
+}
+
+
+def test_search_runs_at_most_five_jobs(spark, stored_index):
+    """A search request pays no fixed job beyond its postings work: the
+    term table is a LocalRelation (no job to broadcast it), the term
+    dictionary is not semi-joined against it a second time, and the
+    sorted output needs no range-partition sampling job."""
+    from search_engine_spark.operators.query import search
+
+    _, idx = stored_index
+    for q in ({0: "hippopotamus ladder"}, _BATCH):
+        assert _jobs(spark, search(idx, spark, q).collect) <= 5, q
+        plan = _plan(search(idx, spark, q))
+        assert "Scan ExistingRDD" not in plan, plan[:3000]
+        assert "rangepartitioning" not in plan, plan[:3000]
+        assert "In(term" in plan, plan[:2000]
+        assert "BroadcastHashJoin" in plan
+        assert "WindowGroupLimit" in plan, plan[:3000]
+
+
+def test_search_output_is_sorted_across_shuffle_partitions(spark, stored_index):
+    """With several shuffle partitions and no AQE coalescing, a batch
+    still comes back in exactly (query_id, score DESC, doc_id ASC)."""
+    from search_engine_spark.operators.query import search
+
+    _, idx = stored_index
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+        rows = [tuple(r) for r in search(idx, spark, _BATCH, k=50).collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert len({r[0] for r in rows}) > 1
+    assert rows == sorted(rows, key=lambda r: (r[0], -r[2], r[1]))
+
+
+def test_absolute_discount_aggregates_du_once(spark, stored_index):
+    """|d|_u (a full-postings aggregate) enters absolute discount once:
+    its columns ride through the score aggregate instead of being
+    joined again after it."""
+    from search_engine_spark.operators.query import search
+
+    _, idx = stored_index
+    df = search(idx, spark, _BATCH, scorer="absolute_discount")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count(" AS du#") == 1, plan
