@@ -100,6 +100,75 @@ def test_fused_equals_chained(spark):
     assert chained.avgdl == pytest.approx(fused.avgdl, rel=1e-12)
 
 
+def _arrow_evals(df) -> int:
+    """ArrowEvalPython nodes in df's optimized plan: one per pandas-UDF
+    evaluation, so each page's html crosses to Python that many times."""
+    return df._jdf.queryExecution().optimizedPlan().toString().count(
+        "ArrowEvalPython"
+    )
+
+
+def test_extraction_udf_runs_once_per_lineage(spark):
+    """A filter over a pandas-UDF result is pushed below the projection
+    that computes it, where it calls the UDF a second time; the build
+    and the chained text path must consume each result in ONE operator."""
+    pages = synth_pages(spark, 50, seed=13)
+    idx = build_index_from_pages(pages, id_method="hash")
+    idx.unpersist()
+    # fresh frames over the unpersisted relations plan the whole lineage;
+    # postings reads raw postings twice (true postings ⋈ doc_stats)
+    assert _arrow_evals(idx.doc_stats.select("*")) == 1
+    assert _arrow_evals(idx.term_stats.select("*")) == 1
+    assert _arrow_evals(idx.postings.select("*")) == 2
+    for id_method in ("hash", "dense"):
+        docs = prepare_docs(pages, id_method=id_method, recompute_text=True)
+        assert _arrow_evals(docs) == 1, id_method
+
+
+def test_fused_keeps_empty_and_stopword_only_pages_like_chained(spark):
+    """An empty-text page stays out of N; a page whose tokens all
+    stop-filter away counts in N with dl 0 (its marker row), on the
+    fused and the chained path alike."""
+    rows = [
+        ("https://a.example/1", b"<html><body><p>hippopotamus ladder ladder</p></body></html>"),
+        ("https://a.example/2", b"<html><body></body></html>"),
+        ("https://a.example/3", b"<html><body><p>the of and</p></body></html>"),
+        ("https://a.example/4", b"<html><body><p>ladder of rope</p></body></html>"),
+    ]
+    pages = spark.createDataFrame(
+        [(u, h, "en") for u, h in rows], "url string, html binary, lang string"
+    )
+    chained = build_index(prepare_docs(pages, id_method="hash", recompute_text=True))
+    fused = build_index_from_pages(pages, id_method="hash")
+    ids = {u: r[0] for u, r in zip((u for u, _ in rows),
+           spark.createDataFrame([(u,) for u, _ in rows], "url string")
+           .select(F.xxhash64("url")).collect())}
+    dl = {r["doc_id"]: r["dl"] for r in fused.doc_stats.collect()}
+    assert dl == {r["doc_id"]: r["dl"] for r in chained.doc_stats.collect()}
+    assert dl == {ids[rows[0][0]]: 3, ids[rows[2][0]]: 0, ids[rows[3][0]]: 2}
+    assert fused.n_docs == chained.n_docs == 3
+    assert fused.avgdl == chained.avgdl == 5 / 3
+    for idx in (fused, chained):
+        assert idx.postings.filter(F.col("term").isNull()).count() == 0
+
+
+def test_build_write_read_runs_at_most_fifteen_jobs(spark, stored_index, tmp_path):
+    """build_index_from_pages → write_index → read_index pays no job
+    that does no index work: the read knows its schemas (no inference
+    job per table), a corpus under the salt floor skips the skew probe,
+    and the one-row meta table is a driver-local relation."""
+    pages, _ = stored_index
+    path = str(tmp_path / "idx")
+
+    def build_write_read():
+        idx = build_index_from_pages(pages, id_method="hash")
+        write_index(idx, path)
+        read_index(spark, path)
+        idx.unpersist()
+
+    assert _jobs(spark, build_write_read) <= 15
+
+
 def test_minhash_single_md5_per_row(spark):
     """The 64 MinHash permutations must derive from ONE materialized md5
     base column: Catalyst's CollapseProject would otherwise inline the
