@@ -580,12 +580,18 @@ def main() -> None:
                 max_rounds=2,
                 transport=transport,
             )
+            # one consumer of the UDF result (a filter over it would
+            # call the UDF again; see index_build.prepare_docs)
+            text = F.col("text")
             docs = (
                 pages.select("url", "html")
                 .withColumn("doc_id", F.xxhash64("url"))
                 .withColumn("text", extract_text_udf(F.col("html")))
-                .filter(F.length("text") > 0)
-                .select("doc_id", "url", "text")
+                .select(
+                    "doc_id",
+                    "url",
+                    F.explode(F.when(F.length(text) > 0, F.array(text))).alias("text"),
+                )
                 .persist()
             )
             # exact dedup here (the standard post-crawl stage; bodies

@@ -143,7 +143,9 @@ def read_epochs(
     this session, which would otherwise shadow newly landed epochs."""
     spark.catalog.refreshByPath(root)
     try:
-        df = spark.read.option("basePath", root).parquet(root)
+        # the known schema skips the schema-inference job; `batch`
+        # still comes from the directory names
+        df = spark.read.schema(schema).option("basePath", root).parquet(root)
     except AnalysisException:
         return spark.createDataFrame([], schema)
     df = df.select(*DataType.fromDDL(schema).names)

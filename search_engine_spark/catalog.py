@@ -64,11 +64,15 @@ def write_table(
         w.parquet(path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
+def read_table(
+    spark: SparkSession, path: str, schema: str | None = None
+) -> DataFrame:
+    """The table at `path`; a parquet read given its `schema` (DDL)
+    skips the one-task schema-inference job."""
     fmt = table_format(spark)
     if fmt == "iceberg":  # pragma: no cover
         return spark.read.format("iceberg").load(path)
-    return spark.read.parquet(path)
+    return (spark.read.schema(schema) if schema else spark.read).parquet(path)
 
 
 def merge_table(

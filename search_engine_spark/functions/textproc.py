@@ -577,8 +577,12 @@ def tokenize_raw_udf(text: pd.Series) -> pd.Series:
 
 @pandas_udf(ArrayType(StringType()))
 def extract_tokens_udf(html: pd.Series) -> pd.Series:
-    """FUSED extraction + tokenization: html binary → array<string> in ONE
-    Arrow pass (SURVEY §2.9: F1+F4-F6 fused).
+    """FUSED extraction + tokenization: html binary → array<string> in one
+    UDF (SURVEY §2.9: F1+F4-F6 fused). Each evaluation is one Arrow
+    round trip of the html; a plan evaluates it once only when ONE
+    operator consumes its result (see index_build.build_index_from_pages:
+    a filter over the result is pushed below the projection and calls
+    the UDF again).
 
     Scale-critical: two chained pandas UDFs in one stage run as TWO
     python workers per task (2×cores processes); measured on this

@@ -519,7 +519,8 @@ def build_block_index_lm(
     """
     spark = index.postings.sparkSession
     nb = num_buckets or spark.sparkContext.defaultParallelism * 2
-    total_tokens = index.doc_stats.agg(F.sum("dl")).first()[0]
+    # |C| = Σdl from the driver scalars (query._lm_matched does the same)
+    total_tokens = round(index.n_docs * index.avgdl)
     cf = index.postings.groupBy("term").agg(F.sum("tf").alias("cf"))
     scored = (
         index.postings.join(cf, "term")

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -35,6 +36,15 @@ from search_engine_spark.functions.textproc import extract_text_udf, tokenize_ud
 
 K1 = 1.2
 B = 0.75
+
+#: the written index tables and their column types: read_index passes
+#: them, so a read runs no schema-inference job per table
+_TABLES = {
+    "postings": "term string, doc_id long, tf int, tf_norm double",
+    "term_stats": "term string, df long, idf double, idf_f32 float, bm25_idf double",
+    "doc_stats": "doc_id long, dl long",
+    "meta": "n_docs long, avgdl double",
+}
 
 
 def _bm25_idf(n_docs: int) -> Column:
@@ -136,9 +146,15 @@ def prepare_docs(
     if dedup_snapshots:
         pages = latest_snapshot(pages)
     df = pages.filter(F.col("lang").startswith("en"))
+    text = F.col("text")
     if recompute_text:
-        df = df.withColumn("text", extract_text_udf(F.col("html")))
-    df = df.filter(F.length(F.col("text")) > 0)
+        # one consumer of the UDF result (see build_index_from_pages):
+        # empty text explodes to no row
+        df = df.withColumn("text", extract_text_udf(F.col("html"))).select(
+            "url", F.explode(F.when(F.length(text) > 0, F.array(text))).alias("text")
+        )
+    else:
+        df = df.filter(F.length(text) > 0)
     if id_method == "hash":
         df = df.withColumn("doc_id", F.xxhash64(F.col("url")))
     elif id_method == "dense":
@@ -306,7 +322,12 @@ def build_index_from_pages(
     b: float = B,
 ) -> InvertedIndex:
     """pages(url, html, lang, ...) → InvertedIndex via the FUSED
-    extract+tokenize UDF (one Arrow pass, one python worker per task).
+    extract+tokenize UDF (one python worker per task).
+
+    Each page's html crosses to Python ONCE: exactly one operator (the
+    explode) consumes the UDF result. A filter or second projection over
+    it would be split from the projection that computes it by Catalyst,
+    and each part would call the UDF (two ArrowEvalPython nodes).
 
     Semantically identical to prepare_docs(recompute_text=True) +
     build_index (property-tested) but skips materializing `text`: the
@@ -328,10 +349,16 @@ def build_index_from_pages(
         )
     else:
         raise ValueError(id_method)
-    tokens = (
-        df.withColumn("toks", extract_tokens_udf(F.col("html")))
-        .filter(F.col("toks").isNotNull())  # F12: empty-text pages out
-        .select("doc_id", F.explode_outer(F.col("toks")).alias("term"))
+    # ONE operator consumes the UDF result: a filter over it would be
+    # pushed below the projection that computes it and call the UDF a
+    # second time (two ArrowEvalPython nodes, every page parsed twice).
+    # NULL (empty text, F12) explodes to no row; [] becomes [NULL], the
+    # zero-token marker row whose tf folds to 0 below.
+    toks = F.col("toks")
+    tokens = df.withColumn("toks", extract_tokens_udf(F.col("html"))).select(
+        "doc_id",
+        F.explode(F.when(F.size(toks) == 0, F.array(F.lit(None))).otherwise(toks))
+        .alias("term"),
     )
     raw = tokens.groupBy("doc_id", "term").agg(
         F.sum(F.when(F.col("term").isNotNull(), 1).otherwise(0))
@@ -483,9 +510,17 @@ def write_index(
     the salted path's broadcast join + salt column (measured ~10% of
     the 20k-page build wall in the r4 A/B; the skew protection at
     10^12 docs is unchanged because a Zipf head term always crosses).
+    A corpus of at most `salt_df_floor` docs skips the aggregate too:
+    df ≤ n_docs ≤ floor ≤ threshold, so no term can cross.
+
+    The one-row `meta` (n_docs, avgdl) table is built from Arrow
+    columns: one partition, one file.
     """
     from search_engine_spark.catalog import write_table
 
+    if salt_df_threshold == "auto" and index.n_docs <= salt_df_floor:
+        # df ≤ n_docs ≤ floor ≤ threshold: no term can cross it
+        salt_df_threshold = None
     if salt_df_threshold == "auto":
         row = index.term_stats.agg(
             F.sum("df").alias("t"), F.max("df").alias("m")
@@ -506,10 +541,11 @@ def write_index(
     write_table(laid_out, f"{path}/postings")
     write_table(index.term_stats, f"{path}/term_stats")
     write_table(index.doc_stats, f"{path}/doc_stats")
-    meta = index.postings.sparkSession.createDataFrame(
-        [(index.n_docs, index.avgdl)], "n_docs long, avgdl double"
+    meta = pa.table(
+        [pa.array([index.n_docs], pa.int64()), pa.array([index.avgdl], pa.float64())],
+        names=["n_docs", "avgdl"],
     )
-    write_table(meta, f"{path}/meta")
+    write_table(index.postings.sparkSession.createDataFrame(meta), f"{path}/meta")
 
 
 def to_reference_rows(index: InvertedIndex) -> DataFrame:
@@ -566,13 +602,16 @@ def from_reference_rows(
 
 
 def read_index(spark: SparkSession, path: str) -> InvertedIndex:
+    """The index write_index laid out at `path`. Each table is read with
+    its known schema (_TABLES), so the only job is the `meta` collect."""
     from search_engine_spark.catalog import read_table
 
-    meta = read_table(spark, f"{path}/meta").collect()[0]
+    t = {name: read_table(spark, f"{path}/{name}", ddl) for name, ddl in _TABLES.items()}
+    meta = t["meta"].collect()[0]
     return InvertedIndex(
-        postings=read_table(spark, f"{path}/postings"),
-        term_stats=read_table(spark, f"{path}/term_stats"),
-        doc_stats=read_table(spark, f"{path}/doc_stats"),
+        postings=t["postings"],
+        term_stats=t["term_stats"],
+        doc_stats=t["doc_stats"],
         n_docs=int(meta["n_docs"]),
         avgdl=float(meta["avgdl"]),
     )

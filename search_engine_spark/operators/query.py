@@ -62,8 +62,13 @@ from search_engine_spark.operators.index_build import InvertedIndex
 
 #: schema of every (query_id, doc_id, score) hit list, empty ones too
 _HITS = "query_id int, doc_id long, score double"
-#: schema of the driver-built query-term table
+#: Arrow schemas of the driver-built tables (see _local)
+_HITS_PA = pa.schema(
+    [("query_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())]
+)
 _TERMS = pa.schema([("query_id", pa.int32()), ("term", pa.string())])
+_WEIGHTED = _TERMS.append(pa.field("weight", pa.float64()))
+_Q = pa.schema([("q", pa.string())])
 
 
 def _tokenized(queries: dict[int, str] | list[str]) -> dict[int, list[str]]:
@@ -88,15 +93,21 @@ def _query_terms(
     `tokenized=True` they are ONE query's terms, served as query 0.
     A batch's term list is sorted, a single query's keeps its order.
     An empty term list means there is nothing to match. The table is
-    built from Arrow columns, so it plans as a LocalRelation: it
-    broadcasts from the driver without a Spark job of its own."""
+    built from Arrow columns (_local)."""
     toks = {0: list(dict.fromkeys(queries))} if tokenized else _tokenized(queries)
     rows = [(qid, t) for qid, ts in toks.items() for t in ts]
     terms = list(dict.fromkeys(t for _, t in rows))
     if not tokenized:
         terms.sort()
-    table = pa.table([list(c) for c in zip(*rows)] or [[], []], schema=_TERMS)
-    return spark.createDataFrame(table), terms
+    return _local(spark, rows, _TERMS), terms
+
+
+def _local(spark: SparkSession, rows: list[tuple], schema: pa.Schema) -> DataFrame:
+    """A driver-built table of `rows` from Arrow columns: it plans as a
+    LocalRelation and broadcasts without a Spark job (a rows + DDL
+    frame plans as an RDD scan whose broadcast costs one)."""
+    cols = [list(c) for c in zip(*rows)] or [[] for _ in schema]
+    return spark.createDataFrame(pa.table(cols, schema=schema))
 
 
 def queries_to_terms(
@@ -332,9 +343,7 @@ def did_you_mean(
         return spark.createDataFrame(
             [], "term string, suggestion string, dist int, df long"
         )
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in missing], "q string")
-    )
+    qt = F.broadcast(_local(spark, [(t,) for t in missing], _Q))
     cand = (
         index.term_stats.select("term", "df")
         .crossJoin(qt)
@@ -381,9 +390,7 @@ def fuzzy_expand(
     """
     spark = index.term_stats.sparkSession
     qset = list(dict.fromkeys(terms))
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in qset], "q string")
-    )
+    qt = F.broadcast(_local(spark, [(t,) for t in qset], _Q))
     cand = (
         index.term_stats.select("term", "df")
         .crossJoin(qt)
@@ -448,9 +455,11 @@ def fuzzy_search(
         return spark.createDataFrame([], _HITS)
     terms = sorted({r["term"] for r in exp})
     edf = F.broadcast(
-        spark.createDataFrame(
+        _local(
+            spark,
             [(0, r["q"], r["term"], float(r["boost"])) for r in exp],
-            "query_id int, q string, term string, boost double",
+            pa.schema([("query_id", pa.int32()), ("q", pa.string()),
+                       ("term", pa.string()), ("boost", pa.float64())]),
         )
     )
     m = _matched(index, edf.select("query_id", "term").distinct(), terms=terms)
@@ -1365,18 +1374,23 @@ def rm3_expand(
     )
     total = sum(r["s"] for r in fb)
     pq_w = (1.0 - alpha) / len(qset)
-    orig = spark.createDataFrame([(t, pq_w) for t in qset], "term string, pq double")
+    orig = _local(
+        spark,
+        [(t, pq_w) for t in qset],
+        pa.schema([("term", pa.string()), ("pq", pa.float64())]),
+    )
     if not fb or total <= 0.0:
         return orig.select(
             "term", F.round(F.col("pq"), round_dp).alias("weight")
         ).orderBy(F.col("weight").desc(), F.col("term").asc()).limit(fb_terms)
     from search_engine_spark.numerics import round_half_up
 
-    wd = spark.createDataFrame(
+    wd = _local(
+        spark,
         # round_half_up, not builtin round: the oracle's round(s/t, 9)
         # is HALF_UP and Python's builtin is HALF_EVEN (numerics.py)
         [(int(r["doc_id"]), round_half_up(r["s"] / total, 9)) for r in fb],
-        "doc_id long, w double",
+        pa.schema([("doc_id", pa.int64()), ("w", pa.float64())]),
     )
     ids = [int(r["doc_id"]) for r in fb]
     from search_engine_spark.operators.index_build import raw_postings_from_docs
@@ -1432,10 +1446,7 @@ def rm3_search(
     if not exp:
         return spark.createDataFrame([], _HITS)
     terms = [r["term"] for r in exp]
-    wdf = spark.createDataFrame(
-        [(0, r["term"], float(r["weight"])) for r in exp],
-        "query_id int, term string, weight double",
-    )
+    wdf = _local(spark, [(0, r["term"], float(r["weight"])) for r in exp], _WEIGHTED)
     m = _matched(index, wdf.select("query_id", "term"), terms=terms).join(
         F.broadcast(wdf.select("term", "weight")), "term"
     )
@@ -1570,7 +1581,7 @@ def tiered_search(
         for r in t1_rows
         if r["query_id"] not in refill
     ]
-    kept_df = spark.createDataFrame(kept, _HITS)
+    kept_df = _local(spark, kept, _HITS_PA)
     qt, terms = _query_terms(spark, refill)
     if not terms:  # nothing to refill, or only term-less queries
         return kept_df
@@ -1633,7 +1644,7 @@ def synonym_search(
         rows += [(qid, term, w) for term, w in weights.items()]
     if not rows:
         return spark.createDataFrame([], _HITS)
-    qt = spark.createDataFrame(rows, "query_id int, term string, weight double")
+    qt = _local(spark, rows, _WEIGHTED)
     terms = sorted({r[1] for r in rows})
     return topk(_bm25(_matched(index, qt, terms), round_dp), k)
 

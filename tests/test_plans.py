@@ -8,7 +8,10 @@
 - query-time scoring broadcasts the small sides (query terms,
   term_stats∩terms) — no shuffle of the postings relation;
 - the fused pages→index path equals the chained path (result parity for
-  the scale optimization).
+  the scale optimization);
+- each page's html crosses to Python once (one ArrowEvalPython per
+  extraction UDF per lineage), and a build → write → read runs no job
+  that does no index work.
 """
 
 from __future__ import annotations
@@ -140,12 +143,10 @@ def test_fused_keeps_empty_and_stopword_only_pages_like_chained(spark):
     )
     chained = build_index(prepare_docs(pages, id_method="hash", recompute_text=True))
     fused = build_index_from_pages(pages, id_method="hash")
-    ids = {u: r[0] for u, r in zip((u for u, _ in rows),
-           spark.createDataFrame([(u,) for u, _ in rows], "url string")
-           .select(F.xxhash64("url")).collect())}
+    ids = [r[0] for r in pages.select(F.xxhash64("url")).collect()]
     dl = {r["doc_id"]: r["dl"] for r in fused.doc_stats.collect()}
     assert dl == {r["doc_id"]: r["dl"] for r in chained.doc_stats.collect()}
-    assert dl == {ids[rows[0][0]]: 3, ids[rows[2][0]]: 0, ids[rows[3][0]]: 2}
+    assert dl == {ids[0]: 3, ids[2]: 0, ids[3]: 2}
     assert fused.n_docs == chained.n_docs == 3
     assert fused.avgdl == chained.avgdl == 5 / 3
     for idx in (fused, chained):
