@@ -20,7 +20,7 @@ Headline queries:
   similarity headliners (dedup reports doc→representative labeling,
   not pair enumeration — pairs are quadratic in cluster size).
 - lsh/ivf_index_build + *_probe_10q + *_probe_batch10: the
-  materialized ANN serving path — build once, then 10 partition-pruned
+  materialized ANN serving path — build once, then 10 pruned
   probes (per-query jobs vs one batched job; the gap is the per-job
   scheduling constant the batch path amortizes).
 - crawl_2rounds: the S1/S2 crawl loop (fetch + gates + frontier +
@@ -91,7 +91,7 @@ def main() -> None:
         def build_pages():
             # FUSED extract+tokenize UDF (one python worker per task);
             # the chained two-UDF form measurably anti-scales
-            idx = build_index_from_pages(pages, id_method="hash")
+            idx = build_index_from_pages(pages)
             write_index(idx, f"{tmp}/index")
             return idx
 
@@ -428,19 +428,12 @@ def main() -> None:
         )
 
         # ANN serving path (r2 judge item 3): one-time index build +
-        # 10 partition-pruned probes — probe cost amortizes the build,
+        # 10 pruned probes — probe cost amortizes the build,
         # which is the whole point of the materialized index
         qvecs = {
             int(r["vec_id"]): [float(x) for x in r["embedding"]]
             for r in embeddings.filter(F.col("vec_id") < 10).collect()
         }
-        # default layout is SORTED since r5 (t-partitioned dirs,
-        # sig-sorted row groups, pushed-filter pruning): it won every
-        # measured axis at bench scale — r4 numbers: build 8.0 s vs
-        # 20.6 s, batch probe 3.0 s vs 4.7 s — so lsh_index_build /
-        # probe rows below track the DEFAULT (sorted) path and the
-        # *_partitioned rows keep the per-bucket-directory layout
-        # (the 10^12-row point-probe regime) honest
         timed(
             "lsh_index_build",
             lambda: similarity.build_lsh_index(embeddings, f"{tmp}/lsh_idx"),
@@ -461,19 +454,6 @@ def main() -> None:
         timed(
             "lsh_index_probe_batch10",
             lambda: similarity.lsh_index_topk_batch(spark, lsh_idx, qvecs).collect(),
-        )
-        timed(
-            "lsh_index_build_partitioned",
-            lambda: similarity.build_lsh_index(
-                embeddings, f"{tmp}/lsh_idx_part", layout="partitioned"
-            ),
-        )
-        lsh_part = similarity.load_lsh_index(spark, f"{tmp}/lsh_idx_part")
-        timed(
-            "lsh_partitioned_probe_batch10",
-            lambda: similarity.lsh_index_topk_batch(
-                spark, lsh_part, qvecs
-            ).collect(),
         )
         # incremental maintenance (r4 judge item 5): epoch-append a 10%
         # batch + tombstone 5% — O(batch) work vs the full-rebuild row

@@ -134,7 +134,7 @@ def worker(cpus: int, input_path: str) -> None:
     ).count()
 
     t0 = time.perf_counter()
-    index = build_index_from_pages(pages, id_method="hash")
+    index = build_index_from_pages(pages)
     n_postings = index.postings.count()  # materialize the build's output
     build_s = time.perf_counter() - t0
 

@@ -62,7 +62,7 @@ def main() -> None:
         docs = prepare_docs(pages, id_method="hash", recompute_text=True)
         index = checkpointed_build(docs, args.checkpoint)
     else:
-        index = build_index_from_pages(pages, id_method="hash")
+        index = build_index_from_pages(pages)
 
     write_index(index, args.output, salt_df_threshold=args.salt_df_threshold)
 

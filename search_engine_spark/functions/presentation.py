@@ -262,16 +262,14 @@ def present_results(
     topk: DataFrame,
     pages: DataFrame,
     queries: dict[int, str] | list[str],
-    id_method: str = "hash",
 ) -> DataFrame:
     """(query_id, doc_id, score) top-k → + url, title, domain, breadcrumb,
     snippet (reference search_results loop, app/main.py:80-95).
 
-    `id_method` MUST match the one the index was built with ('hash' =
-    xxhash64(url), 'dense' = row_number over url order): ids are
-    re-minted here to join the winners back to pages, and a mismatch
-    would silently join nothing. If `pages` already carries a `doc_id`
-    column it is used as-is.
+    If `pages` carries a `doc_id` column it is used as-is — pass the
+    ids the index was built with (e.g. prepare_docs' dense ids, which
+    only that call can number: they count the pages that survive its
+    filters). Otherwise the hash id xxhash64(url) is minted here.
 
     Plan shape: the top-k side is tiny (≤ k·n_queries rows) and is
     broadcast into a single hash join against the pages scan — the only
@@ -285,19 +283,11 @@ def present_results(
         [(qid, tokenize_query(q)) for qid, q in queries.items()],
         "query_id int, q_terms array<string>",
     )
-    if "doc_id" in pages.columns:
-        with_id = pages
-    elif id_method == "hash":
-        with_id = pages.withColumn("doc_id", F.xxhash64("url"))
-    elif id_method == "dense":
-        from pyspark.sql import Window
-
-        with_id = pages.withColumn(
-            "doc_id",
-            F.row_number().over(Window.orderBy(F.col("url"))).cast("long"),
-        )
-    else:
-        raise ValueError(id_method)
+    with_id = (
+        pages
+        if "doc_id" in pages.columns
+        else pages.withColumn("doc_id", F.xxhash64("url"))
+    )
     title = (
         F.coalesce("title", F.lit(""))
         if "title" in pages.columns

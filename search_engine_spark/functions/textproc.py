@@ -523,20 +523,15 @@ def word_tokenize(text: str) -> list[str]:
     return [t for s in sentence_split(text) for t in treebank_word_tokenize(s)]
 
 
-def tokenize_query(q: str, side: str = "query") -> list[str]:
+def tokenize_query(q: str) -> list[str]:
     """Query tokenization, reference-faithful (app/main.py:53-54):
     lowercase → NLTK-style word_tokenize → drop NLTK stop words. Query
     terms are looked up AS TOKENIZED — the reference does NOT apply the
     indexer's normalizer on the query side, so e.g. "don't" retrieves
     the terms ``do``/``n't`` (quirk: ``do`` is then stop-filtered) and
-    punctuation tokens are searched verbatim (matching nothing).
-    side='index' applies the indexer normalizer + ISO stop list instead
-    (the r1 symmetric behavior, kept for index-side callers)."""
-    if side == "query":
-        stop = load_stopwords("nltk")
-        return [t for t in word_tokenize(q.lower()) if t not in stop]
-    stop = load_stopwords("iso")
-    return [t for t in tokenize(q.lower(), stop=stop) if t != ""]
+    punctuation tokens are searched verbatim (matching nothing)."""
+    stop = load_stopwords("nltk")
+    return [t for t in word_tokenize(q.lower()) if t not in stop]
 
 
 # ---------------------------------------------------------------------------
@@ -566,13 +561,6 @@ def extract_title_udf(html: pd.Series) -> pd.Series:
 def tokenize_udf(text: pd.Series) -> pd.Series:
     stop = load_stopwords("iso")
     return text.map(lambda t: tokenize(t or "", stop=stop))
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_raw_udf(text: pd.Series) -> pd.Series:
-    """Normalize WITHOUT stop-filtering (for analyses that need all terms)."""
-    empty: frozenset[str] = frozenset()
-    return text.map(lambda t: tokenize(t or "", stop=empty))
 
 
 @pandas_udf(ArrayType(StringType()))

@@ -19,8 +19,10 @@ in Spark terms removes a per-query shuffle join against a doc-sized
 table.
 
 doc_id minting: `hash` (xxhash64(url), shuffle-free, the 10^12-doc
-path) or `dense` (row_number over url order — global sort; used by
-tests so ids match the reference's golden fixtures).
+path; the only id build_index_from_pages mints) or, in prepare_docs
+only, `dense` (row_number over the url order of the docs that survive
+the language and empty-text filters — a global sort; used by tests so
+ids match the reference's golden fixtures).
 """
 
 from __future__ import annotations
@@ -59,27 +61,6 @@ def _tf_norm(avgdl: float, k1: float = K1, b: float = B) -> Column:
     columns: tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))."""
     tf = F.col("tf")
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-
-
-def check_doc_id_collisions(docs: DataFrame) -> int:
-    """Count url pairs colliding under the 64-bit doc_id (returns the
-    number of ids with >1 distinct url; 0 = clean).
-
-    At 10^12 docs the birthday bound expects ~3e4 colliding pairs for a
-    64-bit hash — a merged pair pools two pages' postings and corrupts
-    both docs' scores. A production deployment at that scale should run
-    this audit after minting (one agg over the url→id relation) and
-    either remap the few colliding urls (e.g. salt the hash input for
-    exactly those urls via a tiny broadcast remap table) or move to a
-    128-bit id split across two columns. Cheap insurance; O(docs) with
-    map-side combine.
-    """
-    return (
-        docs.groupBy("doc_id")
-        .agg(F.countDistinct("url").alias("n_urls"))
-        .filter(F.col("n_urls") > 1)
-        .count()
-    )
 
 
 def latest_snapshot(pages: DataFrame) -> DataFrame:
@@ -215,9 +196,14 @@ def raw_postings_from_docs(docs: DataFrame, tokenizer=None) -> DataFrame:
     stop-word-only doc.)
     """
     tok = tokenizer or tokenize_udf
-    tokens = docs.select(
-        "doc_id", F.explode_outer(tok(F.col("text"))).alias("term")
+    return _tf(
+        docs.select("doc_id", F.explode_outer(tok(F.col("text"))).alias("term"))
     )
+
+
+def _tf(tokens: DataFrame) -> DataFrame:
+    """(doc_id, term) token rows → (doc_id, term, tf). A NULL-term
+    marker row counts 0, so a zero-token doc keeps one tf-0 row."""
     return tokens.groupBy("doc_id", "term").agg(
         F.sum(F.when(F.col("term").isNotNull(), 1).otherwise(0))
         .cast("int")
@@ -317,7 +303,6 @@ def index_from_raw_postings(
 
 def build_index_from_pages(
     pages: DataFrame,
-    id_method: str = "hash",
     k1: float = K1,
     b: float = B,
 ) -> InvertedIndex:
@@ -329,43 +314,32 @@ def build_index_from_pages(
     it would be split from the projection that computes it by Catalyst,
     and each part would call the UDF (two ArrowEvalPython nodes).
 
-    Semantically identical to prepare_docs(recompute_text=True) +
-    build_index (property-tested) but skips materializing `text`: the
-    fused UDF returns NULL for empty-text pages (the F12 exclusion —
-    filtered out, not counted in N) and [] for zero-token pages (which
-    DO count in N via the explode_outer marker row, matching the
-    reference's per-page num_pages increment). This is the throughput
-    path — the chained two-UDF form runs 2× python workers per core and
-    anti-scales (see textproc.extract_tokens_udf).
+    Mints the hash doc_id only. Semantically identical to
+    prepare_docs(recompute_text=True) + build_index (property-tested)
+    but skips materializing `text`: the fused UDF returns NULL for
+    empty-text pages (the F12 exclusion — filtered out, not counted in
+    N) and [] for zero-token pages (which DO count in N via the marker
+    row, matching the reference's per-page num_pages increment). This
+    is the throughput path — the chained two-UDF form runs 2× python
+    workers per core and anti-scales (see textproc.extract_tokens_udf).
     """
     from search_engine_spark.functions.textproc import extract_tokens_udf
 
-    df = pages.filter(F.col("lang").startswith("en"))
-    if id_method == "hash":
-        df = df.withColumn("doc_id", F.xxhash64(F.col("url")))
-    elif id_method == "dense":
-        df = df.withColumn(
-            "doc_id", F.row_number().over(Window.orderBy(F.col("url"))).cast("long")
-        )
-    else:
-        raise ValueError(id_method)
+    df = pages.filter(F.col("lang").startswith("en")).withColumn(
+        "doc_id", F.xxhash64(F.col("url"))
+    )
     # ONE operator consumes the UDF result: a filter over it would be
     # pushed below the projection that computes it and call the UDF a
     # second time (two ArrowEvalPython nodes, every page parsed twice).
     # NULL (empty text, F12) explodes to no row; [] becomes [NULL], the
-    # zero-token marker row whose tf folds to 0 below.
+    # zero-token marker row whose tf _tf folds to 0.
     toks = F.col("toks")
     tokens = df.withColumn("toks", extract_tokens_udf(F.col("html"))).select(
         "doc_id",
         F.explode(F.when(F.size(toks) == 0, F.array(F.lit(None))).otherwise(toks))
         .alias("term"),
     )
-    raw = tokens.groupBy("doc_id", "term").agg(
-        F.sum(F.when(F.col("term").isNotNull(), 1).otherwise(0))
-        .cast("int")
-        .alias("tf")
-    )
-    return index_from_raw_postings(raw, k1=k1, b=b)
+    return index_from_raw_postings(_tf(tokens), k1=k1, b=b)
 
 
 def salted_by_term(
@@ -478,10 +452,19 @@ def auto_salt_threshold(
     partitions / 4) — a Zipf head term always crosses this, tail terms
     never do. `salt_df_floor` keeps small corpora unsalted (the salt
     only buys anything when one term's list rivals a partition)."""
+    return _salt_threshold(index, salt_df_floor)[0]
+
+
+def _salt_threshold(index: InvertedIndex, salt_df_floor: int) -> tuple[int, int]:
+    """(threshold, max df) from ONE Σdf + max(df) aggregate job:
+    threshold = max(salt_df_floor, Σdf / shuffle partitions / 4)."""
+    row = index.term_stats.agg(
+        F.sum("df").alias("t"), F.max("df").alias("m")
+    ).collect()[0]
+    tot, max_df = int(row["t"] or 0), int(row["m"] or 0)
     spark = index.postings.sparkSession
-    tot = index.term_stats.agg(F.sum("df").alias("t")).collect()[0]["t"] or 0
     sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(salt_df_floor, int(tot / max(sp, 1) / 4))
+    return max(salt_df_floor, int(tot / max(sp, 1) / 4)), max_df
 
 
 def write_index(
@@ -522,13 +505,7 @@ def write_index(
         # df ≤ n_docs ≤ floor ≤ threshold: no term can cross it
         salt_df_threshold = None
     if salt_df_threshold == "auto":
-        row = index.term_stats.agg(
-            F.sum("df").alias("t"), F.max("df").alias("m")
-        ).collect()[0]
-        tot, max_df = int(row["t"] or 0), int(row["m"] or 0)
-        spark = index.postings.sparkSession
-        sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        thr = max(salt_df_floor, int(tot / max(sp, 1) / 4))
+        thr, max_df = _salt_threshold(index, salt_df_floor)
         salt_df_threshold = thr if max_df > thr else None
     if salt_df_threshold is not None:
         laid_out = salted_by_term(

@@ -2,7 +2,7 @@
 
 A 100 TB training-data pipeline carries media alongside text. The engine
 treats media as `payload binary` plus a typed metadata struct, and runs
-decode / feature-extraction / resize / frame-sampling as Arrow-batched
+decode / feature-extraction / frame-sampling as Arrow-batched
 `mapInPandas` stages — the same execution shape real decoders (PIL,
 ffmpeg, torchaudio) would use. Those libraries are NOT present in this
 environment, so the codec boundary is explicit:
@@ -10,9 +10,9 @@ environment, so the codec boundary is explicit:
 - `decode_media` is the REAL decode entry point and raises
   `NotImplementedError` unless the optional library import succeeds —
   a clearly-marked stub, not a silent fake.
-- Everything downstream (feature vectors, resize, frame sampling) runs
-  on `_fake_decode`, a deterministic pure-numpy stand-in keyed only on
-  the payload bytes, so the Spark-side plumbing — schemas, batch
+- Everything downstream (feature vectors, frame sampling) works on the
+  payload bytes directly, a deterministic pure-numpy stand-in for
+  decoded media, so the Spark-side plumbing — schemas, batch
   iteration, partition behavior, UDF signatures — is real and tested
   end-to-end even without codecs.
 
@@ -93,18 +93,8 @@ def decode_media(payload: bytes, kind: str):
         return np.asarray(_PIL_Image.open(io.BytesIO(payload)))
     raise NotImplementedError(
         f"real {kind} decoding requires codec libraries not present in "
-        "this environment; the pipeline runs on _fake_decode instead"
+        "this environment; the pipeline works on the raw payload bytes"
     )
-
-
-def _fake_decode(payload: bytes, n: int) -> np.ndarray:
-    """Deterministic stand-in decoder: payload bytes cycled to length n,
-    as float32 in [0, 1). Pure function of the bytes."""
-    if len(payload) == 0:
-        return np.zeros(n, dtype=np.float32)
-    raw = np.frombuffer(payload, dtype=np.uint8)
-    reps = -(-n // len(raw))
-    return (np.tile(raw, reps)[:n] / 256.0).astype(np.float32)
 
 
 FEATURES_SCHEMA = "doc_id long, kind string, feature array<float>"
@@ -149,36 +139,6 @@ def feature_rows(media: DataFrame, dim: int = 64) -> DataFrame:
         "kind",
         F.posexplode("feature").alias("dim", "value"),
     ).withColumn("value", F.round(F.col("value"), 6))
-
-
-RESIZED_SCHEMA = (
-    "doc_id long, width int, height int, pixels_mean float, payload binary"
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize every image to (width, height) via the fake decoder
-    (nearest-neighbor over the deterministic pixel array). The REAL
-    pixel path is decode_media — stubbed; the Spark plumbing (filter to
-    kind, batch iterate, re-emit binary) is the production shape."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "width": [], "height": [], "pixels_mean": [], "payload": []}
-            for doc_id, b, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                w0, h0 = int(meta["width"]), int(meta["height"])
-                img = _fake_decode(bytes(b), w0 * h0).reshape(h0, w0)
-                yi = (np.arange(height) * h0 // height).clip(0, h0 - 1)
-                xi = (np.arange(width) * w0 // width).clip(0, w0 - 1)
-                out = img[np.ix_(yi, xi)]
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(width)
-                rows["height"].append(height)
-                rows["pixels_mean"].append(float(out.mean()))
-                rows["payload"].append((out * 256.0).astype(np.uint8).tobytes())
-            yield pd.DataFrame(rows)
-
-    return media.filter(F.col("kind") == "image").mapInPandas(gen, RESIZED_SCHEMA)
 
 
 FRAMES_SCHEMA = "doc_id long, frame_idx int, frame binary"

@@ -28,7 +28,7 @@ checks value-exact.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.query import _bm25, _matched, _rank_cut, topk
@@ -298,18 +298,6 @@ def span_near_search(
         .orderBy(F.col("n_spans").desc(), F.col("doc_id").asc())
         .limit(k)
     )
-
-
-def conjunctive_filter(
-    scored_with_counts: DataFrame, n_terms_required: Column | int
-) -> DataFrame:
-    """AND semantics: keep docs matching ALL query terms (post-agg filter)."""
-    need = (
-        F.lit(n_terms_required)
-        if isinstance(n_terms_required, int)
-        else n_terms_required
-    )
-    return scored_with_counts.filter(F.col("n_matched") == need)
 
 
 def proximity_bm25(

@@ -297,18 +297,17 @@ def search_and_present(
     queries: dict[int, str] | list[str],
     k: int = 10,
     scorer: str = "bm25",
-    id_method: str = "hash",
 ) -> DataFrame:
     """The reference's GET /search, end to end (app/main.py:51-95):
     tokenize → score → top-k → join pages → title/domain/breadcrumb/
     snippet. Returns one presented row per hit, ranked per query.
 
-    `pages` must carry (url, html[, title]); `id_method` must match the
-    index build ('hash' or 'dense') so the re-minted ids join back."""
+    `pages` must carry (url, html[, title]), plus the index's `doc_id`
+    when the index was not built with hash ids (see present_results)."""
     from search_engine_spark.functions.presentation import present_results
 
     topk = search(index, spark, queries, k=k, scorer=scorer)
-    return present_results(topk, pages, queries, id_method=id_method)
+    return present_results(topk, pages, queries)
 
 
 def did_you_mean(

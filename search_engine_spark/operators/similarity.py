@@ -385,38 +385,23 @@ def build_lsh_index(
     dim: int = 64,
     n_planes: int = 8,
     n_tables: int = 8,
-    layout: str = "sorted",
 ) -> None:
     """Materialize the LSH serving index: one row per (table, vector),
     laid out so a probe reads only its ~n_tables·(1+P+C(P,2)) matching
     buckets, NOT a recompute-signatures pass over the whole embeddings
     relation (the r2 judge's top gap: every query paid a full O(n)
-    scan). Probes (lsh_index_topk / _batch) filter on the t/sig
-    COLUMNS, so they work unchanged on either layout:
-
-    - layout="sorted" (default): directories by t only, rows sorted by
-      sig within each file — the sig predicate is pushed to the
-      parquet scan and non-matching ROW GROUPS are skipped via min/max
-      stats (plan-asserted in tests/test_plans.py). Wins on every
-      measured axis at bench scale: ~2.6× cheaper build (8.0 s vs
-      20.6 s at sf0.1), ~1.6× faster batch probe (3.0 s vs 4.7 s —
-      footer reads are cheap next to the small-files tax the
-      per-bucket layout pays), immune to the 2^P·n_tables tiny-file
-      problem, and appendable (lsh_index_add).
-    - layout="partitioned": directories by (t, sig) — 2^P·n_tables
-      dirs, pruned at PLANNING time; a probe never even lists a
-      non-matching bucket's files. Kept for the 10^12-row point-probe
-      regime where directory pruning beats reading one footer per t
-      dir — at that scale each (t, sig) dir holds ~n/2^P of the corpus
-      and the dir count stays fixed, while file counts (and the sorted
-      layout's footer reads) grow with corpus size. Costly to write at
-      toy scale (the tiny files are pure filesystem metadata: measured
-      28.7 s for 1,653 files vs 0.9 s sorted, at sf0.01).
+    scan). Directories by t only, rows sorted by sig within each file:
+    probes (lsh_index_topk / _batch) filter on the t/sig columns, t
+    prunes directories and the sig predicate is pushed to the parquet
+    scan, which skips non-matching ROW GROUPS via min/max stats
+    (plan-asserted in tests/test_plans.py). One directory per table
+    keeps the file count independent of 2^P, and the layout is
+    appendable (lsh_index_add).
 
     Storage trade, deliberate: the embedding is stored in each of its
     n_tables bucket rows (n_tables× duplication) so the probe reranks
     without a join back to the base table — the standard LSH serving
-    layout. At 10^12 rows each (t, sig) partition still holds ~n/2^P of
+    layout. At 10^12 rows each (t, sig) bucket still holds ~n/2^P of
     the corpus; add a bucketBy(vec_id) within partitions if single
     buckets outgrow executor memory.
 
@@ -430,7 +415,7 @@ def build_lsh_index(
     incremental pattern.
     """
     _write_lsh_rows(
-        _lsh_rows(embeddings, dim, n_planes, n_tables), path, layout, "overwrite"
+        _lsh_rows(embeddings, dim, n_planes, n_tables), path, "overwrite"
     )
 
 
@@ -448,25 +433,11 @@ def _lsh_rows(
     )
 
 
-def _write_lsh_rows(
-    sigs: DataFrame, path: str, layout: str, mode: str
-) -> None:
-    if layout == "partitioned":
-        # repartition on the partition keys so each (t, sig) directory
-        # gets ONE file instead of one per upstream task (up to
-        # tasks×2^P tiny files otherwise — footer-read cost lands on
-        # every future probe)
-        sigs.repartition("t", "sig").write.mode(mode).partitionBy(
-            "t", "sig"
-        ).parquet(path)
-    elif layout == "sorted":
-        sigs.repartition("t").sortWithinPartitions("t", "sig").write.mode(
-            mode
-        ).partitionBy("t").parquet(path)
-    else:
-        raise ValueError(
-            f"unknown layout {layout!r}; one of ('partitioned', 'sorted')"
-        )
+def _write_lsh_rows(sigs: DataFrame, path: str, mode: str) -> None:
+    """The one LSH writer: t directories, rows sig-sorted within each."""
+    sigs.repartition("t").sortWithinPartitions("t", "sig").write.mode(
+        mode
+    ).partitionBy("t").parquet(path)
 
 
 def lsh_index_add(
@@ -475,7 +446,6 @@ def lsh_index_add(
     dim: int = 64,
     n_planes: int = 8,
     n_tables: int = 8,
-    layout: str = "sorted",
 ) -> None:
     """Epoch-append a new embedding batch into an existing
     build_lsh_index layout: the batch's bucket rows are computed with
@@ -489,7 +459,7 @@ def lsh_index_add(
     small-files accumulate (mirrors streaming/incremental.py's
     latest-wins epochs; cf. VERDICT r4 item 5)."""
     _write_lsh_rows(
-        _lsh_rows(new_embeddings, dim, n_planes, n_tables), path, layout, "append"
+        _lsh_rows(new_embeddings, dim, n_planes, n_tables), path, "append"
     )
 
 
@@ -509,7 +479,7 @@ def load_lsh_index(spark, path: str) -> DataFrame:
     return _layout.live(spark, path, spark.read.parquet(path))
 
 
-def lsh_index_compact(spark, path: str, layout: str = "sorted") -> None:
+def lsh_index_compact(spark, path: str) -> None:
     """Rewrite a build_lsh_index layout without its tombstoned rows and
     with per-partition file counts reset — the compaction that caps
     tombstone anti-join cost and append-induced small files. Writes to
@@ -519,7 +489,7 @@ def lsh_index_compact(spark, path: str, layout: str = "sorted") -> None:
     next compaction cleans up after it."""
     live = load_lsh_index(spark, path).select("vec_id", "embedding", "t", "sig")
     _layout.swap(
-        spark, path, lambda tmp: _write_lsh_rows(live, tmp, layout, "overwrite")
+        spark, path, lambda tmp: _write_lsh_rows(live, tmp, "overwrite")
     )
 
 
@@ -537,14 +507,11 @@ def lsh_index_topk(
     """Probe a build_lsh_index table: the query's bucket keys are
     computed driver-side (py_hyperplane_sigs — bit-identical to the
     build's Spark expression), and candidates come from a scan filtered
-    on the (t, sig) bucket predicate. On the default sorted layout `t`
-    is a partition filter and the `sig` predicate is pushed to the
-    parquet scan, which skips row groups by their sig min/max; on
-    layout="partitioned" both are partition filters and Catalyst prunes
-    every non-matching bucket directory at planning time (both
-    plan-asserted in tests/test_plans.py). Results are identical to the
-    query-time lsh_cosine_topk (same candidate semantics, same f64
-    rerank).
+    on the (t, sig) bucket predicate: `t` is a partition filter and the
+    `sig` predicate is pushed to the parquet scan, which skips row
+    groups by their sig min/max (plan-asserted in tests/test_plans.py).
+    Results are identical to the query-time lsh_cosine_topk (same
+    candidate semantics, same f64 rerank).
 
     `index` is a path OR the DataFrame from one load_lsh_index of that
     path: a serving loop MUST load once and probe many — passing the
@@ -568,7 +535,7 @@ def _probe_sigs(qsigs, n_planes: int, probe_hamming: int) -> dict[int, list[int]
 
 def _bucket_pred(keys_by_table: dict[int, list[int]]):
     """OR over tables of (t = T AND sig IN keys): the bucket probe, a
-    filter on the t/sig columns of either index layout."""
+    filter on the t/sig columns of the index layout."""
     pred = None
     for t, keys in keys_by_table.items():
         p = (col("t") == t) & col("sig").isin(keys)
@@ -803,8 +770,8 @@ def lsh_cosine_topk(
 
     The query's 8×37 probe bucket keys are computed driver-side (the
     query signature is one tiny collect), then candidates come from an
-    `isin`-style equi-join on (t, sig) — with a signature table
-    partitioned by (t, sig) this is a pruned index probe, not a scan.
+    `isin`-style (t, sig) filter — over a persisted build_lsh_index
+    layout the same filter is a pruned index probe, not a scan.
     """
     sig_col = hyperplane_sigs(col("embedding"), dim, n_planes, n_tables)
     with_sig = embeddings.select("vec_id", "embedding", sig_col.alias("sigs"))

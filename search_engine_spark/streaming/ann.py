@@ -13,7 +13,7 @@ cannot give a streaming writer). Input files are read as
 (vec_id long, embedding array<float>); any other column is ignored.
 
 Layout: {state}/epochs/batch=N/t=T/… — each epoch is an independent
-sorted-layout shard (sig-sorted row groups within t dirs), so a probe
+build_lsh_index shard (sig-sorted row groups within t dirs), so a probe
 scan prunes on t directories and sig row-group stats exactly like the
 batch layout, with the epoch dir as one more partition level. Bucket
 rows are a bag: probing the union of epochs is value-identical to
@@ -59,7 +59,6 @@ def lsh_index_stream(
         _write_lsh_rows(
             _lsh_rows(batch, dim, n_planes, n_tables),
             f"{state_path}/epochs/batch={epoch_id}",
-            "sorted",
             "overwrite",
         )
 

@@ -59,7 +59,6 @@ def incremental_index_update(
     input_path: str,
     state_path: str,
     tokenizer=None,
-    recompute_text: bool = False,
     max_files_per_trigger: int | None = None,
 ) -> InvertedIndex:
     """Drain all new page files under input_path into the postings state,
@@ -67,7 +66,7 @@ def incremental_index_update(
     already-processed files are skipped via the stream checkpoint."""
 
     def write_epoch(batch: DataFrame, epoch_id: int) -> None:
-        docs = prepare_docs(batch, id_method="hash", recompute_text=recompute_text)
+        docs = prepare_docs(batch)
         raw = raw_postings_from_docs(docs, tokenizer).select("doc_id", "term", "tf")
         raw.write.mode("overwrite").parquet(
             f"{state_path}/postings_raw/batch={epoch_id}"

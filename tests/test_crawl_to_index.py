@@ -31,7 +31,7 @@ def test_crawl_feeds_index_and_search(spark, tmp_path):
     n_pages = corpus.count()
     assert n_pages > 6
 
-    idx = build_index_from_pages(corpus, id_method="hash")
+    idx = build_index_from_pages(corpus)
     assert idx.doc_stats.count() == n_pages  # every crawled page indexed
 
     # DeterministicTransport bodies draw from a fixed 10-word vocab —

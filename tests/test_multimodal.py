@@ -4,7 +4,7 @@ variants (char n-gram Jaccard, embedding near-dup).
 The codec-free contract: decode_media raises NotImplementedError
 (clearly-marked stub), while the Spark-side plumbing — schemas, Arrow
 batch iteration, fan-out, determinism — is real and fully exercised on
-the deterministic fake decoder.
+the raw payload bytes.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ from search_engine_spark.operators.multimodal import (
     attach_media,
     decode_media,
     extract_features,
-    resize_images,
     sample_frames,
 )
 
@@ -76,16 +75,6 @@ def test_features_shape_norm_determinism(media):
         assert norm == pytest.approx(1.0, abs=1e-5)
     again = {r["doc_id"]: r["feature"] for r in extract_features(media, dim=64).collect()}
     assert {r["doc_id"]: r["feature"] for r in rows} == again
-
-
-def test_resize_images(media):
-    out = resize_images(media, 16, 12).collect()
-    n_images = media.filter(F.col("kind") == "image").count()
-    assert len(out) == n_images
-    for r in out:
-        assert (r["width"], r["height"]) == (16, 12)
-        assert len(bytes(r["payload"])) == 16 * 12
-        assert 0.0 <= r["pixels_mean"] < 1.0
 
 
 def test_sample_frames_fanout(media):

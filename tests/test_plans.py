@@ -34,7 +34,7 @@ from search_engine_spark.sources.corpus import synth_pages
 @pytest.fixture(scope="module")
 def stored_index(spark, tmp_path_factory):
     pages = synth_pages(spark, 150, seed=13).cache()
-    idx = build_index_from_pages(pages, id_method="hash")
+    idx = build_index_from_pages(pages)
     path = str(tmp_path_factory.mktemp("idx"))
     write_index(idx, path)
     return pages, read_index(spark, path)
@@ -89,7 +89,7 @@ def test_bm25_plan_broadcasts_small_sides(spark, stored_index):
 def test_fused_equals_chained(spark):
     pages = synth_pages(spark, 200, seed=31).cache()
     chained = build_index(prepare_docs(pages, id_method="hash", recompute_text=True))
-    fused = build_index_from_pages(pages, id_method="hash")
+    fused = build_index_from_pages(pages)
     pa = {
         (r["term"], r["doc_id"], r["tf"])
         for r in chained.postings.select("term", "doc_id", "tf").collect()
@@ -116,7 +116,7 @@ def test_extraction_udf_runs_once_per_lineage(spark):
     that computes it, where it calls the UDF a second time; the build
     and the chained text path must consume each result in ONE operator."""
     pages = synth_pages(spark, 50, seed=13)
-    idx = build_index_from_pages(pages, id_method="hash")
+    idx = build_index_from_pages(pages)
     idx.unpersist()
     # fresh frames over the unpersisted relations plan the whole lineage;
     # postings reads raw postings twice (true postings ⋈ doc_stats)
@@ -142,7 +142,7 @@ def test_fused_keeps_empty_and_stopword_only_pages_like_chained(spark):
         [(u, h, "en") for u, h in rows], "url string, html binary, lang string"
     )
     chained = build_index(prepare_docs(pages, id_method="hash", recompute_text=True))
-    fused = build_index_from_pages(pages, id_method="hash")
+    fused = build_index_from_pages(pages)
     ids = [r[0] for r in pages.select(F.xxhash64("url")).collect()]
     dl = {r["doc_id"]: r["dl"] for r in fused.doc_stats.collect()}
     assert dl == {r["doc_id"]: r["dl"] for r in chained.doc_stats.collect()}
@@ -162,7 +162,7 @@ def test_build_write_read_runs_at_most_fifteen_jobs(spark, stored_index, tmp_pat
     path = str(tmp_path / "idx")
 
     def build_write_read():
-        idx = build_index_from_pages(pages, id_method="hash")
+        idx = build_index_from_pages(pages)
         write_index(idx, path)
         read_index(spark, path)
         idx.unpersist()
@@ -198,66 +198,44 @@ def test_ivf_assignment_is_narrow(spark):
     assert "Exchange" not in plan, plan[:1500]
 
 
-def test_lsh_index_probe_is_partition_pruned(spark, tmp_path):
-    """The ANN serving path must be an index PROBE. layout="partitioned":
-    the (t, sig) probe predicates appear as PartitionFilters on the
-    index scan (directory pruning at planning time), and the scan reads
-    only the probed buckets' files — not the whole index."""
-    from search_engine_spark.operators.similarity import (
-        build_lsh_index,
-        lsh_index_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    path = str(tmp_path / "lsh")
-    build_lsh_index(emb, path, layout="partitioned")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    probe = lsh_index_topk(spark, path, qvec, query_vec_id=0)
-    plan = _plan(probe)
-    scan_part = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert scan_part, plan[:3000]
-    # large literal sets render as INSET, small ones as IN
-    assert "sig" in scan_part[0], scan_part[0]
-    assert " IN " in scan_part[0] or " INSET " in scan_part[0], scan_part[0]
-    # pruning is real, not cosmetic: executed scan reads fewer files
-    # than the index holds (8 tables x 37 probe keys << all buckets)
-    probe.collect()
-    import re
-
-    exec_plan = probe._jdf.queryExecution().executedPlan().toString()
-    total_parts = len(
-        [d for d in (tmp_path / "lsh").glob("t=*/sig=*") if d.is_dir()]
-    )
-    m = re.search(r"number of files read: (\d+)", exec_plan)
-    if m:  # metric name is version-dependent; the filter assert above is primary
-        assert int(m.group(1)) < total_parts
-
-
 def test_lsh_sorted_default_probe_pushes_sig_to_scan(spark, tmp_path):
-    """layout="sorted" (the default build): t is a PartitionFilter and
-    the sig predicate is PUSHED to the parquet scan, where the
-    sig-sorted row groups make min/max skipping effective — the pruning
-    mechanism the default layout relies on."""
+    """The LSH index layout: t is a PartitionFilter and the sig
+    predicate is PUSHED to the parquet scan, where the sig-sorted row
+    groups make min/max skipping effective. lsh_index_add and
+    lsh_index_compact write through the same writer, so the probe keeps
+    that shape after each."""
+    import pathlib
+
     from search_engine_spark.operators.similarity import (
         build_lsh_index,
+        lsh_index_add,
+        lsh_index_compact,
         lsh_index_topk,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     path = str(tmp_path / "lsh_sorted")
-    build_lsh_index(emb, path)  # default layout == sorted
-    import pathlib
-
-    assert [d for d in pathlib.Path(path).glob("t=*") if d.is_dir()]
-    assert not [d for d in pathlib.Path(path).glob("t=*/sig=*") if d.is_dir()]
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    probe = lsh_index_topk(spark, path, qvec, query_vec_id=0)
-    plan = _plan(probe)
-    part_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert part_lines and "t" in part_lines[0], plan[:3000]
-    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert pushed, plan[:3000]
-    assert "sig" in pushed[0] and ("In(" in pushed[0] or "IN" in pushed[0]), pushed[0]
+
+    def check(step):
+        assert [d for d in pathlib.Path(path).glob("t=*") if d.is_dir()], step
+        assert not [
+            d for d in pathlib.Path(path).glob("t=*/sig=*") if d.is_dir()
+        ], step
+        plan = _plan(lsh_index_topk(spark, path, qvec, query_vec_id=0))
+        part_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
+        assert part_lines and "t" in part_lines[0], (step, plan[:3000])
+        pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
+        assert pushed, (step, plan[:3000])
+        assert "sig" in pushed[0], (step, pushed[0])
+        assert "In(" in pushed[0] or "IN" in pushed[0], (step, pushed[0])
+
+    build_lsh_index(emb.filter(F.col("vec_id") % 2 == 0), path)
+    check("build")
+    lsh_index_add(emb.filter(F.col("vec_id") % 2 == 1), path)
+    check("add")
+    lsh_index_compact(spark, path)
+    check("compact")
 
 
 def test_ivf_index_probe_is_partition_pruned(spark, tmp_path):

@@ -137,7 +137,7 @@ def test_search_and_present_end_to_end(spark):
     from search_engine_spark.operators.query import search_and_present
 
     pages = synth_pages(spark, 100, seed=23).cache()
-    index = build_index_from_pages(pages, id_method="hash")
+    index = build_index_from_pages(pages)
     out = search_and_present(index, pages, spark, ["hippopotamus ladder"], k=5)
     rows = out.collect()
     assert 0 < len(rows) <= 5
@@ -146,14 +146,20 @@ def test_search_and_present_end_to_end(spark):
 
 
 def test_present_results_dense_ids(spark):
-    """id_method must round-trip for dense-id indexes too (a hash-only
-    re-mint would silently join zero rows)."""
+    """A dense-id index's hits are presented with the pages prepare_docs
+    numbered: `pages` carries that doc_id, and each row's url is the
+    url of its id. (Numbering the raw pages again would count the
+    non-English ones that prepare_docs drops and attach other pages'
+    urls to the hits.)"""
     pages = synth_pages(spark, 80, seed=29).cache()
-    docs = prepare_docs(pages, id_method="dense")
+    docs = prepare_docs(pages, id_method="dense").cache()
     index = build_index(docs)
     topk = search(index, spark, ["hippopotamus"], k=5)
-    out = present_results(topk, pages, ["hippopotamus"], id_method="dense").collect()
+    with_ids = docs.select("doc_id", "url").join(pages, "url")
+    out = present_results(topk, with_ids, ["hippopotamus"]).collect()
+    url_of = {r["doc_id"]: r["url"] for r in docs.collect()}
     assert len(out) == len(topk.collect()) > 0
+    assert all(r["url"] == url_of[r["doc_id"]] for r in out)
 
 
 def test_wikipedia_fixture_snippet_byte_equal():

@@ -246,46 +246,6 @@ def test_ivf_batch_probe_equals_perquery_loop(spark, tmp_path):
         assert len(loop) == 10
 
 
-def test_lsh_sorted_layout_equals_partitioned(spark, tmp_path):
-    """The sorted layout (t dirs, sig-sorted row groups) must answer
-    probes identically to the partitioned layout, with the sig
-    predicate pushed to the parquet scan (row-group stats pruning)."""
-    import contextlib
-    import io
-
-    from search_engine_spark.operators.similarity import (
-        build_lsh_index,
-        lsh_index_topk,
-        lsh_index_topk_batch,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    p_part = str(tmp_path / "lsh_part")
-    p_sort = str(tmp_path / "lsh_sort")
-    build_lsh_index(emb, p_part)
-    build_lsh_index(emb, p_sort, layout="sorted")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-
-    a = lsh_index_topk(spark, p_part, qvec, query_vec_id=0).collect()
-    b_df = lsh_index_topk(spark, p_sort, qvec, query_vec_id=0)
-    b = b_df.collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        b_df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PushedFilters" in plan and "sig" in plan.split("PushedFilters", 1)[1][:400]
-
-    queries = {0: qvec}
-    ba = lsh_index_topk_batch(spark, spark.read.parquet(p_part), queries).collect()
-    bb = lsh_index_topk_batch(spark, spark.read.parquet(p_sort), queries).collect()
-    assert [tuple(r) for r in ba] == [tuple(r) for r in bb]
-
-    with pytest.raises(ValueError):
-        build_lsh_index(emb, str(tmp_path / "x"), layout="zigzag")
-
-
 def test_pq_codes_partition_and_lloyd_improves(spark):
     """PQ codebook training (Jégou et al. 2011 ADC): every (vec,
     subspace) gets exactly one code in [0, ks), and the Lloyd schedule
