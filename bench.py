@@ -1,9 +1,11 @@
 """Per-round benchmark harness (driver contract).
 
 Runs the headline pipeline at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value" (total sec), "unit": "sec", "queries": {name:
-sec}, "sf": ...}.
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], writes the full
+per-row record ({"metric", "value", "unit", "sf", "queries": {name:
+sec} for every row, "extra"}) to BENCH/last_run.json and prints ONE
+short JSON headline line: the same record with only the nine CORE rows
+in "queries" (see _headline).
 
 Headline queries:
 - pages_index_build: synthetic Common-Crawl-style pages (n scales with
@@ -41,6 +43,22 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 _SF = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.1
 N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", max(2000, int(200_000 * _SF))))
 
+#: where main() writes the full per-row record
+LAST_RUN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "last_run.json")
+
+# the headline `value` sums the SAME nine components every round
+# (the r1/r2 set) so BENCH_rN.json diffs like-for-like; breadth rows
+# added later (warm twins, portable-family twin, pair enumeration,
+# ANN index build/probe) are reported per-row in LAST_RUN and in
+# extra.full_suite_sec, not folded into the headline — otherwise
+# every added measurement reads as a regression.
+CORE = (
+    "pages_index_build", "bm25_search", "tfidf_search",
+    "block_index_build", "block_bm25_search", "block_bm25_100q",
+    "docs_index_build", "minhash_dedup", "cosine_topk",
+)
+METRIC = "headline pipeline wall time (index build + search + dedup + ann core)"
+
 SEARCH_QUERIES = [
     "hippopotamus",
     "ladder pipe",
@@ -51,6 +69,25 @@ SEARCH_QUERIES = [
     "lantern orchard",
     "hippopotamus ladder pipe seagull elephant",
 ]
+
+
+def _record(timings: dict[str, float], extra: dict) -> dict:
+    """The run's record: `value` is the sum of the CORE rows."""
+    return {
+        "metric": METRIC,
+        "value": round(sum(timings[k] for k in CORE), 3),
+        "unit": "sec",
+        "sf": _SF,
+        "queries": timings,
+        "extra": extra,
+    }
+
+
+def _headline(timings: dict[str, float], extra: dict) -> str:
+    """The one stdout JSON line: the record with the CORE rows only, so
+    its length does not grow with the breadth rows (a reader keeping the
+    last 2,000 characters of stdout can always parse it)."""
+    return json.dumps(_record({k: timings[k] for k in CORE}, extra))
 
 
 def main() -> None:
@@ -802,48 +839,24 @@ def main() -> None:
         )
         pblocks.unpersist()
 
-    # the headline `value` sums the SAME nine components every round
-    # (the r1/r2 set) so BENCH_rN.json diffs like-for-like; breadth rows
-    # added later (warm twins, portable-family twin, pair enumeration,
-    # ANN index build/probe) are reported per-row and in
-    # extra.full_suite_sec, not folded into the headline — otherwise
-    # every added measurement reads as a regression.
-    CORE = (
-        "pages_index_build", "bm25_search", "tfidf_search",
-        "block_index_build", "block_bm25_search", "block_bm25_100q",
-        "docs_index_build", "minhash_dedup", "cosine_topk",
-    )
-    total = round(sum(timings[k] for k in CORE), 3)
     full_suite = round(sum(timings.values()), 3)
     timings.update(latencies)  # reported per-query latencies, excluded from total
-    print(
-        json.dumps(
-            {
-                "metric": "headline pipeline wall time (index build + search + dedup + ann core)",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": _SF,
-                "extra": {
-                    "n_pages": N_PAGES,
-                    "cpus": CPUS,
-                    "full_suite_sec": full_suite,
-                    "pages_docs_per_sec": round(
-                        N_PAGES / timings["pages_index_build"], 1
-                    ),
-                    "block_queries_per_sec": round(
-                        len(batch_queries) / timings["block_bm25_100q"], 1
-                    ),
-                    "crawl_fetches_per_sec": round(
-                        n_fetched / timings["crawl_2rounds"], 1
-                    ),
-                    "pipeline_e2e_docs_per_sec": round(
-                        n_e2e_docs / timings["pipeline_e2e"], 1
-                    ),
-                },
-            }
-        )
-    )
+    extra = {
+        "n_pages": N_PAGES,
+        "cpus": CPUS,
+        "full_suite_sec": full_suite,
+        "pages_docs_per_sec": round(N_PAGES / timings["pages_index_build"], 1),
+        "block_queries_per_sec": round(
+            len(batch_queries) / timings["block_bm25_100q"], 1
+        ),
+        "crawl_fetches_per_sec": round(n_fetched / timings["crawl_2rounds"], 1),
+        "pipeline_e2e_docs_per_sec": round(
+            n_e2e_docs / timings["pipeline_e2e"], 1
+        ),
+    }
+    with open(LAST_RUN, "w") as f:
+        json.dump(_record(timings, extra), f, indent=1)
+    print(_headline(timings, extra))
     spark.stop()
 
 

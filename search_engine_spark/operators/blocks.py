@@ -420,10 +420,10 @@ def _bm25f_contrib(
         body, anch, ts = (r.filter(F.col("term").isin(terms)) for r in (body, anch, ts))
         ts = F.broadcast(ts)
 
-    def field(rel, tf, lens, length, avg, b, w=None):
+    def field(rel, tf, length, avg, b, w=None):
         num = _f64(tf) if w is None else F.lit(w) * _f64(tf)
         norm = F.lit(1.0 - b) + F.lit(b) * _f64(length) / F.lit(float(avg))
-        return rel.join(lens, "doc_id").select(
+        return rel.select(
             "term",
             "doc_id",
             F.col(tf).cast("long").alias("ftf"),
@@ -431,11 +431,11 @@ def _bm25f_contrib(
         )
 
     x = F.col("x")
+    # body postings carry their own dl; anchors join their lengths
+    anch = anch.join(anchor_len, "doc_id")
     return (
-        field(body, "tf", index.doc_stats, "dl", index.avgdl, b_body)
-        .unionByName(
-            field(anch, "tf_anchor", anchor_len, "alen", avg_alen, b_anchor, w_anchor)
-        )
+        field(body, "tf", "dl", index.avgdl, b_body)
+        .unionByName(field(anch, "tf_anchor", "alen", avg_alen, b_anchor, w_anchor))
         .groupBy("term", "doc_id")
         .agg(F.sum("ftf").alias("tf"), F.sum("x").alias("x"))
         .join(ts, "term")

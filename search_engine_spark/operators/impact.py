@@ -1,8 +1,9 @@
 """Impact-quantized postings: b-bit integer serving scores.
 
 Anh & Moffat's impact-ordered index idea (ACM TOIS 2006), Spark-first:
-precompute each posting's full BM25 contribution impact = bm25_idf ·
-tf_norm at build time, linearly quantize it to b bits against the
+compute each posting's full BM25 contribution impact = bm25_idf ·
+tf_norm once (tf_norm derived from the posting's tf and dl, as every
+InvertedIndex carries it), linearly quantize it to b bits against the
 global [min, max] impact range, and store ONLY the small integer. The
 serving win at 10^12-posting scale is twofold: the scored column
 shrinks from an 8-byte double to a 1-byte slot (the parquet page is

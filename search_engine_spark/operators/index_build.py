@@ -12,11 +12,15 @@ scalability cliff this engine replaces with two shuffles total:
        → groupBy(term) for df            [shuffle 2, map-side combine]
 
 At 100 TB the heavy relation is postings; everything term-global (df,
-idf, N, avgdl) is tiny by comparison. BM25 per-posting weights
-(tf_norm) are precomputed AT BUILD TIME so query-time scoring needs no
-join against doc_stats — the classic impact-ordered-index trick, which
-in Spark terms removes a per-query shuffle join against a doc-sized
-table.
+idf, N, avgdl) is tiny by comparison. Each posting carries its
+document's length `dl`, joined from doc_stats ONCE at build time, so
+query-time scoring needs no join against doc_stats (in Spark terms, no
+per-query shuffle join against a doc-sized table). The BM25 weight
+tf_norm is derived from (tf, dl) by one projection with avgdl, k1 and b
+as literals (`_postings`), on the built frame and on a read one alike:
+the written index stores the small integers (tf, dl), not the f64
+tf_norm, and its `meta` table records k1 and b next to N and avgdl, so
+`read_index` reproduces the build's floats bit for bit.
 
 doc_id minting: `hash` (xxhash64(url), shuffle-free, the 10^12-doc
 path; the only id build_index_from_pages mints) or, in prepare_docs
@@ -27,7 +31,7 @@ ids match the reference's golden fixtures).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -42,10 +46,10 @@ B = 0.75
 #: the written index tables and their column types: read_index passes
 #: them, so a read runs no schema-inference job per table
 _TABLES = {
-    "postings": "term string, doc_id long, tf int, tf_norm double",
+    "postings": "term string, doc_id long, tf int, dl long",
     "term_stats": "term string, df long, idf double, idf_f32 float, bm25_idf double",
     "doc_stats": "doc_id long, dl long",
-    "meta": "n_docs long, avgdl double",
+    "meta": "n_docs long, avgdl double, k1 double, b double",
 }
 
 
@@ -61,6 +65,17 @@ def _tf_norm(avgdl: float, k1: float = K1, b: float = B) -> Column:
     columns: tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))."""
     tf = F.col("tf")
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
+
+
+def _postings(stored: DataFrame, avgdl: float, k1: float, b: float) -> DataFrame:
+    """The postings frame over stored (term, doc_id, tf, dl) rows, with
+    tf_norm derived by projection (avgdl, k1, b literals). Built and
+    read indexes both go through here, so their floats are identical;
+    over a pushed term filter Catalyst evaluates it on surviving rows
+    only."""
+    return stored.select(
+        "term", "doc_id", "tf", "dl", _tf_norm(avgdl or 1.0, k1, b).alias("tf_norm")
+    )
 
 
 def latest_snapshot(pages: DataFrame) -> DataFrame:
@@ -153,10 +168,14 @@ def prepare_docs(
 class InvertedIndex:
     """The built index: exploded columnar postings + term/doc dimensions.
 
-    postings(term, doc_id, tf, tf_norm)  — tf_norm is the precomputed
-        BM25 term-saturation factor tf·(k1+1)/(tf+k1·(1-b+b·dl/avgdl)).
+    postings(term, doc_id, tf, dl, tf_norm)  — dl is the document's
+        length (stored with each posting); tf_norm is the BM25
+        term-saturation factor tf·(k1+1)/(tf+k1·(1-b+b·dl/avgdl)),
+        derived from tf and dl without a join and never written.
     term_stats(term, df, idf, idf_f32, bm25_idf)
     doc_stats(doc_id, dl)
+    k1, b: the BM25 parameters tf_norm was derived with; write_index
+        records them in `meta` next to n_docs and avgdl.
     """
 
     postings: DataFrame
@@ -164,6 +183,8 @@ class InvertedIndex:
     doc_stats: DataFrame
     n_docs: int
     avgdl: float
+    k1: float = K1
+    b: float = B
 
     def cache(self) -> "InvertedIndex":
         self.postings.cache()
@@ -278,17 +299,9 @@ def index_from_raw_postings(
         _bm25_idf(n_docs).alias("bm25_idf"),
     )
 
-    # precompute the BM25 doc-length normalization into each posting
-    # (shuffle join on doc_id happens ONCE at build, never at query time)
-    postings = (
-        true_postings.join(doc_stats, "doc_id")
-        .select(
-            "term",
-            "doc_id",
-            "tf",
-            _tf_norm(avgdl or 1.0, k1, b).alias("tf_norm"),
-        )
-    )
+    # attach each posting's doc length (shuffle join on doc_id happens
+    # ONCE at build, never at query time); tf_norm derives from it
+    postings = _postings(true_postings.join(doc_stats, "doc_id"), avgdl, k1, b)
 
     index = InvertedIndex(
         postings=postings,
@@ -296,6 +309,8 @@ def index_from_raw_postings(
         doc_stats=doc_stats,
         n_docs=n_docs,
         avgdl=avgdl,
+        k1=k1,
+        b=b,
     )
     index._persisted = [raw_postings]  # doc_stats unpersisted via the field
     return index
@@ -404,7 +419,7 @@ def delete_docs(index: InvertedIndex, doc_ids: DataFrame) -> InvertedIndex:
     # they are already in postings as (doc_id, NULL, 0) rows and pass
     # through the anti-join untouched, so nothing special to do — the
     # finalizer counts them toward N exactly as at build time.
-    return index_from_raw_postings(raw)
+    return index_from_raw_postings(raw, k1=index.k1, b=index.b)
 
 
 def index_diff(old: InvertedIndex, new: InvertedIndex) -> DataFrame:
@@ -496,8 +511,9 @@ def write_index(
     A corpus of at most `salt_df_floor` docs skips the aggregate too:
     df ≤ n_docs ≤ floor ≤ threshold, so no term can cross.
 
-    The one-row `meta` (n_docs, avgdl) table is built from Arrow
-    columns: one partition, one file.
+    Postings are written as (term, doc_id, tf, dl): tf_norm is derived
+    again on read. The one-row `meta` (n_docs, avgdl, k1, b) table is
+    built from Arrow columns: one partition, one file.
     """
     from search_engine_spark.catalog import write_table
 
@@ -507,20 +523,22 @@ def write_index(
     if salt_df_threshold == "auto":
         thr, max_df = _salt_threshold(index, salt_df_floor)
         salt_df_threshold = thr if max_df > thr else None
+    stored = index.postings.select("term", "doc_id", "tf", "dl")
     if salt_df_threshold is not None:
         laid_out = salted_by_term(
-            index.postings, index.term_stats, salt_df_threshold, num_salts
+            stored, index.term_stats, salt_df_threshold, num_salts
         )
     else:
-        laid_out = index.postings.repartition(
-            F.col("term")
-        ).sortWithinPartitions("term", "doc_id")
+        laid_out = stored.repartition(F.col("term")).sortWithinPartitions(
+            "term", "doc_id"
+        )
     write_table(laid_out, f"{path}/postings")
     write_table(index.term_stats, f"{path}/term_stats")
     write_table(index.doc_stats, f"{path}/doc_stats")
     meta = pa.table(
-        [pa.array([index.n_docs], pa.int64()), pa.array([index.avgdl], pa.float64())],
-        names=["n_docs", "avgdl"],
+        [pa.array([index.n_docs], pa.int64())]
+        + [pa.array([v], pa.float64()) for v in (index.avgdl, index.k1, index.b)],
+        names=["n_docs", "avgdl", "k1", "b"],
     )
     write_table(index.postings.sparkSession.createDataFrame(meta), f"{path}/meta")
 
@@ -580,17 +598,22 @@ def from_reference_rows(
 
 def read_index(spark: SparkSession, path: str) -> InvertedIndex:
     """The index write_index laid out at `path`. Each table is read with
-    its known schema (_TABLES), so the only job is the `meta` collect."""
+    its known schema (_TABLES), so the only job is the `meta` collect;
+    tf_norm is derived over the stored postings with meta's avgdl, k1
+    and b."""
     from search_engine_spark.catalog import read_table
 
     t = {name: read_table(spark, f"{path}/{name}", ddl) for name, ddl in _TABLES.items()}
     meta = t["meta"].collect()[0]
+    avgdl, k1, b = float(meta["avgdl"]), float(meta["k1"]), float(meta["b"])
     return InvertedIndex(
-        postings=t["postings"],
+        postings=_postings(t["postings"], avgdl, k1, b),
         term_stats=t["term_stats"],
         doc_stats=t["doc_stats"],
         n_docs=int(meta["n_docs"]),
-        avgdl=float(meta["avgdl"]),
+        avgdl=avgdl,
+        k1=k1,
+        b=b,
     )
 
 
@@ -619,13 +642,7 @@ def prune_index(
     pruned_postings = index.postings.join(
         F.broadcast(keep.select("term")), "term", "left_semi"
     )
-    return InvertedIndex(
-        postings=pruned_postings,
-        term_stats=keep,
-        doc_stats=index.doc_stats,
-        n_docs=index.n_docs,
-        avgdl=index.avgdl,
-    )
+    return replace(index, postings=pruned_postings, term_stats=keep)
 
 
 def index_stats(index: InvertedIndex) -> DataFrame:

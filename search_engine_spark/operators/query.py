@@ -252,8 +252,9 @@ def score_bm25(
     terms: list[str] | None = None,
     mode: str = "or",
 ) -> DataFrame:
-    """BM25 (quirk Q11): Σ_t idf_t · tf_norm — tf_norm precomputed at build,
-    so scoring is one broadcast-joined scan + one hash agg.
+    """BM25 (quirk Q11): Σ_t idf_t · tf_norm — tf_norm derived from each
+    matched posting's own tf and dl (no doc_stats join), so scoring is
+    one broadcast-joined scan + one hash agg.
 
     mode='and' → conjunctive retrieval: docs must match EVERY term of
     their query (posting-list intersection as a post-agg filter against
@@ -751,8 +752,8 @@ def _lm(
 
         score = round(Σ_{t∈q∩d} per_term + |q|·tail, 9)
 
-    `per_term` reads the `_lm_matched` row (tf, p_c) and the columns of
-    the `doc` relations, joined on doc_id before the one aggregate;
+    `per_term` reads the `_lm_matched` row (tf, dl, p_c) and the columns
+    of the `doc` relations, joined on doc_id before the one aggregate;
     `tail` (absent: no length term) reads dl, joined after it on the
     matched-doc-sized sums, and the `doc` columns, which ride through
     the aggregate as group keys (one doc_id, one value each)."""
@@ -829,7 +830,7 @@ def score_jelinek_mercer(
     """
     p_d = F.lit(lam) * (_f64("tf") / _f64("dl"))
     per_term = F.log(F.lit(1.0) + p_d / (F.lit(1.0 - lam) * F.col("p_c")))
-    return topk(_lm(index, query_terms, terms, per_term, doc=(index.doc_stats,)), k)
+    return topk(_lm(index, query_terms, terms, per_term), k)
 
 
 def score_absolute_discount(
@@ -1491,7 +1492,7 @@ def search_after(
 def champion_postings(index: InvertedIndex, m: int = 32) -> InvertedIndex:
     """Champion lists (a.k.a. top-docs / fancy lists, Manning et al.
     IIR §7.1.3): truncate every posting list to its m highest-impact
-    entries, ranked by the precomputed BM25 saturation tf_norm (the
+    entries, ranked by the BM25 saturation tf_norm (the
     doc-dependent factor of the score; bm25_idf is constant within a
     term), ties doc_id ASC.
 

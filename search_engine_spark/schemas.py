@@ -46,7 +46,10 @@ DOCS = StructType(
 # ---- index -----------------------------------------------------------------
 # postings: the exploded, columnar posting relation — the normalized form of
 # the reference's `terms.tf_scores` hstore (migrations/06_create_terms_table.sql,
-# tf-idf-indexer/src/lib.rs:38-64). One row per (term, doc).
+# tf-idf-indexer/src/lib.rs:38-64). One row per (term, doc). The written
+# index adds each posting's document length `dl` (DOC_STATS) and no score:
+# InvertedIndex derives BM25's tf_norm from (tf, dl) on build and on read
+# (index_build._TABLES holds the written schemas).
 POSTINGS = StructType(
     [
         StructField("term", StringType(), False),
@@ -68,7 +71,9 @@ TERM_STATS = StructType(
     ]
 )
 
-# doc_stats: BM25 document length (token count post stop-filter).
+# doc_stats: BM25 document length (token count post stop-filter). The build
+# joins it onto the postings once: BM25, Jelinek-Mercer and BM25F read `dl`
+# from the matched posting, with no doc_stats join.
 DOC_STATS = StructType(
     [
         StructField("doc_id", LongType(), False),

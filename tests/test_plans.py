@@ -781,3 +781,95 @@ def test_absolute_discount_aggregates_du_once(spark, stored_index):
     df = search(idx, spark, _BATCH, scorer="absolute_discount")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count(" AS du#") == 1, plan
+
+
+@pytest.fixture(scope="module")
+def pages300(spark):
+    pages = synth_pages(spark, 300, seed=13).cache()
+    yield pages
+    pages.unpersist()
+
+
+_STORED = ["term", "doc_id", "tf", "dl"]
+
+
+def _rows(df, cols) -> list[tuple]:
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+@pytest.mark.parametrize("params", [{}, {"k1": 1.5, "b": 0.5}])
+def test_written_postings_store_dl_and_read_derives_tf_norm(
+    spark, pages300, tmp_path, params
+):
+    """The written postings hold (term, doc_id, tf, dl) only; meta
+    carries k1 and b, so the read index derives the build's tf_norm
+    bit for bit, for the default and a non-default (k1, b)."""
+    built = build_index_from_pages(pages300, **params)
+    path = str(tmp_path / "idx")
+    write_index(built, path)
+    assert spark.read.parquet(f"{path}/postings").columns == _STORED
+    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
+    assert (meta["k1"], meta["b"]) == (built.k1, built.b)
+    read = read_index(spark, path)
+    assert (read.k1, read.b, read.avgdl) == (built.k1, built.b, built.avgdl)
+    cols = _STORED + ["tf_norm"]
+    assert _rows(read.postings, cols) == _rows(built.postings, cols)
+    built.unpersist()
+
+
+def test_search_reads_dl_not_tf_norm(spark, stored_index):
+    """search over the stored index scans (term, doc_id, tf, dl) with the
+    term filter pushed, derives tf_norm on the matched rows and still
+    runs at most 5 jobs."""
+    import re
+
+    from search_engine_spark.operators.query import search
+
+    _, idx = stored_index
+    plan = _plan(search(idx, spark, _BATCH))
+    schemas = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
+    assert "struct<term:string,doc_id:bigint,tf:int,dl:bigint>" in schemas, schemas
+    assert not any("tf_norm" in s for s in schemas), schemas
+    assert "In(term" in plan, plan[:2000]
+    assert _jobs(spark, search(idx, spark, _BATCH).collect) <= 5
+
+
+@pytest.mark.parametrize("params", [{}, {"k1": 1.5, "b": 0.5}])
+def test_delete_and_prune_hold_on_a_read_index(spark, pages300, tmp_path, params):
+    """delete_docs over a re-read index equals a rebuild without the
+    deleted pages, column for column (tf_norm re-derived with the k1/b
+    meta carried); prune_index keeps the survivors' tf_norm."""
+    from search_engine_spark.operators.index_build import delete_docs, prune_index
+
+    built = build_index_from_pages(pages300, **params)
+    path = str(tmp_path / "idx")
+    write_index(built, path)
+    built.unpersist()
+    read = read_index(spark, path)
+
+    gone = read.doc_stats.select("doc_id").filter(F.col("doc_id") % 5 == 0)
+    deleted = delete_docs(read, gone)
+    fresh = build_index_from_pages(
+        pages300.withColumn("doc_id", F.xxhash64("url"))
+        .join(gone, "doc_id", "left_anti")
+        .drop("doc_id"),
+        **params,
+    )
+    assert 0 < deleted.n_docs == fresh.n_docs < read.n_docs
+    assert deleted.avgdl == pytest.approx(fresh.avgdl, rel=1e-12)
+    assert (deleted.k1, deleted.b) == (fresh.k1, fresh.b) == (read.k1, read.b)
+    for a, b in (
+        (deleted.term_stats, fresh.term_stats),
+        (deleted.doc_stats, fresh.doc_stats),
+        (deleted.postings, fresh.postings),
+    ):
+        assert _rows(a, a.columns) == _rows(b, a.columns)
+    deleted.unpersist()
+    fresh.unpersist()
+
+    pruned = prune_index(read, min_df=2, max_df_ratio=0.5)
+    kept = pruned.term_stats.select("term")
+    cols = _STORED + ["tf_norm"]
+    survivors = _rows(pruned.postings, cols)
+    assert 0 < len(survivors) < read.postings.count()
+    assert survivors == _rows(read.postings.join(kept, "term", "left_semi"), cols)
