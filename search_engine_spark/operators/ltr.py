@@ -9,9 +9,9 @@ three stages are expressed over the same relations the serving path
 already uses, so the feature values a model trains on are EXACTLY the
 values serving computes.
 
-Features (one `_matched` pass + one (query_id, doc_id) hash agg + a
-doc_stats join — the same single-shuffle shape as BM25 scoring; no
-second scan per feature):
+Features (one `_matched` pass + one (query_id, doc_id) hash agg — the
+same single-shuffle shape as BM25 scoring; no second scan per feature,
+and f_dl is the matched postings' own dl):
   f_bm25  — the BM25 score (6dp-rounded, same grid as serving)
   f_match — matched distinct query terms / |q| (coverage)
   f_tf    — Σ raw tf over matched terms
@@ -66,21 +66,18 @@ def ltr_features(
         m,
         F.sum("tf").cast("double").alias("f_tf"),
         F.round(F.max("bm25_idf"), 6).alias("f_idf"),
+        F.max("dl").cast("double").alias("f_dl"),
         round_dp=6,
         score="f_bm25",
     )
-    return (
-        per.join(F.broadcast(n_q), "query_id")
-        .join(index.doc_stats, "doc_id")
-        .select(
-            "query_id",
-            "doc_id",
-            "f_bm25",
-            (F.col("n_matched") / F.col("n_q")).alias("f_match"),
-            "f_tf",
-            "f_idf",
-            F.col("dl").cast("double").alias("f_dl"),
-        )
+    return per.join(F.broadcast(n_q), "query_id").select(
+        "query_id",
+        "doc_id",
+        "f_bm25",
+        (F.col("n_matched") / F.col("n_q")).alias("f_match"),
+        "f_tf",
+        "f_idf",
+        "f_dl",
     )
 
 

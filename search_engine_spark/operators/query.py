@@ -754,11 +754,13 @@ def _lm(
 
     `per_term` reads the `_lm_matched` row (tf, dl, p_c) and the columns
     of the `doc` relations, joined on doc_id before the one aggregate;
-    `tail` (absent: no length term) reads dl, joined after it on the
-    matched-doc-sized sums, and the `doc` columns, which ride through
-    the aggregate as group keys (one doc_id, one value each)."""
+    `tail` (absent: no length term) reads the posting's dl and the `doc`
+    columns, which ride through the aggregate as group keys (one
+    doc_id, one value each)."""
     m = _lm_matched(index, query_terms, terms)
     keys = ["query_id", "doc_id"]
+    if tail is not None:
+        keys.append("dl")
     for d in doc:
         m = m.join(d, "doc_id")
         if tail is not None:
@@ -767,7 +769,7 @@ def _lm(
     score = F.col("s_matched")
     if tail is not None:
         nq = query_terms.groupBy("query_id").agg(F.count(F.lit(1)).alias("nq"))
-        s = s.join(index.doc_stats, "doc_id").join(F.broadcast(nq), "query_id")
+        s = s.join(F.broadcast(nq), "query_id")
         score = score + F.col("nq").cast("double") * tail
     return s.select("query_id", "doc_id", F.round(score, 9).alias("score"))
 
@@ -804,8 +806,8 @@ def score_lm_dirichlet(
     frequency over total tokens) is computed from the isin-pruned
     postings scan — rows only for the query terms, a scalar-sized
     aggregate at any corpus size — and broadcast (`_lm_matched`). dl
-    comes from doc_stats. Ties: score DESC, doc_id ASC (the Q7 rule).
-    Rounded 9dp for oracle comparison.
+    comes from the matched postings. Ties: score DESC, doc_id ASC (the
+    Q7 rule). Rounded 9dp for oracle comparison.
     """
     return topk(_lm(index, query_terms, terms, *_dirichlet(mu)), k)
 

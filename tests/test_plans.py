@@ -873,3 +873,33 @@ def test_delete_and_prune_hold_on_a_read_index(spark, pages300, tmp_path, params
     survivors = _rows(pruned.postings, cols)
     assert 0 < len(survivors) < read.postings.count()
     assert survivors == _rows(read.postings.join(kept, "term", "left_semi"), cols)
+
+
+def test_length_tails_read_dl_from_the_postings(spark, stored_index):
+    """Dirichlet's and absolute discount's length tail, rescore_topk's
+    Dirichlet pass and ltr_features take dl from the matched postings
+    (a group key of the score aggregate): no plan joins doc_stats."""
+    import re
+
+    from search_engine_spark.operators.ltr import ltr_features
+    from search_engine_spark.operators.query import (
+        rescore_topk,
+        score_lm_dirichlet,
+        search,
+    )
+
+    _, idx = stored_index
+    terms = ["hippopotamus", "ladder"]
+    qt = queries_to_terms(spark, {0: "hippopotamus ladder"})
+    frames = {
+        "dirichlet": score_lm_dirichlet(idx, qt, terms=terms),
+        "absolute_discount": search(idx, spark, _BATCH, scorer="absolute_discount"),
+        "rescore_topk": rescore_topk(idx, spark, _BATCH),
+        "ltr_features": ltr_features(idx, qt, terms=terms),
+    }
+    for name, df in frames.items():
+        plan = re.sub(
+            r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString()
+        )
+        assert "Relation [doc_id#,dl#]" not in plan, (name, plan)
+        assert "Relation [term#,doc_id#,tf#,dl#]" in plan, (name, plan)

@@ -118,3 +118,74 @@ def test_compact_state_preserves_index_and_future_drains(spark, tmp_path):
     part_a.write.parquet(f"{inp}/drop_c")
     idx3 = incremental_index_update(spark, f"{inp}/drop_*", state)
     assert _postings_set(idx3) == want  # same pages → same postings
+
+
+def _assert_term_sorted(root: str) -> bool:
+    """Every data file under root is non-decreasing in (term, doc_id),
+    NULL-term zero-token marker rows first (Spark's ascending order;
+    UTF-8 byte order is code-point order). Returns whether any file
+    holds a marker row."""
+    import pyarrow.parquet as pq
+
+    files = [
+        os.path.join(d, f)
+        for d, _, names in os.walk(root)
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    assert files, root
+    markers = False
+    for f in files:
+        t = pq.read_table(f, columns=["term", "doc_id"]).to_pydict()
+        keys = [(w is not None, w or "", d) for w, d in zip(t["term"], t["doc_id"])]
+        assert keys == sorted(keys), f
+        markers = markers or any(w is None for w in t["term"])
+    return markers
+
+
+def _index_rows(index) -> dict:
+    return {
+        "postings": sorted(
+            map(tuple, index.postings.select("term", "doc_id", "tf", "dl").collect())
+        ),
+        "term_stats": sorted(map(tuple, index.term_stats.collect())),
+        "doc_stats": sorted(map(tuple, index.doc_stats.collect())),
+        "n_docs": index.n_docs,
+    }
+
+
+def test_state_files_are_term_sorted_and_index_equals_batch(spark, tmp_path):
+    """Each drop's epoch and the compacted state are written in the
+    written index's postings order, (term, doc_id), and the finalized
+    state still equals a one-shot batch build."""
+    from search_engine_spark.streaming.incremental import compact_state
+
+    inp = str(tmp_path / "pages")
+    state = str(tmp_path / "state")
+    root = f"{state}/postings_raw"
+    stop_only = spark.createDataFrame(
+        [("https://stop.example/", None, b"<p>the of and</p>", "the of and", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    synth = synth_pages(spark, N_A + N_B, seed=29).cache()
+    part_a = synth.limit(N_A).unionByName(stop_only).cache()
+    urls_a = {r["url"] for r in part_a.select("url").collect()}
+    part_b = synth.filter(~synth.url.isin(list(urls_a)))
+    all_pages = synth.unionByName(stop_only)
+
+    part_a.write.parquet(f"{inp}/drop_a")
+    incremental_index_update(spark, f"{inp}/drop_*", state)
+    assert _assert_term_sorted(root), "the stop-word-only page left no marker row"
+    part_b.write.parquet(f"{inp}/drop_b")
+    drained = incremental_index_update(spark, f"{inp}/drop_*", state)
+    _assert_term_sorted(root)
+
+    assert compact_state(spark, state) == 1
+    assert _assert_term_sorted(root)
+    compacted = read_state_index(spark, state)
+
+    batch = build_index(prepare_docs(all_pages, id_method="hash"))
+    want = _index_rows(batch)
+    assert _index_rows(drained) == want
+    assert _index_rows(compacted) == want
+    assert compacted.avgdl == pytest.approx(batch.avgdl, rel=1e-12)
