@@ -759,12 +759,10 @@ def _lm(
     doc_id, one value each)."""
     m = _lm_matched(index, query_terms, terms)
     keys = ["query_id", "doc_id"]
-    if tail is not None:
-        keys.append("dl")
     for d in doc:
         m = m.join(d, "doc_id")
-        if tail is not None:
-            keys += [c for c in d.columns if c != "doc_id"]
+    if tail is not None:
+        keys += ["dl"] + [c for d in doc for c in d.columns if c != "doc_id"]
     s = m.groupBy(*keys).agg(F.sum(per_term).alias("s_matched"))
     score = F.col("s_matched")
     if tail is not None:
